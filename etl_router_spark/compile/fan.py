@@ -2,14 +2,15 @@
 
 Fan-in (``dsl/src/types.rs:807-819``, ``convert.rs:108-151``): >=2 inputs
 are normalized by per-source field mappings then unioned. Fan-out
-(``types.rs:822-831``, ``engine.rs:324-352``): one stream feeds >=2 sinks,
-each with its own field mapping, sharing a single upstream scan.
+(``types.rs:822-831``, ``engine.rs:324-352``) needs no operator: the
+compiler passes the stream through a ``fan_out`` stage, each sink applies
+its own field mapping, and a batch fan-out's upstream is persisted once
+and released after the run (``compile.pipeline``).
 """
 
 from __future__ import annotations
 
 from functools import reduce
-from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 
@@ -46,27 +47,3 @@ def apply_fan_in(
     return reduce(
         lambda a, b: a.unionByName(b, allowMissingColumns=allow_missing_columns), mapped
     )
-
-
-def apply_fan_out(
-    df: DataFrame,
-    sink_mappings: dict[str, list[FieldMapping] | None],
-    writers: dict[str, Callable[[DataFrame], Any]] | None = None,
-    persist: bool = True,
-) -> dict[str, DataFrame]:
-    """One input -> per-sink mapped views; optionally write each.
-
-    Batch: the shared upstream is persisted once so N sink writes reuse
-    one scan/compute (the reference's shared-source optimization,
-    ``optimizer.rs:57-237``); streaming uses a single foreachBatch
-    (see ``etl_router_spark.streaming``).
-    """
-    if len(sink_mappings) < 2:
-        raise ValueError("fan_out requires >= 2 sinks")
-    shared = df.persist() if persist and not df.isStreaming else df
-    views: dict[str, DataFrame] = {}
-    for name, ms in sink_mappings.items():
-        views[name] = apply_map(shared, ms, drop_unmapped=True) if ms else shared
-        if writers and name in writers:
-            writers[name](views[name])
-    return views

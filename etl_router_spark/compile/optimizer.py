@@ -24,7 +24,13 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from etl_router_spark.compile.pipeline import CompiledPipeline, compile_stages
+from etl_router_spark.compile.pipeline import (
+    CompiledPipeline,
+    _compile_stage_sides,
+    _dlq_frame,
+    _SharedPrefix,
+    compile_stages,
+)
 from etl_router_spark.model.conditions import Condition
 from etl_router_spark.model.manifest import Pipeline, StageType
 
@@ -94,6 +100,23 @@ class OptimizedGroup:
     def prefix_stage_ids(self, pipeline_id: str) -> list[str]:
         return self.chains[pipeline_id][1 : 1 + self.prefix_len]
 
+    def member_dlq(self, p: Pipeline,
+                   shared_sides: dict[str, DataFrame]) -> dict[str, DataFrame]:
+        """The shared prefix's raw failing sides (compiled once, with
+        the first member's stage ids) as member ``p``'s DLQ frames. A
+        route-mode stage inside the SHARED prefix owns a DLQ side that
+        belongs to every member (configs are identical by construction)
+        — dropping it silently lost DLQ rows for the whole group (r11
+        fix). Each side is keyed by, and enriched with, p's stage at the
+        same prefix position and p's pipeline name."""
+        rep_prefix = self.prefix_stage_ids(self.pipelines[0].id)
+        p_prefix = self.prefix_stage_ids(p.id)
+        out = {}
+        for rid, side in shared_sides.items():
+            sid = p_prefix[rep_prefix.index(rid)]
+            out[sid] = _dlq_frame(side, p.stages[sid], p.name)
+        return out
+
 
 @dataclass
 class OptimizedDag:
@@ -158,25 +181,6 @@ def optimize(pipelines: list[Pipeline]) -> OptimizedDag:
     return OptimizedDag(groups=list(groups.values()) + singletons)
 
 
-class _SharedPrefix:
-    """Lifecycle handle for one group's persisted prefix frame: every
-    member pipeline holds it, and the LAST member to finish (via
-    ``CompiledPipeline.run`` or an explicit ``release_shared``)
-    unpersists — without this, the CLI ``--all`` loop and any
-    long-lived session that compiles groups repeatedly accrete
-    persisted frames in executor storage for the session's life."""
-
-    def __init__(self, df: DataFrame, members: int):
-        self._df = df
-        self._remaining = members
-
-    def release(self) -> None:
-        self._remaining -= 1
-        if self._remaining <= 0 and self._df is not None:
-            self._df.unpersist()
-            self._df = None
-
-
 def compile_group(
     spark: SparkSession,
     pipelines: list[Pipeline],
@@ -209,13 +213,12 @@ def compile_group(
         rep_chain = g.chains[rep.id]
         shared_ids = rep_chain[: 1 + g.prefix_len]
         shared_outputs: dict[str, DataFrame] = {}
-        _, shared_dlq = compile_stages(
+        _, shared_sides = _compile_stage_sides(
             spark, rep, shared_ids, shared_outputs, streaming,
             source_overrides)
         shared_df = shared_outputs[shared_ids[-1]].persist()
-        handle = _SharedPrefix(shared_df, len(g.pipelines))
+        handle = _SharedPrefix([shared_df], len(g.pipelines))
 
-        rep_prefix = g.prefix_stage_ids(rep.id)
         for p in g.pipelines:
             chain = g.chains[p.id]
             seed_id = chain[g.prefix_len]  # this pipeline's last shared stage id
@@ -224,19 +227,7 @@ def compile_group(
             sink_frames, dlq_frames = compile_stages(
                 spark, p, tail_ids, outputs, streaming, source_overrides
             )
-            if shared_dlq:
-                # a route-mode validate inside the SHARED prefix still
-                # owns a DLQ side; it belongs to every pipeline in the
-                # group (the configs are identical by construction),
-                # keyed by each pipeline's own stage id at the same
-                # prefix position — dropping it silently lost DLQ rows
-                # for the whole group (r11 fix)
-                p_prefix = g.prefix_stage_ids(p.id)
-                mapped = {
-                    p_prefix[rep_prefix.index(rid)]: frame
-                    for rid, frame in shared_dlq.items()
-                }
-                dlq_frames = {**mapped, **dlq_frames}
+            dlq_frames = {**g.member_dlq(p, shared_sides), **dlq_frames}
             out[p.id] = CompiledPipeline(
                 p, sink_frames, dlq_frames, stage_frames=outputs,
                 spark=spark, streaming=streaming, shared_prefix=handle,

@@ -4,9 +4,10 @@ Replaces the reference's runtime routing engine
 (``routing/src/engine.rs:55-104``) with plan construction: stages become
 DataFrame transformations, conditional edges become filters (broadcast
 routing: a record flows down *every* matching edge, engine.rs:79-95),
-fan-in becomes unionByName, fan-out + multiple sinks share one persisted
-upstream (the reference optimizer's shared-prefix reuse,
-``dsl/src/optimizer.rs:57-237``, done here by construction).
+fan-in becomes unionByName, a batch fan-out is persisted until
+``run()`` ends so its sinks share one scan, ``compile_stages`` turns each
+route-mode side into its DLQ frame (``dlq/src/record.rs:96-180``) once,
+and ``write_outputs`` is the one write path for sinks and DLQ frames.
 
 Catalyst then owns what the reference never had: predicate pushdown,
 column pruning, join planning, AQE. Whole-stage codegen replaces the
@@ -23,9 +24,12 @@ fan-out runner can replay the sub-DAG below a fan-out stage inside one
 
 from __future__ import annotations
 
+import threading
 from typing import Any
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from etl_router_spark.compile.conditions import compile_condition
 from etl_router_spark.compile.fan import apply_fan_in
@@ -79,8 +83,11 @@ def _with_watermark(df: DataFrame, wm_cfg: dict[str, Any] | None,
 
 
 def apply_transform_stage(df: DataFrame, stage: Stage, spark: SparkSession,
-                          limits: dict[str, Any] | None = None) -> DataFrame:
+                          limits: dict[str, Any] | None = None
+                          ) -> DataFrame | tuple[DataFrame, DataFrame]:
     """Dispatch one transform stage config to the operator library.
+
+    Route-mode validate and service stages return ``(main, failing)``.
 
     ``limits``: pipeline-level declarative capacity limits
     (``spec.limits`` — max_candidates/max_df/salt_cap/max_postings,
@@ -104,18 +111,11 @@ def apply_transform_stage(df: DataFrame, stage: Stage, spark: SparkSession,
     if tt == "mask":
         return T.apply_mask(df, cfg["rules"])
     if tt == "validate":
-        res = T.apply_validate(df, cfg.get("rules", []), cfg.get("on_invalid", "drop"),
-                               cfg.get("tag_field", "valid"),
-                               schema=cfg.get("schema"),
-                               schema_registry_url=cfg.get("schema_registry_url"),
-                               subject=cfg.get("subject"))
-        # route mode: valid side continues; invalid side is attached for
-        # the caller to wire to the DLQ sink
-        if isinstance(res, tuple):
-            valid, invalid = res
-            valid._etl_dlq_side = invalid  # noqa: SLF001
-            return valid
-        return res
+        return T.apply_validate(df, cfg.get("rules", []), cfg.get("on_invalid", "drop"),
+                                cfg.get("tag_field", "valid"),
+                                schema=cfg.get("schema"),
+                                schema_registry_url=cfg.get("schema_registry_url"),
+                                subject=cfg.get("subject"))
     if tt == "flatmap":
         return T.apply_flatmap(df, cfg["field"], cfg.get("target_field"),
                                keep_parent=bool(cfg.get("keep_parent", False)),
@@ -145,19 +145,13 @@ def apply_transform_stage(df: DataFrame, stage: Stage, spark: SparkSession,
     if tt == "service":
         from etl_router_spark.functions.transform_service import apply_transform_service
 
-        res = apply_transform_service(
+        return apply_transform_service(
             df,
             cfg.get("transform") or cfg["transform_id"],
             cfg["output_schema"],
             config=cfg.get("transform_config"),
             on_error=cfg.get("on_error", "route"),
-            failed_stage=stage.id,
         )
-        if isinstance(res, tuple):
-            main, dlq = res
-            main._etl_dlq_side = dlq  # noqa: SLF001 — same wiring as validate route
-            return main
-        return res
     llm = _apply_llm_transform(df, tt, cfg)
     if llm is not None:
         return llm
@@ -1024,8 +1018,6 @@ def _apply_llm_transform(df: DataFrame, tt: str, cfg: dict[str, Any]) -> DataFra
                               lam=float(cfg.get("lam", 0.7)),
                               add_k=float(cfg.get("add_k", 0.5)))
     if tt == "url_normalize":
-        from pyspark.sql import functions as F
-
         from etl_router_spark.functions.text import normalize_url
 
         return df.withColumn(
@@ -1048,8 +1040,6 @@ def _apply_llm_transform(df: DataFrame, tt: str, cfg: dict[str, Any]) -> DataFra
             seed=int(cfg.get("seed", 0)),
         )
     if tt == "filter_attribution":
-        from pyspark.sql import functions as F
-
         from etl_router_spark.functions.corpus import filter_attribution
 
         # rules: {name: SQL boolean expression (True = keep)}
@@ -1185,6 +1175,24 @@ def delay_pacing_overrides(pipeline: Pipeline) -> dict[str, dict[str, Any]]:
     return overrides
 
 
+def _dlq_frame(side: DataFrame, stage: Stage, pipeline_name: str) -> DataFrame:
+    """A route-mode stage's failing rows as its DLQ frame: code
+    TRANSFORM and the per-row ``__error`` message for a service stage,
+    VALIDATION for a validate stage."""
+    from etl_router_spark.sinks.dlq import to_dlq
+
+    service = stage.transform_type == "service"
+    out = to_dlq(
+        side,
+        error_code="TRANSFORM" if service else "VALIDATION",
+        error_message=F.coalesce(F.col("__error"), F.lit("")) if service else "",
+        failed_stage=stage.id,
+        failed_stage_type=stage.transform_type,
+        pipeline=pipeline_name,
+    )
+    return out.drop("__error") if service else out
+
+
 def compile_stages(
     spark: SparkSession,
     pipeline: Pipeline,
@@ -1198,9 +1206,22 @@ def compile_stages(
     Pre-seeded entries in ``outputs`` act as sub-DAG roots — the
     streaming runner seeds a fan-out stage with the per-epoch batch
     DataFrame and replays only its descendants. Returns
-    ``(sink_frames, dlq_frames)``.
+    ``(sink_frames, dlq_frames)``; every DLQ frame is already enriched
+    (``_dlq_frame``), ready for ``write_outputs``.
     """
-    dlq_frames: dict[str, DataFrame] = {}
+    sink_frames, sides = _compile_stage_sides(
+        spark, pipeline, order, outputs, streaming, source_overrides)
+    return sink_frames, {sid: _dlq_frame(side, pipeline.stages[sid], pipeline.name)
+                         for sid, side in sides.items()}
+
+
+def _compile_stage_sides(spark: SparkSession, pipeline: Pipeline,
+                         order: list[str], outputs: dict[str, DataFrame],
+                         streaming: bool,
+                         source_overrides: dict[str, DataFrame] | None):
+    """``compile_stages`` with the failing sides raw: a shared prefix
+    enriches them per member (``OptimizedGroup.member_dlq``)."""
+    sides: dict[str, DataFrame] = {}
     sink_frames: dict[str, DataFrame] = {}
     # split stage id -> {target stage id: routed frame}
     split_routes: dict[str, dict[str, DataFrame]] = {}
@@ -1242,8 +1263,6 @@ def compile_stages(
         elif stage.stage_type == StageType.FAN_OUT:
             # pass-through node; per-sink mappings applied on outgoing edges
             df = inputs[0] if len(inputs) == 1 else apply_fan_in(inputs, None)
-            if not streaming and not df.isStreaming and len(pipeline.outgoing(sid)) > 1:
-                df = df.persist()  # shared scan across sinks
         elif stage.stage_type == StageType.LOOKUP:
             cfg = stage.config
             dim = overrides.get(f"{sid}.dim") or read_source(spark, cfg["dim"], streaming=False)
@@ -1289,9 +1308,8 @@ def compile_stages(
                 base = inputs[0] if len(inputs) == 1 else apply_fan_in(inputs, None)
                 df = apply_transform_stage(base, stage, spark,
                                            limits=pipeline.limits)
-                side = getattr(df, "_etl_dlq_side", None)
-                if side is not None:
-                    dlq_frames[sid] = side
+                if isinstance(df, tuple):
+                    df, sides[sid] = df
         elif stage.stage_type == StageType.SINK:
             base = inputs[0] if len(inputs) == 1 else apply_fan_in(inputs, None)
             ms = _mappings(stage.config)
@@ -1302,7 +1320,50 @@ def compile_stages(
 
         outputs[sid] = df
 
-    return sink_frames, dlq_frames
+    return sink_frames, sides
+
+
+class _SharedPrefix:
+    """Lifecycle handle for persisted branch-point frames: a batch
+    fan-out's upstream (``compile_pipeline``) or a group's shared
+    prefix (``compile_group``). Every member pipeline holds it, and
+    the LAST member to finish (via ``CompiledPipeline.run`` or an
+    explicit ``release_shared``) unpersists — without this, the CLI
+    ``--all`` loop and any long-lived session that compiles pipelines
+    repeatedly accrete persisted frames in executor storage for the
+    session's life."""
+
+    def __init__(self, frames: list[DataFrame], members: int):
+        self._frames = frames
+        self._remaining = members
+
+    def release(self) -> None:
+        self._remaining -= 1
+        if self._remaining <= 0:
+            for df in self._frames:
+                df.unpersist()
+            self._frames = []
+
+
+# streaming queries share a DLQ directory; two append jobs running at
+# once on one directory clobber each other's _temporary staging
+_DLQ_WRITE_LOCK = threading.Lock()
+
+
+def write_outputs(pipeline: Pipeline, sink_frames: dict[str, DataFrame],
+                  dlq_frames: dict[str, DataFrame],
+                  dlq_sink: dict[str, Any] | None = None) -> None:
+    """Write every sink frame, then every DLQ frame as given to
+    ``dlq_sink or pipeline.dlq`` (DLQ frames are dropped when neither
+    is declared). The one write path of batch ``run()`` and of the
+    streaming ``foreachBatch`` writers."""
+    for sid, df in sink_frames.items():
+        write_sink(df, pipeline.stages[sid].config)
+    dlq_cfg = dlq_sink or pipeline.dlq
+    if dlq_cfg and dlq_frames:
+        with _DLQ_WRITE_LOCK:
+            for df in dlq_frames.values():
+                write_sink(df, dlq_cfg)
 
 
 class CompiledPipeline:
@@ -1313,46 +1374,33 @@ class CompiledPipeline:
                  stage_frames: dict[str, DataFrame] | None = None,
                  spark: SparkSession | None = None,
                  streaming: bool = False,
-                 shared_prefix=None):
+                 shared_prefix: _SharedPrefix | None = None):
         self.pipeline = pipeline
         self.sink_frames = sink_frames
         self.dlq_frames = dlq_frames
         self.stage_frames = stage_frames or {}
         self.spark = spark
         self.streaming = streaming
-        # set by compile_group: the group's persisted-prefix lifecycle
-        # handle; the last member to run (or release) unpersists
+        # the persisted branch points' lifecycle handle (_SharedPrefix);
+        # the last member to run (or release) unpersists
         self.shared_prefix = shared_prefix
 
     def run(self) -> None:
-        """Write every sink (batch mode), plus DLQ side-outputs when the
-        pipeline declares a dlq sink."""
+        """Write every sink (batch mode), plus the DLQ frames when the
+        pipeline declares a dlq sink, then release persisted frames."""
         try:
-            for sink_id, df in self.sink_frames.items():
-                write_sink(df, self.pipeline.stages[sink_id].config)
-            if self.pipeline.dlq:
-                from etl_router_spark.sinks.dlq import to_dlq
-
-                for sid, df in self.dlq_frames.items():
-                    stage = self.pipeline.stages[sid]
-                    write_sink(
-                        to_dlq(df, failed_stage=sid,
-                               failed_stage_type=stage.transform_type
-                               or "transform",
-                               pipeline=self.pipeline.name),
-                        self.pipeline.dlq,
-                    )
+            write_outputs(self.pipeline, self.sink_frames, self.dlq_frames)
         finally:
             self.release_shared()
 
     def release_shared(self) -> None:
-        """Drop this pipeline's claim on the group's persisted shared
-        prefix (compile_group); the last release unpersists it.
-        Idempotent, and a no-op for singly-compiled pipelines. Callers
-        that read ``sink_frames`` without ever ``run()``-ing (tests,
-        oracle gates) should release every group member when done —
-        the frames stay valid, they just recompute instead of reading
-        the persisted prefix."""
+        """Drop this pipeline's claim on its persisted branch points
+        (a fan-out's upstream, a group's shared prefix); the last
+        release unpersists. Idempotent, and a no-op when nothing was
+        persisted. Callers that read ``sink_frames`` without ever
+        ``run()``-ing (tests, oracle gates) should release every group
+        member when done — the frames stay valid, they just recompute
+        instead of reading the persisted frame."""
         if self.shared_prefix is not None:
             handle, self.shared_prefix = self.shared_prefix, None
             handle.release()
@@ -1375,5 +1423,15 @@ def compile_pipeline(
     sink_frames, dlq_frames = compile_stages(
         spark, pipeline, order, outputs, streaming, source_overrides
     )
+    # a batch fan-out's branches share one persisted scan until run()
+    # ends; a frame the caller already cached stays the caller's
+    persisted = [] if streaming else [
+        outputs[sid].persist() for sid in order
+        if pipeline.stages[sid].stage_type == StageType.FAN_OUT
+        and len(pipeline.outgoing(sid)) > 1 and not outputs[sid].isStreaming
+        and outputs[sid].storageLevel == StorageLevel.NONE
+    ]
     return CompiledPipeline(pipeline, sink_frames, dlq_frames,
-                            stage_frames=outputs, spark=spark, streaming=streaming)
+                            stage_frames=outputs, spark=spark, streaming=streaming,
+                            shared_prefix=(_SharedPrefix(persisted, 1)
+                                           if persisted else None))

@@ -275,9 +275,10 @@ def bm25_topk(
     # (id, term) group). The per-term document frequency then derives
     # from the tf table itself — one row per containing doc, so
     # count(*) per term IS countDistinct(id) over the token stream —
-    # which removes the r15 shape's duplicated tokenize+explode map
-    # pass outright: the dft branch re-reads the tf aggregation
-    # (runtime ReusedExchange) instead of re-scanning the corpus.
+    # which removes the r15 shape's vocabulary-wide distinct-doc
+    # recount: the dft branch aggregates the hits-sized tf table
+    # instead of the whole token stream (its own filtered map pass, no
+    # persist — see below).
     terms = terms.join(F.broadcast(qterms.select("term").distinct()), "term")
     tf = terms.groupBy("id", "term").agg(
         F.expr("count(*) AS tf"),

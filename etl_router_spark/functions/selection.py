@@ -282,8 +282,11 @@ def _u_micro_sql(id_col: str, salt: str) -> str:
     """u = (h60(salt|id) % 1e6 + 0.5)/1e6 in (0, 1) as SQL text —
     the shared uniform draw of the Gumbel and exponential-clock keys
     (D-suffixed literals parse to the same doubles the former
-    F.lit(python float) form produced)."""
-    h = h60_sql(f"concat('{salt}|', CAST({id_col} AS STRING))")
+    F.lit(python float) form produced). The salt is spliced into a
+    string literal with ``\\`` and ``'`` escaped, so any salt draws
+    exactly as the Column form ``h60(concat(lit(salt), '|', id))``."""
+    lit = str(salt).replace("\\", "\\\\").replace("'", "\\'")
+    h = h60_sql(f"concat('{lit}|', CAST({id_col} AS STRING))")
     return f"(CAST(pmod({h}, 1000000) AS DOUBLE) + 0.5D) / 1000000.0D"
 
 

@@ -26,10 +26,9 @@ batching).
 
 At 100 TB: the stage is embarrassingly parallel (no shuffle, no state);
 cost is the Arrow copy + user code, both proportional to partition size.
-The DLQ side-output re-filters the mapInPandas result — under one action
-Spark recomputes the narrow stage per consumer, so callers writing BOTH
-sides should persist the raw frame (the fan-out optimizer does this for
-multi-sink pipelines already).
+The error side re-filters the mapInPandas result, and each write is its
+own action, so a pipeline writing both sides runs the user code once per
+side (nothing persists the raw frame).
 """
 
 from __future__ import annotations
@@ -93,7 +92,6 @@ def apply_transform_service(
     output_schema: str,
     config: dict[str, str] | None = None,
     on_error: str = "route",
-    failed_stage: str = "",
     ship_by_value: bool = True,
 ) -> DataFrame | tuple[DataFrame, DataFrame]:
     """Run a user batch transform with reference routing semantics.
@@ -103,8 +101,9 @@ def apply_transform_service(
     requirement via the proto Record shape). ``on_error``:
 
     - ``route`` (default; DlqPolicy semantics): returns
-      ``(main_df, dlq_df)`` — ERROR rows DLQ-enriched (code TRANSFORM,
-      per-record message from ``__error``).
+      ``(main_df, errors_df)`` — the ERROR rows with their per-record
+      message in ``__error``; the pipeline compiler enriches them into
+      the stage's DLQ frame (code TRANSFORM, that message).
     - ``drop``: ERROR rows vanish with the FILTERED ones.
     - ``error``: raise if any record errored (batch only — eager check).
 
@@ -162,20 +161,7 @@ def apply_transform_service(
         return main
     if on_error != "route":
         raise ValueError(f"unknown on_error mode: {on_error!r}")
-    from etl_router_spark.sinks.dlq import to_dlq
-
-    errs = raw.filter(F.col("__status") == "ERROR")
-    dlq = (
-        to_dlq(
-            errs,
-            error_code="TRANSFORM",
-            failed_stage=failed_stage,
-            failed_stage_type="service",
-        )
-        .withColumn("_dlq_error_message", F.coalesce(F.col("__error"), F.lit("")))
-        .drop(*_RESERVED)
-    )
-    return main, dlq
+    return main, raw.filter(F.col("__status") == "ERROR").drop("__status")
 
 
 # ---------------------------------------------------------------------------

@@ -1918,33 +1918,45 @@ def t12_aggregate_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame
 )
 def fanout_mapped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """fan-out (types.rs:822-831, engine.rs:324-352): one stream, two
-    sinks, each with its own authoritative field mapping. The shared
-    upstream is persisted once so both sink views reuse one
-    scan/compute (the reference's shared-source optimization); the
-    gate unions the views with a sink tag so both mappings are
-    value-checked."""
-    from etl_router_spark.compile.fan import apply_fan_out
+    sinks, each with its own authoritative field mapping, compiled
+    from a manifest. The fan_out stage's upstream is persisted once so
+    both sink writes reuse one scan/compute (the reference's
+    shared-source optimization); the gate unions the sink frames with
+    a sink tag so both mappings are value-checked."""
+    def sink(name: str, mappings: list[dict]) -> dict:
+        return {"id": name, "type": "sink",
+                "config": {"sink_type": "file", "format": "parquet",
+                           "path": f"/tmp/etl_out/gate_fanout_{name}",
+                           "mappings": mappings}}
 
-    ev = _t(spark, sf_dir, "events")
-    views = apply_fan_out(
-        ev,
-        {
-            "metrics": [
-                M(target="user_id", source="user_id"),
-                M(target="event_type", source="event_type"),
-                M(target="value", source="value"),
-            ],
-            "audit": [
-                M(target="user_id", source="user_id"),
-                M(target="event_type", expression="'evt:' || event_type"),
-                M(target="value", expression="CAST(NULL AS DOUBLE)"),
-            ],
-        },
-    )
+    doc = {"apiVersion": "etl.dev/v1", "kind": "Pipeline",
+           "metadata": {"name": "gate-fanout-mapped"},
+           "spec": {"stages": [
+               {"id": "src", "type": "source",
+                "config": {"source_type": "file", "format": "parquet",
+                           "path": f"{sf_dir}/events.parquet"}},
+               {"id": "fan", "type": "fan_out", "config": {}},
+               sink("metrics", [
+                   {"target": "user_id", "source": "user_id"},
+                   {"target": "event_type", "source": "event_type"},
+                   {"target": "value", "source": "value"}]),
+               sink("audit", [
+                   {"target": "user_id", "source": "user_id"},
+                   {"target": "event_type",
+                    "expression": "'evt:' || event_type"},
+                   {"target": "value",
+                    "expression": "CAST(NULL AS DOUBLE)"}])],
+               "edges": [{"from": "src", "to": "fan"},
+                         {"from": "fan", "to": "metrics"},
+                         {"from": "fan", "to": "audit"}]}}
+    compiled = _compile_manifest(spark, doc)
     tagged = [
-        views[name].select(F.lit(name).alias("sink"), "user_id", "event_type", "value")
+        compiled.sink_frames[name].select(
+            F.lit(name).alias("sink"), "user_id", "event_type", "value")
         for name in ("metrics", "audit")
     ]
+    # read without run(): drop the fan-out's persist claim here
+    compiled.release_shared()
     return tagged[0].unionByName(tagged[1])
 
 
@@ -3930,6 +3942,12 @@ _TOUCHED_BOOST: tuple[str, ...] = (
     "select_dsir_model",
     "text_unigram_logprob",
     "text_bigram_logprob",
+    # (c) Gates whose compile path moved with the one sink/DLQ write
+    # path: fanout_mapped now compiles a fan_out manifest, and the
+    # shared-prefix DLQ frames are enriched at compile and re-stamped
+    # per member (verified locally against the oracle at sf0.01).
+    "fanout_mapped",
+    "pipeline_shared_prefix_dlq",
 )
 
 # Gates REGISTERED this round: rank them after every already-known

@@ -13,6 +13,32 @@ import os
 
 from pyspark.sql import SparkSession
 
+# runtime-settable SQL confs: set by the builder on a new session and
+# re-applied on a reused one, from this one dict so the two cannot drift
+_RUNTIME_CONFS: dict[str, str] = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # default-false for compat only: with it off, AQE may not touch
+    # the output partitioning of a cached subtree, so every persist()
+    # in the engine (DSIR's pinned bucket counts, the minhash index,
+    # the connected-components and pagerank loop frames, shared-scan
+    # fan-out) keeps shuffle.partitions-many reduce tasks no matter
+    # how few bytes it holds. Letting AQE size cached output from
+    # measured bytes is the same adaptivity the uncached paths
+    # already get (interleaved A/B on select_dsir_topk: ~x0.6)
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # testdata events.parquet carries TIMESTAMP(NANOS); read as long
+    # and convert in-plan (see etl_router_spark.io.load_table)
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # ungrouped MIN/MAX/COUNT answered from parquet footer stats
+    # instead of scanning row data (exact — footer stats are)
+    "spark.sql.parquet.aggregatePushdown": "true",
+}
+
 
 def get_spark(
     app_name: str = "etl_router_spark",
@@ -47,51 +73,20 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # default-false for compat only: with it off, AQE may not touch
-        # the output partitioning of a cached subtree, so every persist()
-        # in the engine (DSIR's pinned bucket counts, the minhash index,
-        # the connected-components and pagerank loop frames, shared-scan
-        # fan-out) keeps shuffle.partitions-many reduce tasks no matter
-        # how few bytes it holds. Letting AQE size cached output from
-        # measured bytes is the same adaptivity the uncached paths
-        # already get (interleaved A/B on select_dsir_topk: ~x0.6)
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
-        # testdata events.parquet carries TIMESTAMP(NANOS); read as long
-        # and convert in-plan (see etl_router_spark.io.load_table)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # ungrouped MIN/MAX/COUNT answered from parquet footer stats
-        # instead of scanning row data (exact — footer stats are)
-        .config("spark.sql.parquet.aggregatePushdown", "true")
     )
-    for k, v in (extra_conf or {}).items():
+    confs = {**_RUNTIME_CONFS, **(extra_conf or {})}
+    for k, v in confs.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     # getOrCreate() silently reuses a live session WITHOUT the builder
     # confs above; re-apply the runtime-settable SQLConfs so a reused
     # session still gets engine semantics (r15 ADVICE). Static confs
     # (master, memory, UI) can't change on a live session — skipped.
-    for k, v in {
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
-        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.parquet.aggregatePushdown": "true",
-        **(extra_conf or {}),
-    }.items():
+    for k, v in confs.items():
         try:
             spark.conf.set(k, v)
         except Exception:

@@ -16,7 +16,7 @@ inside the plan).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # record.rs:8-19 error codes
@@ -44,14 +44,17 @@ def to_dlq(
     df: DataFrame,
     *,
     error_code: str = "VALIDATION",
-    error_message: str = "",
+    error_message: str | Column = "",
     failed_stage: str = "",
     failed_stage_type: str = "transform",
     pipeline: str = "",
     source: str = "",
     record_type_col: str | None = "record_type",
 ) -> DataFrame:
-    """Enrich a failing side-output with the reference's DLQ metadata."""
+    """Enrich a failing side-output with the reference's DLQ metadata.
+
+    ``error_message`` is one literal for every row, or a Column for a
+    per-row message (a service stage's ``__error``)."""
     if error_code not in ERROR_CODES:
         raise ValueError(f"unknown DLQ error code: {error_code!r}")
     now = F.current_timestamp()

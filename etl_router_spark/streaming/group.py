@@ -41,12 +41,17 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from etl_router_spark.compile.optimizer import OptimizedGroup, optimize
-from etl_router_spark.compile.pipeline import compile_pipeline, compile_stages
+from etl_router_spark.compile.pipeline import (
+    _compile_stage_sides,
+    compile_pipeline,
+    compile_stages,
+    write_outputs,
+)
 from etl_router_spark.model.manifest import Pipeline
-from etl_router_spark.sinks.registry import write_sink
 from etl_router_spark.streaming.runner import (
     DEFAULT_TRIGGER,
     StreamingExecution,
+    per_epoch,
     run_streaming,
 )
 
@@ -55,73 +60,35 @@ def _make_group_writer(
     spark: SparkSession,
     g: OptimizedGroup,
     dlq_sink: dict[str, Any] | None,
-    exactly_once: bool,
-    marker_dir: str,
+    marker_dir: str | None,
 ):
     """The per-epoch replay: shared prefix once, then every tail."""
     rep = g.pipelines[0]
     rep_chain = g.chains[rep.id]
     src_id = rep_chain[0]
     prefix_ids = rep_chain[1: 1 + g.prefix_len]
-    rep_prefix = g.prefix_stage_ids(rep.id)
 
-    def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        if exactly_once:
-            from etl_router_spark.streaming.exactly_once import (
-                epoch_committed,
-                mark_epoch,
-            )
-
-            if epoch_committed(marker_dir, epoch_id):
-                return
-        batch_df.persist()
+    def write(batch_df: DataFrame) -> None:
+        shared_outputs: dict[str, DataFrame] = {src_id: batch_df}
+        _, shared_sides = _compile_stage_sides(
+            spark, rep, prefix_ids, shared_outputs, False, None)
+        shared_df = shared_outputs[prefix_ids[-1] if prefix_ids else src_id]
+        if prefix_ids:
+            shared_df.persist()
         try:
-            shared_outputs: dict[str, DataFrame] = {src_id: batch_df}
-            _, shared_dlq = compile_stages(
-                spark, rep, prefix_ids, shared_outputs, streaming=False)
-            shared_df = shared_outputs[
-                prefix_ids[-1] if prefix_ids else src_id]
-            if prefix_ids:
-                shared_df.persist()
-            try:
-                for p in g.pipelines:
-                    chain = g.chains[p.id]
-                    seed_id = chain[g.prefix_len]
-                    outputs = {seed_id: shared_df}
-                    tail_ids = chain[1 + g.prefix_len:]
-                    sink_frames, dlq_frames = compile_stages(
-                        spark, p, tail_ids, outputs, streaming=False)
-                    if shared_dlq:
-                        p_prefix = g.prefix_stage_ids(p.id)
-                        mapped = {
-                            p_prefix[rep_prefix.index(rid)]: frame
-                            for rid, frame in shared_dlq.items()
-                        }
-                        dlq_frames = {**mapped, **dlq_frames}
-                    for sid, df in sink_frames.items():
-                        write_sink(df, p.stages[sid].config)
-                    dlq_cfg = dlq_sink or p.dlq
-                    if dlq_cfg:
-                        from etl_router_spark.sinks.dlq import to_dlq
-
-                        for sid, ddf in dlq_frames.items():
-                            stage = p.stages[sid]
-                            write_sink(
-                                to_dlq(ddf, failed_stage=sid,
-                                       failed_stage_type=stage.transform_type
-                                       or "transform",
-                                       pipeline=p.name),
-                                dlq_cfg,
-                            )
-            finally:
-                if prefix_ids:
-                    shared_df.unpersist()
+            for p in g.pipelines:
+                chain = g.chains[p.id]
+                sink_frames, dlq_frames = compile_stages(
+                    spark, p, chain[1 + g.prefix_len:],
+                    {chain[g.prefix_len]: shared_df}, streaming=False)
+                write_outputs(p, sink_frames,
+                              {**g.member_dlq(p, shared_sides), **dlq_frames},
+                              dlq_sink)
         finally:
-            batch_df.unpersist()
-        if exactly_once:
-            mark_epoch(marker_dir, epoch_id)
+            if prefix_ids:
+                shared_df.unpersist()
 
-    return write_epoch
+    return per_epoch(write, marker_dir)
 
 
 # Transform types whose STREAMING compile keeps state across epochs
@@ -230,8 +197,8 @@ def run_streaming_group(
         compile_stages(spark, rep, [src_id], src_outputs, streaming=True,
                        source_overrides=source_overrides)
         writer = _make_group_writer(
-            spark, g, dlq_sink, exactly_once,
-            f"{checkpoint_root}/group_{gi}_markers")
+            spark, g, dlq_sink,
+            f"{checkpoint_root}/group_{gi}_markers" if exactly_once else None)
         q = (
             src_outputs[src_id].writeStream
             .foreachBatch(writer)

@@ -14,7 +14,8 @@ Maps the reference's streaming control plane onto Structured Streaming:
   sink — the source is read once per epoch, exactly like the
   reference's shared-source optimization;
 - DLQ side-outputs (``dlq/src/record.rs:96-180``) -> separate streams
-  enriched with ``_dlq_*`` columns;
+  of the DLQ frames the compiler already enriched with ``_dlq_*``
+  columns;
 - backpressure credits (``buffer/src/backpressure.rs``) -> source-side
   pacing (maxFilesPerTrigger / maxOffsetsPerTrigger), configured on the
   source, not here — Spark's pull model needs no credit protocol.
@@ -27,14 +28,19 @@ sinks or dedupe on ``idempotency_key`` downstream
 
 from __future__ import annotations
 
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
-from etl_router_spark.compile.pipeline import CompiledPipeline, compile_stages
+from etl_router_spark.compile.pipeline import (
+    CompiledPipeline,
+    compile_stages,
+    write_outputs,
+)
 from etl_router_spark.model.manifest import Pipeline, StageType
 from etl_router_spark.sinks.registry import write_sink
+from etl_router_spark.streaming.exactly_once import epoch_committed, mark_epoch
 
 DEFAULT_TRIGGER: dict[str, Any] = {"availableNow": True}
 
@@ -96,24 +102,14 @@ class StreamingExecution:
         return any(q.isActive for q in self.queries.values())
 
 
-def _fanout_groups(pipeline: Pipeline) -> dict[str, list[str]]:
-    """fan-out stage id -> sink ids reachable from it."""
-    groups: dict[str, list[str]] = {}
-    for stage in pipeline.stages.values():
-        if stage.stage_type != StageType.FAN_OUT:
-            continue
-        reach: set[str] = set()
-        frontier = [e.to_stage for e in pipeline.outgoing(stage.id)]
-        while frontier:
-            sid = frontier.pop()
-            if sid in reach:
-                continue
-            reach.add(sid)
-            frontier.extend(e.to_stage for e in pipeline.outgoing(sid))
-        sinks = [s for s in reach if pipeline.stages[s].stage_type == StageType.SINK]
-        if len(sinks) >= 2:
-            groups[stage.id] = sorted(sinks)
-    return groups
+def _fanout_groups(pipeline: Pipeline) -> list[str]:
+    """fan-out stage ids with >= 2 sinks below them."""
+    return [
+        fid for fid, stage in pipeline.stages.items()
+        if stage.stage_type == StageType.FAN_OUT
+        and sum(pipeline.stages[s].stage_type == StageType.SINK
+                for s in _descendant_order(pipeline, fid)) >= 2
+    ]
 
 
 def _descendant_order(pipeline: Pipeline, root: str) -> list[str]:
@@ -174,6 +170,27 @@ def _start_sink_query(
     return writer.foreachBatch(write_epoch).outputMode(mode).start()
 
 
+def per_epoch(write: Callable[[DataFrame], None],
+              marker_dir: str | None = None) -> Callable[[DataFrame, int], None]:
+    """The ``foreachBatch`` body of the fan-out, fan-in and fused-group
+    writers: skip an epoch whose marker exists, persist the batch,
+    ``write`` it, unpersist, mark. ``marker_dir=None``: no marker
+    (at-least-once); see ``streaming.exactly_once``."""
+
+    def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
+        if marker_dir and epoch_committed(marker_dir, epoch_id):
+            return
+        batch_df.persist()
+        try:
+            write(batch_df)
+        finally:
+            batch_df.unpersist()
+        if marker_dir:
+            mark_epoch(marker_dir, epoch_id)
+
+    return write_epoch
+
+
 def _derive_trigger(pipeline: Pipeline) -> dict[str, Any] | None:
     """``emit: periodic`` (types.rs:634-641 AggregateEmit::Periodic) is
     a timer-driven emit of current aggregate state: map it to a
@@ -215,6 +232,11 @@ def run_streaming(
     all sinks (``streaming.exactly_once``); a replayed epoch that
     already carries a marker is skipped — CommitMarker semantics
     (``proto/sink.proto:67-70``).
+
+    A DLQ gets Spark's native file sink only when one query is its sole
+    writer: the sink's ``_spark_metadata`` log admits one query and
+    hides files it did not write. Otherwise every DLQ frame is written
+    per epoch through ``write_outputs`` (at-least-once on replay).
     """
     if not compiled.streaming:
         raise ValueError("pipeline was compiled with streaming=False")
@@ -239,6 +261,7 @@ def run_streaming(
             break
     queries: dict[str, StreamingQuery] = {}
     handled: set[str] = set()
+    late_route = False  # a fan-in writer sends late rows to the DLQ
 
     # fan-in stages with a declared late_policy get the reference's
     # per-source watermark semantics (watermark.rs:84-147): each epoch
@@ -285,49 +308,38 @@ def run_streaming(
                 tracker.set_idle_timeout(sid_, parse_duration(idle))
 
         order = _descendant_order(pipeline, fid)
-        sink_ids = [
-            s for s in order if pipeline.stages[s].stage_type == StageType.SINK
-        ]
-        dlq_cfg_fanin = dlq_sink or pipeline.dlq
+        late_route = late_route or policy == "route"
 
-        def make_fanin_writer(fid, order, sink_ids, tracker, ts_field, policy, dlq_cfg_fanin):
-            def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-                batch_df.persist()
-                try:
-                    tracker.observe_batch(batch_df, "__source_id", ts_field)
-                    on_time, late = tracker.split_late(batch_df, ts_field)
-                    if policy == "tag":
-                        import pyspark.sql.functions as F
+        def make_fanin_writer(fid, order, tracker, ts_field, policy):
+            def write(batch_df: DataFrame) -> None:
+                tracker.observe_batch(batch_df, "__source_id", ts_field)
+                on_time, late = tracker.split_late(batch_df, ts_field)
+                if policy == "tag":
+                    import pyspark.sql.functions as F
 
-                        combined = tracker.combined_watermark()
-                        on_time = batch_df.withColumn(
-                            "late",
-                            F.lit(False) if combined == float("-inf")
-                            else F.col(ts_field).cast("double")
-                            < F.lit(combined - tracker.allowed_lateness),
-                        )
-                    seed = on_time.drop("__source_id")
-                    sinks2, _ = compile_stages(
-                        compiled.spark, pipeline, order, {fid: seed}, streaming=False
+                    combined = tracker.combined_watermark()
+                    on_time = batch_df.withColumn(
+                        "late",
+                        F.lit(False) if combined == float("-inf")
+                        else F.col(ts_field).cast("double")
+                        < F.lit(combined - tracker.allowed_lateness),
                     )
-                    for s in sink_ids:
-                        write_sink(sinks2[s], pipeline.stages[s].config)
-                    if policy == "route" and dlq_cfg_fanin is not None:
-                        from etl_router_spark.sinks.dlq import to_dlq
+                sinks, dlqs = compile_stages(
+                    compiled.spark, pipeline, order,
+                    {fid: on_time.drop("__source_id")}, streaming=False
+                )
+                if policy == "route":
+                    from etl_router_spark.sinks.dlq import to_dlq
 
-                        late_rows = late.drop("__source_id")
-                        write_sink(
-                            to_dlq(late_rows, failed_stage=fid, pipeline=pipeline.name),
-                            dlq_cfg_fanin,
-                        )
-                finally:
-                    batch_df.unpersist()
+                    dlqs[fid] = to_dlq(late.drop("__source_id"),
+                                       failed_stage=fid, pipeline=pipeline.name)
+                write_outputs(pipeline, sinks, dlqs, dlq_sink)
 
-            return write_epoch
+            return per_epoch(write)
 
         q = (
             tagged.writeStream.foreachBatch(
-                make_fanin_writer(fid, order, sink_ids, tracker, ts_field, policy, dlq_cfg_fanin)
+                make_fanin_writer(fid, order, tracker, ts_field, policy)
             )
             .option("checkpointLocation", f"{checkpoint_root}/fanin_{fid}")
             .trigger(**trig)
@@ -335,57 +347,25 @@ def run_streaming(
             .start()
         )
         queries[f"fanin:{fid}"] = q
-        handled.update(sink_ids)
+        handled.update(order)
 
     if shared_fanout:
-        for fid, sink_ids in _fanout_groups(pipeline).items():
+        for fid in _fanout_groups(pipeline):
             order = _descendant_order(pipeline, fid)
-            src_df = compiled.stage_frames[fid]
-
-            def make_writer(fid: str, order: list[str], sink_ids: list[str]):
-                marker_dir = f"{checkpoint_root}/markers_{fid}"
-
-                def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-                    if exactly_once:
-                        from etl_router_spark.streaming.exactly_once import (
-                            epoch_committed,
-                            mark_epoch,
-                        )
-
-                        if epoch_committed(marker_dir, epoch_id):
-                            return
-                    batch_df.persist()
-                    try:
-                        sinks, dlqs = compile_stages(
-                            spark, pipeline, order, {fid: batch_df}, streaming=False
-                        )
-                        for sid in sink_ids:
-                            write_sink(sinks[sid], pipeline.stages[sid].config)
-                        dlq_cfg = dlq_sink or pipeline.dlq
-                        if dlq_cfg:
-                            from etl_router_spark.sinks.dlq import to_dlq
-
-                            for sid, ddf in dlqs.items():
-                                write_sink(
-                                    to_dlq(ddf, failed_stage=sid, pipeline=pipeline.name),
-                                    dlq_cfg,
-                                )
-                    finally:
-                        batch_df.unpersist()
-                    if exactly_once:
-                        mark_epoch(marker_dir, epoch_id)
-
-                return write_epoch
-
+            write = per_epoch(
+                lambda b, fid=fid, order=order: write_outputs(
+                    pipeline, *compile_stages(spark, pipeline, order, {fid: b}),
+                    dlq_sink),
+                f"{checkpoint_root}/markers_{fid}" if exactly_once else None)
             q = (
-                src_df.writeStream.foreachBatch(make_writer(fid, order, sink_ids))
+                compiled.stage_frames[fid].writeStream.foreachBatch(write)
                 .option("checkpointLocation", f"{checkpoint_root}/fanout_{fid}")
                 .trigger(**trig)
                 .queryName(f"{pipeline.name}.fanout.{fid}")
                 .start()
             )
             queries[f"fanout:{fid}"] = q
-            handled.update(sink_ids)
+            handled.update(order)
 
     for sid, df in compiled.sink_frames.items():
         if sid in handled:
@@ -397,16 +377,25 @@ def run_streaming(
             name=f"{pipeline.name}_{sid}".replace("-", "_"),
         )
 
+    # the writers above write the DLQ frames of the stages they replay;
+    # the rest stream on their own (see the docstring for which sink)
     dlq_cfg = dlq_sink or pipeline.dlq
     if dlq_cfg:
-        from etl_router_spark.sinks.dlq import to_dlq
-
-        for sid, df in compiled.dlq_frames.items():
-            if df.isStreaming:
-                queries[f"dlq:{sid}"] = _start_sink_query(
-                    to_dlq(df, failed_stage=sid, pipeline=pipeline.name),
-                    dlq_cfg, "append", f"{checkpoint_root}/dlq_{sid}", trig,
-                    name=f"{pipeline.name}_dlq_{sid}".replace("-", "_"),
-                )
+        own = {sid: df for sid, df in compiled.dlq_frames.items()
+               if sid not in handled and df.isStreaming}
+        sole = len(own) == 1 and not late_route and not (
+            handled & compiled.dlq_frames.keys())
+        for sid, df in own.items():
+            ckpt = f"{checkpoint_root}/dlq_{sid}"
+            name = f"{pipeline.name}_dlq_{sid}".replace("-", "_")
+            queries[f"dlq:{sid}"] = (
+                _start_sink_query(df, dlq_cfg, "append", ckpt, trig, name=name)
+                if sole else
+                df.writeStream.foreachBatch(
+                    lambda b, _, sid=sid: write_outputs(
+                        pipeline, {}, {sid: b}, dlq_sink))
+                .option("checkpointLocation", ckpt).trigger(**trig)
+                .queryName(name).start()
+            )
 
     return StreamingExecution(queries)

@@ -60,9 +60,7 @@ def test_dlq_redrive_increments_retry_count(spark, events, tmp_path):
 
     # every failing row deterministically fails again -> retry_count = 1
     again = redrive(spark, pipeline, dlq1)
-    dlq2 = again.dlq_frames["checked"]
-    from etl_router_spark.sinks.dlq import to_dlq as enrich
-    dlq2 = enrich(dlq2, failed_stage="checked", pipeline=pipeline.name)
+    dlq2 = again.dlq_frames["checked"]  # enriched by the compiler
     rows = dlq2.select("_dlq_retry_count").distinct().collect()
     assert [r._dlq_retry_count for r in rows] == [1]
     assert dlq2.count() == dlq1.count()

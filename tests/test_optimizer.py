@@ -123,6 +123,69 @@ def test_shared_prefix_unpersists_after_group_runs(spark, sf_dir, tmp_path):
     solo.release_shared()
 
 
+def _fan_out_pipeline(sf_dir, tmp_path):
+    def sink(sid):
+        return {"id": sid, "type": "sink",
+                "config": {"sink_type": "file", "format": "parquet",
+                           "path": str(tmp_path / sid)}}
+
+    return parse_manifest_dict({
+        "apiVersion": "etl.dev/v1", "kind": "Pipeline",
+        "metadata": {"name": "fan"},
+        "spec": {"stages": [
+            {"id": "src", "type": "source",
+             "config": {"source_type": "file", "format": "parquet",
+                        "path": f"{sf_dir}/events.parquet"}},
+            {"id": "fan", "type": "fan_out", "config": {}},
+            sink("a"), sink("b")],
+            "edges": [{"from": "src", "to": "fan"},
+                      {"from": "fan", "to": "a"},
+                      {"from": "fan", "to": "b"}]}})
+
+
+def test_fan_out_persist_released_after_run(spark, sf_dir, tmp_path):
+    """A batch fan_out stage's persisted upstream (one scan for all its
+    sinks) is released by run() through the same handle the group's
+    shared prefix uses — before, every fan-out run left one cached RDD
+    behind for the session's life."""
+    from etl_router_spark.compile.pipeline import compile_pipeline
+
+    p = _fan_out_pipeline(sf_dir, tmp_path)
+    jsc = spark.sparkContext._jsc  # noqa: SLF001
+    before = jsc.getPersistentRDDs().size()
+    compiled = compile_pipeline(spark, p)
+    shared = compiled.stage_frames["fan"]
+    assert shared.storageLevel.useMemory
+    # both branches read the one persisted scan
+    assert "InMemoryTableScan" in (compiled.sink_frames["a"]._jdf  # noqa: SLF001
+                                   .queryExecution().executedPlan().toString())
+    compiled.run()
+    assert not shared.storageLevel.useMemory
+    assert jsc.getPersistentRDDs().size() == before
+    n = spark.read.parquet(f"{sf_dir}/events.parquet").count()
+    for sid in ("a", "b"):
+        assert spark.read.parquet(str(tmp_path / sid)).count() == n
+    compiled.release_shared()  # idempotent no-op
+
+
+def test_fan_out_keeps_a_caller_cached_source(spark, sf_dir, tmp_path):
+    """A fan_out directly on a source override the caller cached reuses
+    that cache and leaves it cached after run(): the frame is the
+    caller's to release."""
+    from etl_router_spark.compile.pipeline import compile_pipeline
+
+    events = spark.read.parquet(f"{sf_dir}/events.parquet").cache()
+    try:
+        compiled = compile_pipeline(spark, _fan_out_pipeline(sf_dir, tmp_path),
+                                    source_overrides={"src": events})
+        assert compiled.shared_prefix is None
+        compiled.run()
+        assert events.storageLevel.useMemory
+        assert spark.read.parquet(str(tmp_path / "a")).count() == events.count()
+    finally:
+        events.unpersist()
+
+
 def test_render_outputs(sf_dir, tmp_path):
     a = _pipeline("a", sf_dir, str(tmp_path / "a"), steps=(FILTER, PROJECT))
     b = _pipeline("b", sf_dir, str(tmp_path / "b"), steps=(FILTER, PROJECT))

@@ -301,13 +301,13 @@ def test_pca_project_is_pure_jvm_and_shuffle_free(plans):
 
 
 def test_bm25_broadcast_is_query_sized(plans):
-    # BM25's 100 TB contract (r16 shape): ONE corpus tokenize, ONE
-    # hits-sized corpus exchange. The (id, term) tf aggregate is
-    # persisted and shared by the probe side and the df branch; the
-    # broadcast query-term filter sits BELOW the tf aggregate so only
-    # query-term token rows reach its exchange; the per-term document
-    # frequency is a count over the CACHED tf (one row per containing
-    # doc), never a vocabulary-wide aggregate or a second corpus scan.
+    # BM25's 100 TB contract (r16 shape): no corpus-wide exchange.
+    # Nothing is persisted: the probe side and the df branch each run
+    # their own (filtered) tokenize+explode map pass, and the broadcast
+    # query-term filter sits BELOW every tf aggregate so only query-term
+    # token rows reach either hits-sized exchange; the per-term document
+    # frequency is a count over that tf table (one row per containing
+    # doc), never a vocabulary-wide distinct-doc aggregate.
     plan = plans("text_bm25_topk")
     assert "BroadcastHashJoin" in plan
     # every corpus tokenize site (Generate over __toks) must sit BELOW

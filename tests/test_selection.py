@@ -177,6 +177,38 @@ def test_weighted_sample_global_and_nonpositive(spark):
     assert {2, 3, 4}.isdisjoint(got)
 
 
+HOSTILE_SALTS = ["it's", "back\\slash", "\\'", "end\\", "ünïcødé—😀"]
+
+
+def test_hostile_salts_draw_as_the_column_form(spark):
+    """The SQL-text draw splices the salt into a string literal: a
+    quote, a backslash or unicode must give exactly the draw of the
+    h60 Column form on concat(salt, '|', id), never a parse error or a
+    silently different literal."""
+    from etl_router_spark.functions.selection import _u_micro_sql
+    from etl_router_spark.functions.text import h60
+
+    df = spark.range(40).withColumnRenamed("id", "doc_id")
+    for salt in HOSTILE_SALTS:
+        col_form = h60(F.concat(F.lit(salt), F.lit("|"),
+                                F.col("doc_id").cast("string")))
+        want = (F.pmod(col_form, F.lit(1000000)).cast("double") + 0.5) / 1e6
+        rows = df.select(F.expr(_u_micro_sql("doc_id", salt)).alias("u"),
+                         want.alias("w")).collect()
+        assert all(r.u == r.w for r in rows), salt
+
+
+def test_weighted_sample_hostile_salts_match_python_reference(spark):
+    rows = [(1, 5.0), (2, 1.0), (3, 7.0), (4, 3.0), (5, 2.0), (6, 9.0)]
+    df = spark.createDataFrame(rows, ["doc_id", "w"])
+    for salt in HOSTILE_SALTS:
+        keys = _py_es_keys(rows, salt)
+        expect = sorted(keys, key=lambda i: (keys[i], i))[:3]
+        got = [r["doc_id"] for r in
+               weighted_sample(df, 3, weight_col="w", salt=salt).collect()]
+        assert sorted(got) == sorted(expect), salt
+
+
 def test_selection_stage_manifests(spark, sf_dir, tmp_path):
     """dsir_sample / weighted_sample as manifest transform_types — the
     data-selection stage is declarable in YAML like any filter."""

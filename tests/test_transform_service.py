@@ -44,20 +44,20 @@ def _make_statuses():
 
 
 def test_status_routing_and_dlq(spark):
-    main, dlq = apply_transform_service(
-        _toy(spark), _make_statuses(), SCHEMA, on_error="route", failed_stage="svc1"
+    main, errors = apply_transform_service(
+        _toy(spark), _make_statuses(), SCHEMA, on_error="route"
     )
     got = {(r.id, r.kind, r.v) for r in main.collect()}
     assert got == {(1, "keep", 1.0), (4, "fan", 2.0)}
     # SPLIT emitted two identical rows
     assert main.count() == 3
-    d = dlq.collect()
-    assert len(d) == 1 and d[0].id == 3
-    assert d[0]._dlq_error_code == "TRANSFORM"
-    assert d[0]._dlq_error_message == "bad id 3"
-    assert d[0]._dlq_failed_stage == "svc1"
-    assert d[0]._dlq_failed_stage_type == "service"
-    assert "__status" not in main.columns and "__status" not in dlq.columns
+    # the error side is the ERROR rows with their message; the pipeline
+    # compiler enriches it into the DLQ frame (tests/test_dlq_write_path.py)
+    d = errors.collect()
+    assert len(d) == 1 and (d[0].id, d[0].kind) == (3, "boom")
+    assert d[0]["__error"] == "bad id 3"
+    assert "__status" not in main.columns and "__status" not in errors.columns
+    assert not any(c.startswith("_dlq_") for c in errors.columns)
 
 
 def test_on_error_drop_and_raise(spark):
@@ -120,8 +120,9 @@ def test_config_reaches_transform(spark):
 
 
 def test_pipeline_service_stage(spark):
-    """transform_type: service dispatches through the compiler with DLQ
-    side attached (same wiring as validate route)."""
+    """transform_type: service dispatches through the compiler and, in
+    route mode, returns its error side as a value (as validate route
+    does)."""
     from etl_router_spark.compile.pipeline import apply_transform_stage
     from etl_router_spark.model.manifest import Stage, StageType
 
@@ -140,10 +141,9 @@ def test_pipeline_service_stage(spark):
         [(1, 10, "purchase", 100.0), (2, 11, "error", 5.0), (3, 12, "click", 400.0)],
         "event_id bigint, user_id bigint, event_type string, value double",
     )
-    out = apply_transform_stage(df, stage, spark)
+    out, dlq = apply_transform_stage(df, stage, spark)
     rows = {(r.event_type, round(r.value, 6)) for r in out.collect()}
     assert rows == {("purchase_net", 97.0), ("purchase_fee", 3.0)}
-    dlq = out._etl_dlq_side  # noqa: SLF001
     assert dlq.count() == 1 and dlq.first().event_id == 3
 
 
