@@ -303,7 +303,7 @@ def render_ascii(pipelines: list[Pipeline]) -> str:
     previously visible only as run_streaming_group's runtime warning;
     the reference surfaces group membership on the graph view,
     cli/src/commands/graph.rs:30-35)."""
-    from etl_router_spark.streaming.group import _stateful_tail_stage
+    from etl_router_spark.streaming.runner import _stateful_stage
 
     dag = optimize(pipelines)
     out: list[str] = []
@@ -326,7 +326,7 @@ def render_ascii(pipelines: list[Pipeline]) -> str:
                 parts.append(f"{sid}{mark}")
             line = f"{p.id}: " + " -> ".join(parts)
             if shared and g.prefix_len:
-                sid = _stateful_tail_stage(p, chain, g.prefix_len)
+                sid = _stateful_stage(p, chain[1 + g.prefix_len:])
                 if sid is not None:
                     line += (
                         f"  [streaming: runs individually — tail "

@@ -121,7 +121,7 @@ def _mask_column(col: Column, strategy: str, *, replacement: str | None = None,
     if strategy == "partial":
         n = F.length(col)
         head = F.substring(col, 1, show_first)
-        tail = F.when(F.lit(show_last) > 0, F.expr(f"substring({_sql(col)}, -{show_last}, {show_last})")).otherwise(F.lit(""))
+        tail = F.substring(col, -show_last, show_last) if show_last > 0 else F.lit("")
         stars = F.repeat(F.lit("*"), F.greatest(n - show_first - show_last, F.lit(0)))
         return F.when(col.isNull(), None).otherwise(F.concat(head, stars, tail))
     if strategy == "nullify":
@@ -132,12 +132,6 @@ def _mask_column(col: Column, strategy: str, *, replacement: str | None = None,
             F.concat(F.lit("tok_"), F.sha2(F.concat(F.lit(salt), col.cast("string")), 256))
         )
     raise ValueError(f"unknown mask strategy: {strategy!r}")
-
-
-def _sql(col: Column) -> str:
-    # Column -> SQL fragment for the negative-index substring; Column API
-    # has no negative start, F.expr does.
-    return col._jc.toString()  # noqa: SLF001
 
 
 def apply_mask(df: DataFrame, rules: list[dict[str, Any]]) -> DataFrame:

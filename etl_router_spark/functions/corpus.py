@@ -1595,28 +1595,27 @@ def filter_attribution(
     if not rules:
         raise ValueError("filter_attribution: need at least one rule")
     names = list(rules)
-    fail = {
-        n: F.when(rules[n], F.lit(0)).otherwise(F.lit(1)) for n in names
-    }
-    total = None
-    for n in names:
-        total = fail[n] if total is None else total + fail[n]
+    fail = [F.when(rules[n], F.lit(0)).otherwise(F.lit(1)) for n in names]
+    total = fail[0]
+    for f in fail[1:]:
+        total = total + f
+    # columns are aliased by position and the names stacked as values,
+    # so no rule name reaches SQL text
     aggs = [F.count(F.lit(1)).alias("__n_rows")]
-    for n in names:
-        aggs.append(F.sum(fail[n]).alias(f"__f_{n}"))
+    for i, f in enumerate(fail):
+        aggs.append(F.sum(f).alias(f"__f_{i}"))
         aggs.append(
-            F.sum(F.when((fail[n] == 1) & (total == 1), 1).otherwise(0))
-            .alias(f"__o_{n}"))
+            F.sum(F.when((f == 1) & (total == 1), 1).otherwise(0))
+            .alias(f"__o_{i}"))
     aggs.append(F.sum(F.when(total >= 1, 1).otherwise(0)).alias("__any"))
     aggs.append(F.sum(F.when(total == 1, 1).otherwise(0)).alias("__one"))
-    one_row = df.agg(*aggs)
-    stacked = ", ".join(
-        [f"'{n}', __f_{n}, __o_{n}" for n in names]
-        + ["'__dropped__', __any, __one"]
-    )
-    return one_row.selectExpr(
-        f"stack({len(names) + 1}, {stacked}) AS (rule, n_fail, n_only_fail)",
-        "__n_rows AS n_rows",
+    rows = [(F.lit(n), F.col(f"__f_{i}"), F.col(f"__o_{i}"))
+            for i, n in enumerate(names)]
+    rows.append((F.lit("__dropped__"), F.col("__any"), F.col("__one")))
+    return df.agg(*aggs).select(
+        F.stack(F.lit(len(rows)), *(c for row in rows for c in row))
+        .alias("rule", "n_fail", "n_only_fail"),
+        F.col("__n_rows").alias("n_rows"),
     ).select(
         "rule",
         F.coalesce(F.col("n_fail"), F.lit(0)).cast("long").alias("n_fail"),

@@ -3,10 +3,18 @@
 The reference types only one sink config (gRPC, ``types.rs:703-720``)
 plus named sink manifests (e.g. the S3 parquet archive,
 ``examples/manifests/sinks/s3-archive.yaml``). Our engine exposes Spark's
-writer surface under the same config shape. Delivery guarantees
-(``proto/sink.proto:26-30``): batch parquet writes are atomic per job;
-streaming exactly-once comes from checkpoint + idempotent epoch handling
-in ``foreachBatch`` (see streaming module).
+writer surface under the same config shape.
+
+Batch and streaming share one config, as sources do: ``write_sink``
+writes a batch frame, ``start_sink`` starts a sink's streaming query, and
+both decode a file, s3 or gcs sink through ``_file_sink``. ``start_sink``
+streams memory and console natively, and a file, s3 or gcs sink through
+Spark's exactly-once file sink when the output mode is append and the
+config ``mode`` is append or unset. Everything else (an upsert or
+overwrite ``mode``, update output mode, other sink types) is written per
+epoch by ``write_sink`` (at-least-once on a replayed epoch), so each
+epoch gets what a batch run of that epoch gets. Batch parquet writes are
+atomic per job (``proto/sink.proto:26-30``).
 """
 
 from __future__ import annotations
@@ -14,12 +22,46 @@ from __future__ import annotations
 from typing import Any
 
 from pyspark.sql import DataFrame
+from pyspark.sql.streaming import StreamingQuery
+
+from etl_router_spark.sources.registry import object_store_uri
+
+_FILE_SINKS = ("file", "s3", "gcs")
+
+
+def _sink_type(cfg: dict[str, Any]) -> str:
+    return (cfg.get("sink_type") or cfg.get("type") or "file").lower()
+
+
+def _file_sink(cfg: dict[str, Any], writer):
+    """A file, s3 or gcs sink config -> (format, path, ``writer`` with the
+    format and options set); ``writer`` is ``df.write`` or
+    ``df.writeStream``."""
+    stype = _sink_type(cfg)
+    path = cfg.get("path") if stype == "file" else object_store_uri(stype, cfg)
+    fmt = (cfg.get("format") or "parquet").lower()
+    if fmt == "lines":  # reference's line-delimited text (types.rs:280)
+        fmt = "text"
+    writer = writer.format(fmt)
+    # scale: partition the sink by natural keys -> partition pruning
+    # for downstream readers
+    if cfg.get("partition_by"):
+        writer = writer.partitionBy(*cfg["partition_by"])
+    if fmt == "csv":
+        writer = writer.option("header", "true")
+    if cfg.get("compression"):
+        writer = writer.option("compression", cfg["compression"])
+    return fmt, path, writer
 
 
 def _upsert_file_sink(df: DataFrame, cfg: dict[str, Any], fmt: str, path: str) -> None:
-    """mode=upsert: merge ``df`` into the dataset at ``path`` keyed on
-    ``merge_keys`` (latest-by-``order_by`` wins; optional ``op_col``
-    tombstones deletes), then atomically swap the rewrite in.
+    """mode=upsert, MERGE without a table format: merge ``df`` into the
+    dataset at ``path`` keyed on ``merge_keys`` (latest-by-``order_by``
+    wins; optional ``op_col`` tombstones deletes; changed keys cost one
+    left_anti join), then atomically swap the rewrite in, like
+    ``compact_files``. On object stores or with partial-key updates,
+    prefer a table format's MERGE INTO: this is the whole-dataset
+    rewrite fallback.
 
     Single-writer assumption: the rename swap serializes readers
     against ONE writer; concurrent upserts to the same path race
@@ -75,40 +117,19 @@ def _upsert_file_sink(df: DataFrame, cfg: dict[str, Any], fmt: str, path: str) -
 
 def write_sink(df: DataFrame, cfg: dict[str, Any]) -> None:
     """Batch write dispatch on sink_type/format."""
-    stype = (cfg.get("sink_type") or cfg.get("type") or "file").lower()
-    if stype in ("file", "s3", "gcs"):
-        path = cfg.get("path")
-        if stype == "s3":
-            path = f"s3a://{cfg['bucket']}/{cfg.get('prefix', '').lstrip('/')}"
-        elif stype == "gcs":
-            path = f"gs://{cfg['bucket']}/{cfg.get('prefix', '').lstrip('/')}"
-        fmt = (cfg.get("format") or "parquet").lower()
-        if fmt == "lines":  # reference's line-delimited text (types.rs:280)
-            fmt = "text"
+    stype = _sink_type(cfg)
+    if stype in _FILE_SINKS:
+        fmt, path, writer = _file_sink(cfg, df.write)
         if (cfg.get("mode") or "").lower() == "upsert":
-            # MERGE-without-a-table-format: latest state per merge_key
-            # wins over the existing dataset (order_by breaks ties, an
-            # op column tombstones). Changed keys cost one left_anti
-            # join keyed on merge_keys; the rewrite swaps in atomically
-            # like compact_files. On object stores / with partial-key
-            # updates, prefer a table format's MERGE INTO — this is
-            # the whole-dataset-rewrite fallback.
             _upsert_file_sink(df, cfg, fmt, path)
             return
-        writer = df.write.format(fmt).mode(cfg.get("mode", "append"))
-        # scale: partition the sink by natural keys -> partition pruning
-        # for downstream readers
-        if cfg.get("partition_by"):
-            writer = writer.partitionBy(*cfg["partition_by"])
-            # backfill surface: overwrite ONLY the partitions present in
-            # this batch (per-writer option — no session conf mutation);
-            # static overwrite would drop every other partition
-            if (cfg.get("partition_overwrite") or "").lower() == "dynamic":
-                writer = writer.option("partitionOverwriteMode", "dynamic")
-        if fmt == "csv":
-            writer = writer.option("header", "true")
-        if cfg.get("compression"):
-            writer = writer.option("compression", cfg["compression"])
+        writer = writer.mode(cfg.get("mode", "append"))
+        # backfill surface: overwrite ONLY the partitions present in
+        # this batch (per-writer option — no session conf mutation);
+        # static overwrite would drop every other partition
+        if cfg.get("partition_by") and (
+                (cfg.get("partition_overwrite") or "").lower() == "dynamic"):
+            writer = writer.option("partitionOverwriteMode", "dynamic")
         writer.save(path)
         return
     if stype == "console":
@@ -198,3 +219,34 @@ def write_sink(df: DataFrame, cfg: dict[str, Any]) -> None:
         )
         return
     raise ValueError(f"unknown sink_type: {stype!r}")
+
+
+def start_sink(
+    df: DataFrame,
+    cfg: dict[str, Any],
+    output_mode: str,
+    checkpoint: str,
+    trigger: dict[str, Any],
+    name: str | None = None,
+) -> StreamingQuery:
+    """Start the streaming query that writes ``df`` to the sink ``cfg``;
+    the module docstring gives the rule that picks the writer."""
+    stype = _sink_type(cfg)
+    writer = df.writeStream.option("checkpointLocation", checkpoint).trigger(**trigger)
+    qname = cfg.get("name") or name  # memory sink: queryName == table name
+    if qname:
+        writer = writer.queryName(qname)
+    if stype == "memory":
+        # memory sink supports append/complete; update-shaped results
+        # are materialized via complete so tests can read final state
+        mode = "complete" if output_mode == "update" else output_mode
+        return writer.format("memory").outputMode(mode).start()
+    if stype == "console":
+        return writer.format("console").outputMode(output_mode).start()
+    if (stype in _FILE_SINKS and output_mode == "append"
+            and (cfg.get("mode") or "append").lower() == "append"):
+        _, path, writer = _file_sink(cfg, writer)
+        return writer.outputMode("append").start(path)
+    return writer.foreachBatch(
+        lambda batch_df, _epoch: write_sink(batch_df, cfg)
+    ).outputMode(output_mode).start()

@@ -104,25 +104,26 @@ def _read_file(spark, cfg, streaming):
     return _file_reader(spark, cfg, streaming, cfg["path"])
 
 
-def _read_s3(spark, cfg, streaming):
-    # S3 source (types.rs:290-303): bucket/prefix/format; poll_interval
+def object_store_uri(store: str, cfg: dict[str, Any]) -> str:
+    """An ``s3``/``gcs`` config's bucket and prefix as the Hadoop URI
+    (``s3a://bucket/prefix``, ``gs://bucket/prefix``), for sources and
+    sinks alike."""
+    scheme = {"s3": "s3a://", "gcs": "gs://"}[store]
+    return f"{scheme}{cfg['bucket']}/{cfg.get('prefix', '').lstrip('/')}"
+
+
+def _object_store_reader(store: str):
+    # S3/GCS source (types.rs:290-303): bucket/prefix/format; poll_interval
     # maps to the file-stream trigger. staging_path = the drained-object
     # bridge (a lister/fetcher daemon mirrors the prefix locally) for
     # environments without hadoop-aws on the classpath — exercised
-    # end-to-end by the hermetic S3-API gate.
-    staging = cfg.get("staging_path")
-    if staging:  # _file_reader already defaults watch=False
-        return _file_reader(spark, cfg, streaming, staging)
-    uri = f"s3a://{cfg['bucket']}/{cfg.get('prefix', '').lstrip('/')}"
-    return _file_reader(spark, cfg, streaming, uri)
+    # end-to-end by the hermetic S3-API gate. _file_reader already
+    # defaults watch=False.
+    def read(spark, cfg, streaming):
+        return _file_reader(spark, cfg, streaming,
+                            cfg.get("staging_path") or object_store_uri(store, cfg))
 
-
-def _read_gcs(spark, cfg, streaming):
-    staging = cfg.get("staging_path")
-    if staging:
-        return _file_reader(spark, cfg, streaming, staging)
-    uri = f"gs://{cfg['bucket']}/{cfg.get('prefix', '').lstrip('/')}"
-    return _file_reader(spark, cfg, streaming, uri)
+    return read
 
 
 def kafka_reader_options(cfg: dict[str, Any]) -> dict[str, str]:
@@ -349,8 +350,8 @@ def _read_warc(spark, cfg, streaming):
 
 SOURCE_REGISTRY = {
     "file": _read_file,
-    "s3": _read_s3,
-    "gcs": _read_gcs,
+    "s3": _object_store_reader("s3"),
+    "gcs": _object_store_reader("gcs"),
     "kafka": _read_kafka,
     "jdbc": _read_jdbc,
     "postgres_cdc": _read_postgres_cdc,

@@ -20,7 +20,7 @@ Semantics and caveats, deliberately matching the fan-out writer in
   so per-epoch replay is semantics-preserving: no state crosses epochs
   through a shared stage. Tails replay as per-epoch batch plans, so a
   member whose tail contains a STATEFUL stage (aggregate/sessionize/
-  dedupe/ratelimit) is ENFORCED out of fusion by
+  dedupe/ratelimit/cdc_apply) is ENFORCED out of fusion by
   ``run_streaming_group`` (r12 verdict/advice): it starts individually
   through ``run_streaming`` — genuine cross-epoch streaming state —
   with a warning naming the stage, and fusion proceeds for the
@@ -51,6 +51,7 @@ from etl_router_spark.model.manifest import Pipeline
 from etl_router_spark.streaming.runner import (
     DEFAULT_TRIGGER,
     StreamingExecution,
+    _stateful_stage,
     per_epoch,
     run_streaming,
 )
@@ -91,33 +92,6 @@ def _make_group_writer(
     return per_epoch(write, marker_dir)
 
 
-# Transform types whose STREAMING compile keeps state across epochs
-# (aggregate/sessionize watermark state, dedupe's dropDuplicates /
-# running max_by, ratelimit's applyInPandasWithState counters). A
-# fused tail replays as a per-epoch BATCH plan, which would silently
-# reset that state every epoch — types.rs:634-641,690-697 emit modes
-# are cross-epoch semantics, so these members must run individually.
-_STATEFUL_TAIL_TYPES = frozenset(
-    {"aggregate", "sessionize", "dedupe", "ratelimit"}
-)
-
-
-def _stateful_tail_stage(pipeline: Pipeline, chain: list[str],
-                         prefix_len: int) -> str | None:
-    """First stateful stage id in the member's post-prefix tail, or
-    None — the ancestor-walk rule ``infer_output_mode`` applies per
-    sink, specialized to a linear chain (every tail stage is an
-    ancestor of the sink)."""
-    from etl_router_spark.model.manifest import StageType
-
-    for sid in chain[1 + prefix_len:]:
-        stage = pipeline.stages[sid]
-        if (stage.stage_type == StageType.TRANSFORM
-                and stage.transform_type in _STATEFUL_TAIL_TYPES):
-            return sid
-    return None
-
-
 def run_streaming_group(
     spark: SparkSession,
     pipelines: list[Pipeline],
@@ -134,17 +108,11 @@ def run_streaming_group(
     identical behavior to running them one by one.
 
     Members whose TAIL contains a stateful stage
-    (``_STATEFUL_TAIL_TYPES``) are routed out of fusion and started
-    individually — per-epoch tail replay would give them per-epoch
-    state where ``run_streaming`` gives genuine cross-epoch streaming
-    state (watermarked aggregates, dropDuplicates, ratelimit counters),
-    a silent semantics change. The fusion win is kept for the
-    remaining stateless-tail members when >= 2 remain. This also keeps
-    the trigger contract intact: ``emit: periodic`` stages (the one
-    case ``_derive_trigger`` maps to a processingTime trigger) are
-    stateful, so every fused member uses the group trigger and every
-    trigger-deriving member goes through ``run_streaming``'s
-    ``trigger or _derive_trigger or DEFAULT_TRIGGER`` chain.
+    (``runner._stateful_stage``) are started individually, with a
+    warning, so they keep cross-epoch state; the rest still fuse when
+    >= 2 remain. ``emit: periodic`` stages (the one case
+    ``_derive_trigger`` maps to a processingTime trigger) are stateful,
+    so every fused member uses the group trigger.
 
     Returns one ``StreamingExecution`` over all started queries; group
     queries are keyed ``group:<n>:<source_label>``, individual queries
@@ -169,7 +137,7 @@ def run_streaming_group(
         if len(g.pipelines) >= 2:
             fuse = []
             for p in g.pipelines:
-                sid = _stateful_tail_stage(p, g.chains[p.id], g.prefix_len)
+                sid = _stateful_stage(p, g.chains[p.id][1 + g.prefix_len:])
                 if sid is None:
                     fuse.append(p)
                     continue

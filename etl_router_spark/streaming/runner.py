@@ -20,10 +20,16 @@ Maps the reference's streaming control plane onto Structured Streaming:
   pacing (maxFilesPerTrigger / maxOffsetsPerTrigger), configured on the
   source, not here — Spark's pull model needs no credit protocol.
 
-Delivery: native file sinks are exactly-once (file-sink manifest log);
-foreachBatch fan-out is at-least-once per epoch — pair with idempotent
-sinks or dedupe on ``idempotency_key`` downstream
-(``proto/sink.proto:26-30`` semantics).
+Delivery: sinks outside the shared writers start through
+``sinks.registry.start_sink`` from the config a batch run writes:
+append-mode file, s3 and gcs sinks (config ``mode`` append or unset)
+use Spark's exactly-once file sink; upsert/overwrite, update output mode
+and other sink types are written per epoch by ``write_sink``, as the
+fan-out and fan-in writers write theirs. Per-epoch writes are
+at-least-once on replay — pair with idempotent sinks, dedupe on
+``idempotency_key`` downstream (``proto/sink.proto:26-30``) or pass
+``exactly_once=True``. A shared writer replays its stages as a batch
+plan per epoch, so none of them may keep state across epochs.
 """
 
 from __future__ import annotations
@@ -39,7 +45,7 @@ from etl_router_spark.compile.pipeline import (
     write_outputs,
 )
 from etl_router_spark.model.manifest import Pipeline, StageType
-from etl_router_spark.sinks.registry import write_sink
+from etl_router_spark.sinks.registry import start_sink
 from etl_router_spark.streaming.exactly_once import epoch_committed, mark_epoch
 
 DEFAULT_TRIGGER: dict[str, Any] = {"availableNow": True}
@@ -54,8 +60,8 @@ def infer_output_mode(pipeline: Pipeline, sink_id: str) -> str:
 
     ``on_window_close``/``on_close`` -> append (rows final once the
     watermark closes the window); ``on_update``-family -> update;
-    keep-last dedupe is a running aggregate -> update; stateless
-    pipelines -> append.
+    keep-last dedupe and ``cdc_apply`` are running per-key aggregates ->
+    update; stateless pipelines -> append.
     """
     mode = "append"
     seen: set[str] = set()
@@ -72,7 +78,8 @@ def infer_output_mode(pipeline: Pipeline, sink_id: str) -> str:
                 emit = stage.config.get("emit") or "on_window_close"
                 if emit in _UPDATE_EMITS:
                     mode = "update"
-            elif tt == "dedupe" and stage.config.get("keep") == "last":
+            elif tt == "cdc_apply" or (
+                    tt == "dedupe" and stage.config.get("keep") == "last"):
                 mode = "update"
         frontier.extend(e.from_stage for e in pipeline.incoming(sid))
     return mode
@@ -102,14 +109,23 @@ class StreamingExecution:
         return any(q.isActive for q in self.queries.values())
 
 
-def _fanout_groups(pipeline: Pipeline) -> list[str]:
-    """fan-out stage ids with >= 2 sinks below them."""
-    return [
-        fid for fid, stage in pipeline.stages.items()
-        if stage.stage_type == StageType.FAN_OUT
-        and sum(pipeline.stages[s].stage_type == StageType.SINK
-                for s in _descendant_order(pipeline, fid)) >= 2
-    ]
+# Transform types whose STREAMING compile keeps state across epochs
+# (watermark state, dropDuplicates, running max_by, ratelimit counters):
+# a per-epoch BATCH replay would silently reset it every epoch.
+_STATEFUL_TYPES = frozenset(
+    {"aggregate", "sessionize", "dedupe", "ratelimit", "cdc_apply"}
+)
+
+
+def _stateful_stage(pipeline: Pipeline, stage_ids: list[str]) -> str | None:
+    """First of ``stage_ids`` whose streaming compile keeps state across
+    epochs, or None: such stages cannot be replayed per epoch."""
+    for sid in stage_ids:
+        stage = pipeline.stages[sid]
+        if (stage.stage_type == StageType.TRANSFORM
+                and stage.transform_type in _STATEFUL_TYPES):
+            return sid
+    return None
 
 
 def _descendant_order(pipeline: Pipeline, root: str) -> list[str]:
@@ -122,52 +138,6 @@ def _descendant_order(pipeline: Pipeline, root: str) -> list[str]:
         reach.add(sid)
         frontier.extend(e.to_stage for e in pipeline.outgoing(sid))
     return [s for s in pipeline.topological_order() if s in reach]
-
-
-def _start_sink_query(
-    df: DataFrame,
-    cfg: dict[str, Any],
-    mode: str,
-    checkpoint: str,
-    trigger: dict[str, Any],
-    name: str | None = None,
-) -> StreamingQuery:
-    """One sink -> one StreamingQuery.
-
-    Append-mode file sinks use Spark's native exactly-once file sink;
-    everything else (update mode, jdbc/kafka/console/custom) goes
-    through foreachBatch -> the batch sink registry.
-    """
-    stype = (cfg.get("sink_type") or cfg.get("type") or "file").lower()
-    writer = df.writeStream.option("checkpointLocation", checkpoint).trigger(**trigger)
-    qname = cfg.get("name") or name  # memory sink: queryName == table name
-    if qname:
-        writer = writer.queryName(qname)
-
-    if stype == "memory":
-        # memory sink supports append/complete; update-shaped results
-        # are materialized via complete so tests can read final state
-        mem_mode = "complete" if mode == "update" else mode
-        return writer.format("memory").outputMode(mem_mode).start()
-    if stype == "console":
-        return writer.format("console").outputMode(mode).start()
-    if stype in ("file", "s3", "gcs") and mode == "append":
-        path = cfg.get("path")
-        if stype == "s3":
-            path = f"s3a://{cfg['bucket']}/{cfg.get('prefix', '').lstrip('/')}"
-        elif stype == "gcs":
-            path = f"gs://{cfg['bucket']}/{cfg.get('prefix', '').lstrip('/')}"
-        fmt = (cfg.get("format") or "parquet").lower()
-        w = writer.format(fmt).option("path", path).outputMode("append")
-        if cfg.get("partition_by"):
-            w = w.partitionBy(*cfg["partition_by"])
-        return w.start()
-
-    # general path: per-epoch batch write through the sink registry
-    def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        write_sink(batch_df, cfg)
-
-    return writer.foreachBatch(write_epoch).outputMode(mode).start()
 
 
 def per_epoch(write: Callable[[DataFrame], None],
@@ -217,16 +187,17 @@ def run_streaming(
     compiled: CompiledPipeline,
     checkpoint_root: str,
     trigger: dict[str, Any] | None = None,
-    shared_fanout: bool = True,
     dlq_sink: dict[str, Any] | None = None,
     exactly_once: bool = False,
 ) -> StreamingExecution:
     """Start every sink of a streaming-compiled pipeline.
 
-    ``shared_fanout=True``: sinks below a fan-out stage share ONE query
-    and one upstream scan per epoch (foreachBatch replays the sub-DAG on
-    the persisted batch). Each query checkpoints independently under
-    ``checkpoint_root``.
+    Sinks below a fan-out stage share ONE query and one upstream scan
+    per epoch (foreachBatch replays the sub-DAG on the persisted batch),
+    unless that sub-DAG holds a stateful stage (``_stateful_stage``):
+    then each of its sinks starts as its own query, which keeps the
+    stage's state across epochs. Each query checkpoints independently
+    under ``checkpoint_root``.
 
     ``exactly_once=True``: fan-out epochs commit a marker after writing
     all sinks (``streaming.exactly_once``); a replayed epoch that
@@ -261,22 +232,29 @@ def run_streaming(
             break
     queries: dict[str, StreamingQuery] = {}
     handled: set[str] = set()
-    late_route = False  # a fan-in writer sends late rows to the DLQ
 
     # fan-in stages with a declared late_policy get the reference's
     # per-source watermark semantics (watermark.rs:84-147): each epoch
     # updates a SourceWatermarkTracker from per-source max event times
     # (+ idle promotion), then routes rows older than
     # combined - allowed_lateness per the policy (route -> DLQ,
-    # drop -> discard, tag -> boolean column).
-    for fid, stage in pipeline.stages.items():
-        policy = (
-            stage.config.get("late_policy")
-            if stage.stage_type == StageType.FAN_IN
-            else None
-        )
-        if policy not in ("route", "drop", "tag"):
-            continue
+    # drop -> discard, tag -> boolean column). The writer replays the
+    # stages below the fan-in per epoch, so none of them may be stateful.
+    late_fanins = {
+        fid: stage.config.get("late_policy")
+        for fid, stage in pipeline.stages.items()
+        if stage.stage_type == StageType.FAN_IN
+        and stage.config.get("late_policy") in ("route", "drop", "tag")
+    }
+    for fid in late_fanins:
+        bad = _stateful_stage(pipeline, _descendant_order(pipeline, fid))
+        if bad is not None:
+            raise ValueError(
+                f"late-policy fan_in {fid!r} replays the stages below it per "
+                f"epoch, but {bad!r} ({pipeline.stages[bad].transform_type}) "
+                "keeps state across epochs")
+    for fid, policy in late_fanins.items():
+        stage = pipeline.stages[fid]
         from etl_router_spark.compile.fan import apply_fan_in
         from etl_router_spark.model.manifest import FieldMapping
         from etl_router_spark.model.parser import parse_duration
@@ -308,7 +286,6 @@ def run_streaming(
                 tracker.set_idle_timeout(sid_, parse_duration(idle))
 
         order = _descendant_order(pipeline, fid)
-        late_route = late_route or policy == "route"
 
         def make_fanin_writer(fid, order, tracker, ts_field, policy):
             def write(batch_df: DataFrame) -> None:
@@ -349,31 +326,37 @@ def run_streaming(
         queries[f"fanin:{fid}"] = q
         handled.update(order)
 
-    if shared_fanout:
-        for fid in _fanout_groups(pipeline):
-            order = _descendant_order(pipeline, fid)
-            write = per_epoch(
-                lambda b, fid=fid, order=order: write_outputs(
-                    pipeline, *compile_stages(spark, pipeline, order, {fid: b}),
-                    dlq_sink),
-                f"{checkpoint_root}/markers_{fid}" if exactly_once else None)
-            q = (
-                compiled.stage_frames[fid].writeStream.foreachBatch(write)
-                .option("checkpointLocation", f"{checkpoint_root}/fanout_{fid}")
-                .trigger(**trig)
-                .queryName(f"{pipeline.name}.fanout.{fid}")
-                .start()
-            )
-            queries[f"fanout:{fid}"] = q
-            handled.update(order)
+    # a fan-out with >= 2 sinks below it and no stateful stage there
+    # gets one shared writer; nested fan-outs are covered by the outer one
+    for fid in pipeline.topological_order():
+        if fid in handled or pipeline.stages[fid].stage_type != StageType.FAN_OUT:
+            continue
+        order = _descendant_order(pipeline, fid)
+        if (sum(pipeline.stages[s].stage_type == StageType.SINK
+                for s in order) < 2
+                or _stateful_stage(pipeline, order) is not None):
+            continue
+        write = per_epoch(
+            lambda b, fid=fid, order=order: write_outputs(
+                pipeline, *compile_stages(spark, pipeline, order, {fid: b}),
+                dlq_sink),
+            f"{checkpoint_root}/markers_{fid}" if exactly_once else None)
+        q = (
+            compiled.stage_frames[fid].writeStream.foreachBatch(write)
+            .option("checkpointLocation", f"{checkpoint_root}/fanout_{fid}")
+            .trigger(**trig)
+            .queryName(f"{pipeline.name}.fanout.{fid}")
+            .start()
+        )
+        queries[f"fanout:{fid}"] = q
+        handled.update(order)
 
     for sid, df in compiled.sink_frames.items():
         if sid in handled:
             continue
-        cfg = pipeline.stages[sid].config
-        mode = infer_output_mode(pipeline, sid)
-        queries[sid] = _start_sink_query(
-            df, cfg, mode, f"{checkpoint_root}/{sid}", trig,
+        queries[sid] = start_sink(
+            df, pipeline.stages[sid].config, infer_output_mode(pipeline, sid),
+            f"{checkpoint_root}/{sid}", trig,
             name=f"{pipeline.name}_{sid}".replace("-", "_"),
         )
 
@@ -383,13 +366,14 @@ def run_streaming(
     if dlq_cfg:
         own = {sid: df for sid, df in compiled.dlq_frames.items()
                if sid not in handled and df.isStreaming}
-        sole = len(own) == 1 and not late_route and not (
+        # a route fan-in writer sends late rows to the DLQ too
+        sole = len(own) == 1 and "route" not in late_fanins.values() and not (
             handled & compiled.dlq_frames.keys())
         for sid, df in own.items():
             ckpt = f"{checkpoint_root}/dlq_{sid}"
             name = f"{pipeline.name}_dlq_{sid}".replace("-", "_")
             queries[f"dlq:{sid}"] = (
-                _start_sink_query(df, dlq_cfg, "append", ckpt, trig, name=name)
+                start_sink(df, dlq_cfg, "append", ckpt, trig, name=name)
                 if sole else
                 df.writeStream.foreachBatch(
                     lambda b, _, sid=sid: write_outputs(

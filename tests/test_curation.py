@@ -105,6 +105,24 @@ def test_filter_attribution_counts(spark):
     assert rows["min_words"]["fail_rate"] == pytest.approx(0.4)
 
 
+@pytest.mark.parametrize("names", [("no code", "it's"), ("x, 'y'", "a-b")])
+def test_filter_attribution_hostile_rule_names(spark, names):
+    """Rule names that need quoting in SQL text count like plain names."""
+    df = spark.createDataFrame(
+        [(1, 10, "en"), (2, 3, "en"), (3, 10, "zh"), (4, 2, "zh")],
+        "doc_id long, n_words long, lang string")
+
+    def report(a, b):
+        out = filter_attribution(df, {a: F.col("n_words") >= 5,
+                                      b: F.col("lang") == "en"})
+        return {r["rule"]: tuple(r)[1:] for r in out.collect()}
+
+    plain = report("min_words", "lang_en")
+    assert report(*names) == {names[0]: plain["min_words"],
+                              names[1]: plain["lang_en"],
+                              "__dropped__": plain["__dropped__"]}
+
+
 def test_filter_attribution_null_is_fail(spark):
     df = spark.createDataFrame(
         [(1, None), (2, "en")], "doc_id long, lang string")

@@ -258,3 +258,48 @@ def test_kafka_staging_streaming_read(spark, tmp_path):
     by_key = {(r.k, r.sequence_number): r for r in rows}
     assert by_key[(1, 2)].v == 3.0
     assert by_key[(0, 0)].idempotency_key == "t:0:0"
+
+
+def test_kafka_cdc_stream_manifest_streaming(spark, tmp_path):
+    """The kafka-cdc-stream example starts in streaming: ``cdc_apply`` is
+    a running per-key aggregate, so its sink runs in update mode and the
+    upsert sink is written per epoch, giving the batch twin's state. The
+    kafka source reads a drained staging directory."""
+    import base64
+    import json
+
+    import yaml
+
+    from etl_router_spark.compile.pipeline import compile_pipeline
+    from etl_router_spark.model.parser import parse_manifest_dict
+    from etl_router_spark.streaming import run_streaming
+
+    def staged(offset, account, lsn, op, balance):
+        payload = {"account_id": account,
+                   "committed_at": f"2024-01-01T00:00:{lsn:02d}",
+                   "lsn": lsn, "op": op, "balance": balance}
+        return {"topic": "app.accounts.changelog", "partition": 0,
+                "offset": offset, "timestamp": 1_704_067_200_000 + lsn * 1000,
+                "key": base64.b64encode(str(account).encode()).decode(),
+                "value": base64.b64encode(json.dumps(payload).encode()).decode(),
+                "headers": []}
+
+    # the six wire rows of test_kafka_cdc_stream_manifest_end_to_end
+    recs = [staged(0, 1, 1, "upsert", 10.0), staged(1, 1, 2, "upsert", 20.0),
+            staged(2, 2, 1, "upsert", 5.0), staged(3, 2, 2, "delete", None),
+            staged(4, 3, 1, "delete", None), staged(5, 3, 2, "upsert", 7.0)]
+    stage_dir = tmp_path / "staging"
+    stage_dir.mkdir()
+    (stage_dir / "part_0.jsonl").write_text("\n".join(json.dumps(r) for r in recs))
+
+    with open("examples/manifests/kafka-cdc-stream.yaml") as fh:
+        doc = yaml.safe_load(fh)
+    doc["spec"]["stages"][0]["config"].update(
+        staging_path=str(stage_dir), watch=True)
+    doc["spec"]["stages"][-1]["config"]["path"] = str(tmp_path / "state")
+    compiled = compile_pipeline(spark, parse_manifest_dict(doc), streaming=True)
+    run_streaming(compiled, str(tmp_path / "ck"),
+                  trigger={"availableNow": True}).await_termination(180)
+    got = {r.account_id: r.balance
+           for r in spark.read.parquet(str(tmp_path / "state")).collect()}
+    assert got == {1: 20.0, 3: 7.0}

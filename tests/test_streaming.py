@@ -750,3 +750,72 @@ def test_stream_bloom_probe_via_manifest_filter_key(spark, tmp_path):
         docs, None, prebuilt_words=bloom_bitmap(bench, **kw),
         **kw).collect())
     assert got == expect == [2, 3]
+
+
+def _fanout_dedupe(src, out_a, out_b, fan_in=False):
+    """source -> fan_out -> {dedupe keep-first on user_id -> a, b}; with
+    ``fan_in`` a late-policy fan-in takes the fan-out's place."""
+    src_cfg = {"source_type": "file", "path": src, "format": "parquet",
+               "max_files_per_trigger": 1}
+    stages = [
+        {"id": "src", "type": "source", "config": src_cfg},
+        {"id": "fan", "type": "fan_in" if fan_in else "fan_out",
+         "config": {"late_policy": "drop"} if fan_in else {}},
+        {"id": "first", "type": "transform",
+         "config": {"transform_type": "dedupe", "key_fields": ["user_id"],
+                    "keep": "first"}},
+        {"id": "a", "type": "sink",
+         "config": {"sink_type": "file", "format": "parquet", "path": out_a}},
+        {"id": "b", "type": "sink",
+         "config": {"sink_type": "file", "format": "parquet", "path": out_b}},
+    ]
+    edges = [{"from": "src", "to": "fan"}, {"from": "fan", "to": "first"},
+             {"from": "first", "to": "a"}, {"from": "fan", "to": "b"}]
+    if fan_in:
+        stages.insert(1, {"id": "src2", "type": "source", "config": src_cfg})
+        edges.append({"from": "src2", "to": "fan"})
+    return parse_manifest_dict({
+        "apiVersion": "etl.dev/v1", "kind": "Pipeline",
+        "metadata": {"name": "fanout-dedupe"},
+        "spec": {"stages": stages, "edges": edges}})
+
+
+def test_stream_fanout_keeps_dedupe_state_across_epochs(spark, tmp_path):
+    """A fan-out whose sub-DAG holds a stateful stage gets no shared
+    per-epoch writer: its sinks start as their own queries, so a
+    keep-first dedupe over two epochs (two files of the same 5 users)
+    keeps one row per user, as it does without the fan-out."""
+    import datetime as dt
+
+    src = str(tmp_path / "in")
+    t0 = dt.datetime(2024, 1, 1)
+    for i in range(2):
+        spark.createDataFrame(
+            [(10 * i + j, j % 5, t0 + dt.timedelta(seconds=10 * i + j))
+             for j in range(10)],
+            "event_id bigint, user_id bigint, event_time timestamp") \
+            .coalesce(1).write.mode("append").parquet(src)
+    out_a, out_b = str(tmp_path / "a"), str(tmp_path / "b")
+    compiled = compile_pipeline(
+        spark, _fanout_dedupe(src, out_a, out_b), streaming=True)
+    execu = run_streaming(compiled, str(tmp_path / "ck"))
+    execu.await_termination()
+    got_a = spark.read.parquet(out_a)
+    assert got_a.count() == 5
+    assert {r.user_id for r in got_a.collect()} == set(range(5))
+    assert spark.read.parquet(out_b).count() == 20
+    assert sorted(execu.queries) == ["a", "b"]
+
+
+def test_stream_late_fanin_rejects_stateful_stage_below(spark, tmp_path):
+    """The late-policy fan-in writer replays its sub-DAG per epoch, so a
+    stateful stage below it is an error that names the stage."""
+    src = str(tmp_path / "in")
+    spark.createDataFrame([(1, 1)], "event_id bigint, user_id bigint") \
+        .write.parquet(src)
+    compiled = compile_pipeline(
+        spark, _fanout_dedupe(src, str(tmp_path / "a"), str(tmp_path / "b"),
+                              fan_in=True), streaming=True)
+    with pytest.raises(ValueError, match="'first'.*dedupe"):
+        run_streaming(compiled, str(tmp_path / "ck"))
+    assert not spark.streams.active

@@ -47,12 +47,16 @@ def test_cast_safe_mode(spark):
 
 
 def test_mask_strategies(spark):
-    df = spark.createDataFrame([("secret-value", "4111111111111111", "x@y.com", "k", None)],
-                               "redact string, card string, email string, tok string, nul string")
+    df = spark.createDataFrame([("secret-value", "4111111111111111", "x@y.com", "k", None,
+                                 "a@b.org")],
+                               "redact string, card string, email string, tok string, nul string, "
+                               "`e mail` string")
     out = (
         T.apply_mask(df, [
             {"field": "redact", "strategy": "redact", "preserve_length": True},
             {"field": "card", "strategy": "partial", "show_first": 0, "show_last": 4},
+            # a field name that needs quoting in SQL text
+            {"field": "e mail", "strategy": "partial", "show_first": 1, "show_last": 3},
             {"field": "email", "strategy": "hash"},
             {"field": "tok", "strategy": "tokenize", "salt": "s1"},
             {"field": "nul", "strategy": "nullify"},
@@ -60,6 +64,7 @@ def test_mask_strategies(spark):
     ).first()
     assert out.redact == "*" * len("secret-value")
     assert out.card == "*" * 12 + "1111"
+    assert out["e mail"] == "a***org"
     assert len(out.email) == 64 and out.email != "x@y.com"
     assert out.tok.startswith("tok_")
     assert out.nul is None
