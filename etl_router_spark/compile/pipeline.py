@@ -8,6 +8,11 @@ fan-in becomes unionByName, a batch fan-out is persisted until
 ``run()`` ends so its sinks share one scan, ``compile_stages`` turns each
 route-mode side into its DLQ frame (``dlq/src/record.rs:96-180``) once,
 and ``write_outputs`` is the one write path for sinks and DLQ frames.
+It overlaps independent writes, like the reference's fan-out
+(``engine.rs:324-352``): one concurrent chain per file path, one for the
+other sinks and one for the DLQ, each in the given order. Every chain
+finishes before the first failing output's error is raised, so a failed
+run may have written its other targets.
 
 Catalyst then owns what the reference never had: predicate pushdown,
 column pruning, join planning, AQE. Whole-stage codegen replaces the
@@ -24,10 +29,12 @@ fan-out runner can replay the sub-DAG below a fan-out stage inside one
 
 from __future__ import annotations
 
+import contextlib
 import threading
+from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
-from pyspark import StorageLevel
+from pyspark import StorageLevel, inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -38,7 +45,11 @@ from etl_router_spark.compile import transforms as T
 from etl_router_spark.model.manifest import FieldMapping, Pipeline, Stage, StageType
 from etl_router_spark.model.validation import validate_pipeline
 from etl_router_spark.sources.registry import read_source
-from etl_router_spark.sinks.registry import write_sink
+from etl_router_spark.sinks.registry import (
+    file_sink_path,
+    same_file_target,
+    write_sink,
+)
 
 
 def _mappings(cfg: dict[str, Any]) -> list[FieldMapping]:
@@ -1353,17 +1364,74 @@ _DLQ_WRITE_LOCK = threading.Lock()
 def write_outputs(pipeline: Pipeline, sink_frames: dict[str, DataFrame],
                   dlq_frames: dict[str, DataFrame],
                   dlq_sink: dict[str, Any] | None = None) -> None:
-    """Write every sink frame, then every DLQ frame as given to
-    ``dlq_sink or pipeline.dlq`` (DLQ frames are dropped when neither
-    is declared). The one write path of batch ``run()`` and of the
-    streaming ``foreachBatch`` writers."""
-    for sid, df in sink_frames.items():
-        write_sink(df, pipeline.stages[sid].config)
-    dlq_cfg = dlq_sink or pipeline.dlq
-    if dlq_cfg and dlq_frames:
-        with _DLQ_WRITE_LOCK:
-            for df in dlq_frames.values():
-                write_sink(df, dlq_cfg)
+    """Write every sink frame and every DLQ frame (to ``dlq_sink or
+    pipeline.dlq``; dropped when neither is declared). The one write
+    path of batch ``run()`` and of the streaming ``foreachBatch``
+    writers.
+
+    The writes run as concurrent chains: one per file, s3 or gcs
+    directory (same or nested paths share one), one for all other
+    sinks, one for all DLQ frames (holding ``_DLQ_WRITE_LOCK``, and
+    joined by any sink on the DLQ's directory). A chain keeps the
+    given order; its first failure ends it. Every chain finishes, then
+    the error of the first failing output in the given order is raised,
+    so a failed call may have written the other targets."""
+    _write_concurrently([(pipeline, sink_frames, dlq_frames, dlq_sink)])
+
+
+def _write_concurrently(
+    members: list[tuple[Pipeline, dict[str, DataFrame],
+                        dict[str, DataFrame], dict[str, Any] | None]],
+) -> None:
+    """``write_outputs`` over several pipelines' outputs at once (a
+    fused streaming group writes every member in one step)."""
+    outputs = []
+    for pipeline, sink_frames, dlq_frames, dlq_sink in members:
+        outputs += [(df, pipeline.stages[sid].config, False)
+                    for sid, df in sink_frames.items()]
+        dlq_cfg = dlq_sink or pipeline.dlq
+        if dlq_cfg:
+            outputs += [(df, dlq_cfg, True) for df in dlq_frames.values()]
+
+    # outputs i and j share a chain: both DLQ frames, both non-file
+    # sinks, or the same or nested directories
+    def one_chain(i: int, j: int) -> bool:
+        (_, a, dlq_a), (_, b, dlq_b) = outputs[i], outputs[j]
+        if dlq_a and dlq_b:
+            return True
+        if file_sink_path(a) is None and file_sink_path(b) is None:
+            return not (dlq_a or dlq_b)
+        return same_file_target(a, b)
+
+    chains: list[list[int]] = []
+    for i in range(len(outputs)):
+        hit = [c for c in chains if any(one_chain(i, j) for j in c)]
+        chains = [c for c in chains if c not in hit] + [sorted(sum(hit, [i]))]
+
+    def run_chain(idxs: list[int]) -> tuple[int, Exception] | None:
+        dlq = any(outputs[i][2] for i in idxs)
+        with _DLQ_WRITE_LOCK if dlq else contextlib.nullcontext():
+            for i in idxs:
+                try:
+                    write_sink(outputs[i][0], outputs[i][1])
+                except Exception as e:
+                    return i, e
+        return None
+
+    if len(chains) <= 1:
+        failed = [run_chain(idxs) for idxs in chains]
+    else:
+        # each chain gets its own copy of the caller's local properties
+        # (job group, scheduler pool, a streaming query's ids): a shared
+        # copy would let the threads overwrite each other's SQL execution id
+        spark = outputs[0][0].sparkSession
+        with ThreadPoolExecutor(len(chains)) as pool:
+            futures = [pool.submit(inheritable_thread_target(spark)(run_chain),
+                                   idxs) for idxs in chains]
+        failed = [f.result() for f in futures]
+    failed = [f for f in failed if f is not None]
+    if failed:
+        raise min(failed, key=lambda f: f[0])[1]
 
 
 class CompiledPipeline:

@@ -19,6 +19,7 @@ atomic per job (``proto/sink.proto:26-30``).
 
 from __future__ import annotations
 
+import os
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -33,12 +34,41 @@ def _sink_type(cfg: dict[str, Any]) -> str:
     return (cfg.get("sink_type") or cfg.get("type") or "file").lower()
 
 
+def file_sink_path(cfg: dict[str, Any]) -> str | None:
+    """The path a file, s3 or gcs sink writes to; None for other sink
+    types."""
+    stype = _sink_type(cfg)
+    if stype not in _FILE_SINKS:
+        return None
+    return cfg.get("path") if stype == "file" else object_store_uri(stype, cfg)
+
+
+def _target(cfg: dict[str, Any]) -> str | None:
+    path = file_sink_path(cfg)
+    if path is None:
+        return None
+    if path.startswith("file:"):
+        path = "/" + path[len("file:"):].lstrip("/")
+    if "://" not in path:
+        path = os.path.abspath(path)
+    return path.rstrip("/")
+
+
+def same_file_target(a: dict[str, Any], b: dict[str, Any]) -> bool:
+    """Whether two file, s3 or gcs sink configs write the same or nested
+    directories (``out`` and ``out/``, ``file:/x`` and ``/x``, ``/x``
+    and ``/x/y``)."""
+    ta, tb = _target(a), _target(b)
+    if ta is None or tb is None:
+        return False
+    return ta == tb or ta.startswith(tb + "/") or tb.startswith(ta + "/")
+
+
 def _file_sink(cfg: dict[str, Any], writer):
     """A file, s3 or gcs sink config -> (format, path, ``writer`` with the
     format and options set); ``writer`` is ``df.write`` or
     ``df.writeStream``."""
-    stype = _sink_type(cfg)
-    path = cfg.get("path") if stype == "file" else object_store_uri(stype, cfg)
+    path = file_sink_path(cfg)
     fmt = (cfg.get("format") or "parquet").lower()
     if fmt == "lines":  # reference's line-delimited text (types.rs:280)
         fmt = "text"
@@ -54,7 +84,7 @@ def _file_sink(cfg: dict[str, Any], writer):
     return fmt, path, writer
 
 
-def _upsert_file_sink(df: DataFrame, cfg: dict[str, Any], fmt: str, path: str) -> None:
+def _upsert_file_sink(df: DataFrame, cfg: dict[str, Any]) -> None:
     """mode=upsert, MERGE without a table format: merge ``df`` into the
     dataset at ``path`` keyed on ``merge_keys`` (latest-by-``order_by``
     wins; optional ``op_col`` tombstones deletes; changed keys cost one
@@ -69,6 +99,7 @@ def _upsert_file_sink(df: DataFrame, cfg: dict[str, Any], fmt: str, path: str) -
     externally, or use a table format (Delta/Iceberg MERGE) where
     optimistic concurrency is required."""
     spark = df.sparkSession
+    fmt, path, _ = _file_sink(cfg, df.write)
     merge_keys = cfg.get("merge_keys")
     order_by = cfg.get("order_by")
     if not merge_keys or not order_by:
@@ -78,19 +109,25 @@ def _upsert_file_sink(df: DataFrame, cfg: dict[str, Any], fmt: str, path: str) -
     jvm = spark._jvm
     fs_path = jvm.org.apache.hadoop.fs.Path(path)
     fs = fs_path.getFileSystem(spark._jsc.hadoopConfiguration())
+    # a new target's columns: the batch's, in its order, without op_col
+    target = df.drop(cfg["op_col"]) if cfg.get("op_col") else df
     if not fs.exists(fs_path):
         # bootstrap: apply the batch against an empty target — latest
-        # per key, deletes tombstoned; target schema excludes op_col
+        # per key, deletes tombstoned
         from etl_router_spark.functions.cdc import cdc_apply
 
         df_out = cdc_apply(
             df, list(merge_keys), list(order_by), op_col=cfg.get("op_col")
         )
-        if cfg.get("op_col"):
-            df_out = df_out.drop(cfg["op_col"])
-        df_out.write.format(fmt).save(path)
+        _file_sink(cfg, df_out.select(*target.columns).write)[2].save(path)
         return
-    existing = spark.read.format(fmt).load(path)
+    reader = spark.read.format(fmt)
+    if fmt == "csv":
+        # csv carries no types: read back with the batch's schema, which
+        # applies by position, so a header in another order must fail
+        reader = (reader.option("header", "true")
+                  .option("enforceSchema", "false").schema(target.schema))
+    existing = reader.load(path)
     merged = cdc_snapshot_merge(
         existing,
         df.select(*existing.columns,
@@ -104,7 +141,9 @@ def _upsert_file_sink(df: DataFrame, cfg: dict[str, Any], fmt: str, path: str) -
     # move old aside, move new in, delete old; rollback on failure
     tmp = path.rstrip("/") + ".__upsert_tmp"
     old = path.rstrip("/") + ".__upsert_old"
-    merged.write.format(fmt).mode("overwrite").save(tmp)
+    # (the merge's anti join moves the keys first)
+    _file_sink(cfg, merged.select(*existing.columns).write)[2] \
+        .mode("overwrite").save(tmp)
     jtmp = jvm.org.apache.hadoop.fs.Path(tmp)
     jold = jvm.org.apache.hadoop.fs.Path(old)
     if not fs.rename(fs_path, jold):
@@ -119,10 +158,10 @@ def write_sink(df: DataFrame, cfg: dict[str, Any]) -> None:
     """Batch write dispatch on sink_type/format."""
     stype = _sink_type(cfg)
     if stype in _FILE_SINKS:
-        fmt, path, writer = _file_sink(cfg, df.write)
         if (cfg.get("mode") or "").lower() == "upsert":
-            _upsert_file_sink(df, cfg, fmt, path)
+            _upsert_file_sink(df, cfg)
             return
+        _, path, writer = _file_sink(cfg, df.write)
         writer = writer.mode(cfg.get("mode", "append"))
         # backfill surface: overwrite ONLY the partitions present in
         # this batch (per-writer option — no session conf mutation);

@@ -32,6 +32,9 @@ Semantics and caveats, deliberately matching the fan-out writer in
   side to EVERY member, keyed by the member's own stage id — the same
   contract ``compile_group`` enforces in batch (r11 fix, commit
   3517453).
+- Members that share a DLQ directory (a named DLQ sink) write it per
+  epoch under the DLQ lock: an individually started member gets that
+  DLQ as its ``dlq_sink`` override, so no native DLQ query claims it.
 """
 
 from __future__ import annotations
@@ -43,11 +46,12 @@ from pyspark.sql import DataFrame, SparkSession
 from etl_router_spark.compile.optimizer import OptimizedGroup, optimize
 from etl_router_spark.compile.pipeline import (
     _compile_stage_sides,
+    _write_concurrently,
     compile_pipeline,
     compile_stages,
-    write_outputs,
 )
 from etl_router_spark.model.manifest import Pipeline
+from etl_router_spark.sinks.registry import same_file_target
 from etl_router_spark.streaming.runner import (
     DEFAULT_TRIGGER,
     StreamingExecution,
@@ -63,7 +67,8 @@ def _make_group_writer(
     dlq_sink: dict[str, Any] | None,
     marker_dir: str | None,
 ):
-    """The per-epoch replay: shared prefix once, then every tail."""
+    """The per-epoch replay: shared prefix once, then every tail; all
+    members' sinks and DLQ frames are written in one concurrent step."""
     rep = g.pipelines[0]
     rep_chain = g.chains[rep.id]
     src_id = rep_chain[0]
@@ -77,14 +82,16 @@ def _make_group_writer(
         if prefix_ids:
             shared_df.persist()
         try:
+            members = []
             for p in g.pipelines:
                 chain = g.chains[p.id]
                 sink_frames, dlq_frames = compile_stages(
                     spark, p, chain[1 + g.prefix_len:],
                     {chain[g.prefix_len]: shared_df}, streaming=False)
-                write_outputs(p, sink_frames,
-                              {**g.member_dlq(p, shared_sides), **dlq_frames},
-                              dlq_sink)
+                members.append((p, sink_frames,
+                                {**g.member_dlq(p, shared_sides), **dlq_frames},
+                                dlq_sink))
+            _write_concurrently(members)
         finally:
             if prefix_ids:
                 shared_df.unpersist()
@@ -105,7 +112,8 @@ def run_streaming_group(
     into ONE query per group (one source scan + one prefix compute per
     epoch for all members). Ungroupable pipelines (singleton groups,
     non-linear DAGs) start individually through ``run_streaming`` —
-    identical behavior to running them one by one.
+    identical behavior to running them one by one, except that a DLQ
+    directory another member shares is written per epoch.
 
     Members whose TAIL contains a stateful stage
     (``runner._stateful_stage``) are started individually, with a
@@ -127,9 +135,15 @@ def run_streaming_group(
     def run_individually(p: Pipeline) -> None:
         compiled = compile_pipeline(
             spark, p, streaming=True, source_overrides=source_overrides)
+        # a DLQ another pipeline here writes too is passed as an
+        # override, so run_streaming starts no native query on it
+        shared = p.dlq and any(q is not p and q.dlq
+                               and same_file_target(p.dlq, q.dlq)
+                               for q in pipelines)
         ex = run_streaming(
             compiled, f"{checkpoint_root}/{p.id}", trigger=trigger,
-            dlq_sink=dlq_sink, exactly_once=exactly_once)
+            dlq_sink=dlq_sink or (p.dlq if shared else None),
+            exactly_once=exactly_once)
         queries.update({f"{p.id}:{k}": q for k, q in ex.queries.items()})
 
     for gi, g in enumerate(dag.groups):

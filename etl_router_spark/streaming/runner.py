@@ -25,11 +25,15 @@ Delivery: sinks outside the shared writers start through
 append-mode file, s3 and gcs sinks (config ``mode`` append or unset)
 use Spark's exactly-once file sink; upsert/overwrite, update output mode
 and other sink types are written per epoch by ``write_sink``, as the
-fan-out and fan-in writers write theirs. Per-epoch writes are
-at-least-once on replay — pair with idempotent sinks, dedupe on
-``idempotency_key`` downstream (``proto/sink.proto:26-30``) or pass
-``exactly_once=True``. A shared writer replays its stages as a batch
-plan per epoch, so none of them may keep state across epochs.
+fan-out and fan-in writers write theirs. A shared writer's epoch
+writes all its sinks and DLQ frames through ``write_outputs``:
+concurrently across targets, in order per target. When one write fails,
+the others still finish, the query fails, and the epoch (never marked)
+is replayed. Per-epoch writes are therefore at-least-once — pair with
+idempotent sinks, dedupe on ``idempotency_key`` downstream
+(``proto/sink.proto:26-30``) or pass ``exactly_once=True``. A shared
+writer replays its stages as a batch plan per epoch, so none of them
+may keep state across epochs.
 """
 
 from __future__ import annotations
@@ -204,10 +208,15 @@ def run_streaming(
     already carries a marker is skipped — CommitMarker semantics
     (``proto/sink.proto:67-70``).
 
-    A DLQ gets Spark's native file sink only when one query is its sole
-    writer: the sink's ``_spark_metadata`` log admits one query and
-    hides files it did not write. Otherwise every DLQ frame is written
-    per epoch through ``write_outputs`` (at-least-once on replay).
+    A DLQ gets Spark's native file sink only when ``dlq_sink`` is None
+    and one query of this pipeline is its sole writer: the sink's
+    ``_spark_metadata`` log admits one query and hides files it did not
+    write, and a ``dlq_sink`` override may be shared with other
+    pipelines. Otherwise every DLQ frame is written per epoch through
+    ``write_outputs``, under its DLQ lock (at-least-once on replay).
+    A caller that starts several pipelines whose manifests declare one
+    DLQ directory passes it as ``dlq_sink`` (``run_streaming_group``
+    does).
     """
     if not compiled.streaming:
         raise ValueError("pipeline was compiled with streaming=False")
@@ -367,8 +376,9 @@ def run_streaming(
         own = {sid: df for sid, df in compiled.dlq_frames.items()
                if sid not in handled and df.isStreaming}
         # a route fan-in writer sends late rows to the DLQ too
-        sole = len(own) == 1 and "route" not in late_fanins.values() and not (
-            handled & compiled.dlq_frames.keys())
+        sole = (dlq_sink is None and len(own) == 1
+                and "route" not in late_fanins.values()
+                and not handled & compiled.dlq_frames.keys())
         for sid, df in own.items():
             ckpt = f"{checkpoint_root}/dlq_{sid}"
             name = f"{pipeline.name}_dlq_{sid}".replace("-", "_")

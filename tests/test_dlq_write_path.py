@@ -160,3 +160,47 @@ def test_fanin_late_policy_feeds_route_validate(spark, tmp_path):
         (4, "chk", "validate", "VALIDATION", "fanin-route"),
         (5, "both", "transform", "VALIDATION", "fanin-route"),
     ]
+
+
+@pytest.mark.parametrize("declared", ["override", "manifest"])
+def test_shared_dlq_collects_every_pipeline(spark, tmp_path, declared):
+    """A DLQ directory several pipelines write gets no native file-sink
+    query (whose metadata log admits one query): two pipelines that do
+    not fuse, each with a route-mode validate, both land their invalid
+    rows in the one DLQ, whether it is the ``dlq_sink`` override or the
+    DLQ both manifests declare."""
+    from etl_router_spark.streaming.group import run_streaming_group
+
+    dlq = {"sink_type": "file", "format": "parquet",
+           "path": str(tmp_path / "dlq")}
+    schema = "event_id bigint, user_id bigint"
+    pipelines = []
+    for name, rows in (("left", [(1, 10), (2, None)]),
+                       ("right", [(3, None), (4, 40), (5, None)])):
+        src = str(tmp_path / f"in_{name}")
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
+        pipelines.append(parse_manifest_dict({
+            "apiVersion": "etl.dev/v1", "kind": "Pipeline",
+            "metadata": {"name": name},
+            "spec": {**({"dlq": dict(dlq)} if declared == "manifest" else {}),
+                     "stages": [
+                {"id": "src", "type": "source",
+                 "config": {"source_type": "file", "format": "parquet",
+                            "path": src}},
+                {"id": "chk", "type": "transform",
+                 "config": {"transform_type": "validate", "on_invalid": "route",
+                            "rules": [{"field": "user_id", "required": True}]}},
+                {"id": "out", "type": "sink",
+                 "config": {"sink_type": "file", "format": "parquet",
+                            "path": str(tmp_path / f"out_{name}")}},
+            ], "edges": [{"from": "src", "to": "chk"},
+                         {"from": "chk", "to": "out"}]},
+        }))
+    run_streaming_group(
+        spark, pipelines, str(tmp_path / "ck"), trigger={"availableNow": True},
+        dlq_sink=dlq if declared == "override" else None,
+    ).await_termination(180)
+
+    got = sorted((r.event_id, r._dlq_pipeline, r._dlq_failed_stage)
+                 for r in spark.read.parquet(dlq["path"]).collect())
+    assert got == [(2, "left", "chk"), (3, "right", "chk"), (5, "right", "chk")]

@@ -5,6 +5,7 @@ in streaming (``run_streaming``), because both decode the config through
 
 from __future__ import annotations
 
+import gzip
 import os
 import re
 
@@ -89,3 +90,44 @@ def test_file_sink_batch_and_streaming_agree(spark, tmp_path, case):
             for f in _data_files(out):
                 with open(f) as fh:
                     assert fh.readline().strip() == "user_id,ts,name"
+
+
+UPSERT = {"mode": "upsert", "merge_keys": ["user_id"], "order_by": ["ts"]}
+UPSERT_CASES = {
+    "csv_gzip": ({"format": "csv", "compression": "gzip", **UPSERT}, None),
+    # the merge key is not the first column: a csv target's columns must
+    # keep the batch's order, since the read-back schema applies by position
+    "csv_key_last": ({"format": "csv", **UPSERT}, ["ts", "name", "user_id"]),
+    "partition_by": ({"format": "parquet", "partition_by": ["user_id"],
+                      **UPSERT}, None),
+}
+
+
+@pytest.mark.parametrize("case", list(UPSERT_CASES))
+def test_upsert_file_sink_keeps_decoded_options(spark, tmp_path, case):
+    """An upsert sink writes its first batch and every merge with the
+    options a plain file sink decodes (csv header, compression,
+    ``partition_by``), and reads the existing dataset back with them."""
+    sink, fields = UPSERT_CASES[case]
+    out = str(tmp_path / "out")
+    for i, rows in enumerate((ROWS[:6], ROWS[6:])):  # ts 1-2, then ts 3
+        src = str(tmp_path / f"in{i}")
+        spark.createDataFrame(rows, SCHEMA).coalesce(1).write.parquet(src)
+        compile_pipeline(spark, _manifest(src, out, sink, fields)).run()
+
+    latest = sorted((str(u), "3", f"u{u}-3") for u in range(1, 4))
+    fmt = sink["format"]
+    df = (spark.read.option("header", True).csv(out) if fmt == "csv"
+          else spark.read.parquet(out))
+    assert sorted(tuple(str(r[c]) for c in ("user_id", "ts", "name"))
+                  for r in df.collect()) == latest
+    if fmt == "csv":
+        header = ",".join(fields or ["user_id", "ts", "name"])
+        assert _suffixes(out) == (
+            {".csv.gz"} if sink.get("compression") else {".csv"})
+        for f in _data_files(out):
+            with (gzip.open(f, "rt") if f.endswith(".gz") else open(f)) as fh:
+                assert fh.readline().strip() == header
+    else:
+        assert sorted(d for d in os.listdir(out) if d.startswith("user_id=")) \
+            == ["user_id=1", "user_id=2", "user_id=3"]
