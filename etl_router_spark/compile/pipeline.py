@@ -42,6 +42,7 @@ from etl_router_spark.compile.conditions import compile_condition
 from etl_router_spark.compile.fan import apply_fan_in
 from etl_router_spark.compile.lookup import apply_lookup
 from etl_router_spark.compile import transforms as T
+from etl_router_spark.compile.table import TRANSFORMS
 from etl_router_spark.model.manifest import FieldMapping, Pipeline, Stage, StageType
 from etl_router_spark.model.validation import validate_pipeline
 from etl_router_spark.sources.registry import read_source
@@ -54,25 +55,6 @@ from etl_router_spark.sinks.registry import (
 
 def _mappings(cfg: dict[str, Any]) -> list[FieldMapping]:
     return [FieldMapping.from_dict(m) for m in cfg.get("mappings", [])]
-
-
-def _index_param_norm(key: str, value: Any) -> Any:
-    """Normalize one persisted-index parameter for conflict checks.
-
-    The integer params compare as ints so numerically-equal YAML
-    spellings (``num_hashes: 8.0``, quoted ``' 8'``) don't raise a
-    spurious compile error (r14 ADVICE: the blanket str() compare was
-    a tolerance regression vs the old int() compare); ``hash_family``
-    stays a string — ``'h60'`` vs ``'xxhash64'`` has no numeric form.
-    """
-    if key == "hash_family":
-        return str(value)
-    return int(value)
-
-
-# one-time (per process) reproducibility warning for dsir_sample
-# manifests that omit hash_family — see the stage comment below
-_DSIR_FAMILY_WARNED = False
 
 
 def _with_watermark(df: DataFrame, wm_cfg: dict[str, Any] | None,
@@ -96,7 +78,7 @@ def _with_watermark(df: DataFrame, wm_cfg: dict[str, Any] | None,
 def apply_transform_stage(df: DataFrame, stage: Stage, spark: SparkSession,
                           limits: dict[str, Any] | None = None
                           ) -> DataFrame | tuple[DataFrame, DataFrame]:
-    """Dispatch one transform stage config to the operator library.
+    """Compile one transform stage through its ``TRANSFORMS`` spec.
 
     Route-mode validate and service stages return ``(main, failing)``.
 
@@ -109,1022 +91,9 @@ def apply_transform_stage(df: DataFrame, stage: Stage, spark: SparkSession,
     """
     cfg = {**limits, **stage.config} if limits else stage.config
     tt = stage.transform_type
-    if tt == "filter":
-        return T.apply_filter(df, cfg["condition"], negate=bool(cfg.get("negate", False)))
-    if tt == "map":
-        return T.apply_map(df, _mappings(cfg), drop_unmapped=bool(cfg.get("drop_unmapped", False)))
-    if tt == "project":
-        return T.apply_project(df, cfg["fields"], exclude=bool(cfg.get("exclude", False)))
-    if tt == "rename":
-        return T.apply_rename(df, cfg["renames"])
-    if tt == "cast":
-        return T.apply_cast(df, cfg["casts"])
-    if tt == "mask":
-        return T.apply_mask(df, cfg["rules"])
-    if tt == "validate":
-        return T.apply_validate(df, cfg.get("rules", []), cfg.get("on_invalid", "drop"),
-                                cfg.get("tag_field", "valid"),
-                                schema=cfg.get("schema"),
-                                schema_registry_url=cfg.get("schema_registry_url"),
-                                subject=cfg.get("subject"))
-    if tt == "flatmap":
-        return T.apply_flatmap(df, cfg["field"], cfg.get("target_field"),
-                               keep_parent=bool(cfg.get("keep_parent", False)),
-                               outer=bool(cfg.get("outer", False)))
-    if tt == "dedupe":
-        return T.apply_dedupe(df, cfg["key_fields"], cfg.get("keep", "first"),
-                              cfg.get("order_field", "event_time"),
-                              cfg.get("tiebreak_fields"),
-                              within_watermark=bool(cfg.get("within_watermark", False)),
-                              window=cfg.get("window"))
-    if tt == "ratelimit":
-        if cfg.get("on_exceed") == "delay" and df.isStreaming:
-            # delay = backpressure, not row dropping (types.rs:592-601):
-            # enforced at the SOURCE via per-trigger intake caps
-            # (delay_pacing_overrides), so the stage itself passes through
-            return df
-        return T.apply_ratelimit(df, cfg["key_fields"], int(cfg["max_rate"]),
-                                 cfg.get("window", "1 hour"), cfg.get("ts_field", "event_time"),
-                                 cfg.get("on_exceed", "drop"), cfg.get("tiebreak_fields"))
-    if tt == "aggregate":
-        return T.apply_aggregate(df, cfg.get("group_by", []), cfg["aggregations"],
-                                 cfg.get("window"), cfg.get("ts_field", "event_time"))
-    if tt == "sessionize":
-        return T.apply_sessionize(df, cfg["key_fields"], cfg["gap"], cfg.get("aggregations"),
-                                  cfg.get("ts_field", "event_time"), cfg.get("max_duration"),
-                                  emit=cfg.get("emit", "on_close"))
-    if tt == "service":
-        from etl_router_spark.functions.transform_service import apply_transform_service
-
-        return apply_transform_service(
-            df,
-            cfg.get("transform") or cfg["transform_id"],
-            cfg["output_schema"],
-            config=cfg.get("transform_config"),
-            on_error=cfg.get("on_error", "route"),
-        )
-    llm = _apply_llm_transform(df, tt, cfg)
-    if llm is not None:
-        return llm
-    raise ValueError(f"stage {stage.id!r}: transform {tt!r} not dispatchable in a linear DAG")
-
-
-def _near_dup_pairs(df: DataFrame, cfg: dict[str, Any], tt: str) -> DataFrame:
-    """Shared pair-generation config for the cluster-consuming stages
-    (``dedup_cluster``, ``leakage_splits``): method simhash|minhash
-    with the family's usual knobs, salted + budget-capped. Cluster
-    consumers tolerate salting's sub-bucket pair loss (transitive
-    closure re-links what the cap splits), so salt_cap defaults ON
-    here, unlike semantic_dedup."""
-    from etl_router_spark.functions.dedup import minhash_lsh_pairs, simhash_pairs
-
-    method = cfg.get("method", "simhash")
-    id_col = cfg.get("id_field", "doc_id")
-    text_col = cfg.get("text_field", "text")
-    mc = cfg.get("max_candidates")
-    mc = int(mc) if mc is not None else None
-    salt_cap = cfg.get("salt_cap", 512)
-    if method == "simhash":
-        # h60 provides 60 usable bits, so 60 is the widest valid default
-        return simhash_pairs(df, id_col=id_col, text_col=text_col,
-                             max_hamming=int(cfg.get("max_hamming", 3)),
-                             bits=int(cfg.get("bits", 60)),
-                             salt_cap=salt_cap, max_candidates=mc)
-    if method == "minhash":
-        return minhash_lsh_pairs(df, id_col=id_col, text_col=text_col,
-                                 num_hashes=int(cfg.get("num_hashes", 128)),
-                                 bands=int(cfg.get("bands", 32)),
-                                 threshold=float(cfg.get("threshold", 0.8)),
-                                 salt_cap=salt_cap, max_candidates=mc,
-                                 # h60 stays the manifest default for the
-                                 # whole MinHash stack (unlike bloom/dsir):
-                                 # signatures feed PERSISTED indexes, and a
-                                 # default flip would silently mis-key
-                                 # every pre-existing index
-                                 hash_family=cfg.get("hash_family", "h60"))
-    raise ValueError(f"{tt}: unknown method {method!r}")
-
-
-def _apply_llm_transform(df: DataFrame, tt: str, cfg: dict[str, Any]) -> DataFrame | None:
-    """The large-scale data-pipeline operators as first-class
-    transform_types (SURVEY §7.3 M6). Returns None for unknown types."""
-    if tt == "dedup_exact":
-        from etl_router_spark.functions.dedup import exact_dedup
-
-        return exact_dedup(df, cfg.get("text_field", "text"),
-                           cfg.get("id_field", "doc_id"),
-                           normalize=bool(cfg.get("normalize", True)))
-    if tt == "dedup_index_build":
-        # persistable LSH index of the input corpus; point a file sink
-        # at this stage (partition by a short band-key prefix or bucket
-        # by band_key — see functions/dedup.py:minhash_index)
-        from etl_router_spark.functions.dedup import minhash_index
-
-        return minhash_index(df, id_col=cfg.get("id_field", "doc_id"),
-                             text_col=cfg.get("text_field", "text"),
-                             num_hashes=int(cfg.get("num_hashes", 16)),
-                             bands=int(cfg.get("bands", 4)),
-                             shingle_n=int(cfg.get("shingle_n", 3)),
-                             hash_family=cfg.get("hash_family", "h60"))
-    if tt == "dedup_index_probe":
-        # incremental fuzzy dedup: keep input rows with no near-dup in
-        # the persisted index at index_path. The index's persisted
-        # (num_hashes, bands, shingle_n) are authoritative when
-        # present — conflicting overrides are compile errors (see
-        # decontaminate_fuzzy's benchmark_index for why: a mismatch is
-        # silent non-detection, not a loud failure), omitted keys
-        # adopt the index's.
-        from etl_router_spark.functions.dedup import (
-            dedup_against_minhash_index,
-            minhash_index_params,
-        )
-
-        idx = df.sparkSession.read.parquet(cfg["index_path"])
-        nh, bd, sn = (int(cfg.get("num_hashes", 16)),
-                      int(cfg.get("bands", 4)),
-                      int(cfg.get("shingle_n", 3)))
-        hf = cfg.get("hash_family", "h60")
-        built = minhash_index_params(idx)
-        if built is not None:
-            for key in ("num_hashes", "bands", "shingle_n", "hash_family"):
-                if key in cfg and (_index_param_norm(key, cfg[key])
-                                   != _index_param_norm(key, built[key])):
-                    raise ValueError(
-                        f"dedup_index_probe: {key}={cfg[key]!r} conflicts "
-                        f"with the persisted index's {built[key]!r} — "
-                        "probe params must match the build exactly; drop "
-                        "the key to use the index's own")
-            nh, bd, sn, hf = (built["num_hashes"], built["bands"],
-                              built["shingle_n"], built["hash_family"])
-        return dedup_against_minhash_index(
-            df, idx, id_col=cfg.get("id_field", "doc_id"),
-            text_col=cfg.get("text_field", "text"),
-            num_hashes=nh, bands=bd, shingle_n=sn,
-            threshold=float(cfg.get("threshold", 0.5)),
-            hash_family=hf)
-    # optional pre-flight candidate budget (pair-generation types):
-    # fail fast with CandidateBudgetExceeded instead of launching a
-    # quadratic pair shuffle on a saturated corpus
-    mc = cfg.get("max_candidates")
-    mc = int(mc) if mc is not None else None
-    if tt == "dedup_minhash":
-        from etl_router_spark.functions.dedup import minhash_lsh_pairs
-
-        return minhash_lsh_pairs(df, num_hashes=int(cfg.get("num_hashes", 128)),
-                                 bands=int(cfg.get("bands", 32)),
-                                 threshold=float(cfg.get("threshold", 0.8)),
-                                 text_col=cfg.get("text_field", "text"),
-                                 id_col=cfg.get("id_field", "doc_id"),
-                                 salt_cap=cfg.get("salt_cap", 512),
-                                 max_candidates=mc)
-    if tt == "dedup_ngram":
-        from etl_router_spark.functions.dedup import ngram_jaccard_pairs
-
-        return ngram_jaccard_pairs(df, id_col=cfg.get("id_field", "doc_id"),
-                                   text_col=cfg.get("text_field", "text"),
-                                   n=int(cfg.get("n", 3)),
-                                   threshold=float(cfg.get("threshold", 0.8)),
-                                   max_df=cfg.get("max_df"),
-                                   pair_chunk=int(cfg.get("pair_chunk", 2048)),
-                                   max_candidates=mc)
-    if tt == "dedup_simhash":
-        from etl_router_spark.functions.dedup import simhash_pairs
-
-        # h60 provides 60 usable bits, so 60 is the widest valid default
-        return simhash_pairs(df, max_hamming=int(cfg.get("max_hamming", 3)),
-                             bits=int(cfg.get("bits", 60)),
-                             text_col=cfg.get("text_field", "text"),
-                             id_col=cfg.get("id_field", "doc_id"),
-                             salt_cap=cfg.get("salt_cap", 512),
-                             max_candidates=mc)
-    if tt == "dedup_embedding":
-        if cfg.get("method") == "lsh":
-            from etl_router_spark.functions.dedup import embedding_lsh_pairs
-
-            return embedding_lsh_pairs(df, dim=int(cfg["dim"]),
-                                       id_col=cfg.get("id_field", "vec_id"),
-                                       vec_col=cfg.get("vec_field", "embedding"),
-                                       threshold=float(cfg.get("threshold", 0.95)),
-                                       planes=(cfg["planes"]
-                                               if cfg.get("planes") == "auto"
-                                               else int(cfg.get("planes", 8))),
-                                       tables=int(cfg.get("tables", 2)),
-                                       salt_cap=cfg.get("salt_cap", 512),
-                                       max_candidates=mc)
-        if cfg.get("method") == "semantic":
-            from etl_router_spark.functions.dedup import semantic_dedup
-
-            # salt_cap has NO implicit default here: cosine is not
-            # transitive, so salting loses recall for this operator's
-            # whole-cell contract (see semantic_dedup docstring) —
-            # only a declared stage/spec.limits value opts in
-            return semantic_dedup(df, id_col=cfg.get("id_field", "vec_id"),
-                                  vec_col=cfg.get("vec_field", "embedding"),
-                                  threshold=float(cfg.get("threshold", 0.95)),
-                                  n_cells=(cfg["n_cells"]
-                                           if cfg.get("n_cells") == "auto"
-                                           else int(cfg.get("n_cells", 8))),
-                                  salt_cap=cfg.get("salt_cap"),
-                                  max_candidates=mc,
-                                  target_occupancy=int(
-                                      cfg.get("target_occupancy", 256)))
-        from etl_router_spark.functions.dedup import embedding_cosine_pairs
-
-        return embedding_cosine_pairs(df, id_col=cfg.get("id_field", "vec_id"),
-                                      vec_col=cfg.get("vec_field", "embedding"),
-                                      threshold=float(cfg.get("threshold", 0.95)))
-    if tt == "similarity_topk":
-        from etl_router_spark.compile.conditions import compile_condition
-        from etl_router_spark.functions.similarity import brute_force_topk
-        from etl_router_spark.model.conditions import Condition
-
-        queries = df
-        qcond = cfg.get("query_condition")
-        if qcond is not None:
-            if isinstance(qcond, dict):
-                qcond = Condition.from_dict(qcond)
-            queries = df.filter(compile_condition(qcond))
-        return brute_force_topk(queries, df, k=int(cfg.get("k", 5)),
-                                id_col=cfg.get("id_field", "vec_id"),
-                                vec_col=cfg.get("vec_field", "embedding"))
-    if tt in ("pq_encode", "pq_topk"):
-        # product quantization (functions/pq.py): codebooks come from
-        # explicit config, training over the input frame, or the
-        # deterministic md5-derived set — in that precedence order
-        from etl_router_spark.functions.pq import (
-            deterministic_codebooks,
-            pq_adc_topk,
-            pq_encode,
-            pq_train,
-        )
-
-        m = int(cfg.get("m", 4))
-        kc = int(cfg.get("k_centroids", 16))
-        books = cfg.get("codebooks")
-        if books is None and cfg.get("index_path") and tt == "pq_topk":
-            pass  # sidecar codebooks win below — no dim needed
-        elif books is None and cfg.get("train"):
-            books = pq_train(df, m=m, k=kc,
-                             vec_col=cfg.get("vec_field", "embedding"),
-                             id_col=cfg.get("id_field", "vec_id"),
-                             sample_fraction=cfg.get("sample_fraction"))
-        elif books is None:
-            if "dim" not in cfg:
-                raise ValueError(
-                    "pq stage needs dim (for the deterministic codebooks) "
-                    "unless codebooks/train/index_path is given")
-            books = deterministic_codebooks(int(cfg["dim"]), m=m, k=kc)
-        if tt == "pq_encode":
-            return pq_encode(df, books,
-                             id_col=cfg.get("id_field", "vec_id"),
-                             vec_col=cfg.get("vec_field", "embedding"),
-                             keep_vec=bool(cfg.get("keep_vec", False)))
-        from etl_router_spark.compile.conditions import compile_condition
-        from etl_router_spark.model.conditions import Condition
-
-        queries = df
-        qcond = cfg.get("query_condition")
-        if qcond is not None:
-            if isinstance(qcond, dict):
-                qcond = Condition.from_dict(qcond)
-            queries = df.filter(compile_condition(qcond))
-        if "nprobe" in cfg or cfg.get("index_path"):
-            # the nprobe KEY (any value, including a blank YAML null
-            # meaning auto) or a persisted index declares the IVF
-            # branch — a blank nprobe without index_path previously
-            # fell through to the brute-force ADC scan below, a
-            # silently different algorithm from `nprobe: auto`
-            # IVF-PQ: coarse cells prune candidates before ADC ranking;
-            # shortlist: N declares the two-stage recipe (exact-L2
-            # re-rank of the top-N ADC candidates — raises the PQ
-            # recall ceiling that nprobe cannot move); index_path
-            # serves the probe from a persisted self-describing
-            # write_pq_index artifact (codes + sidecar codebooks/
-            # centroids — no re-encoding, no duplicated parameters).
-            # index_path alone implies IVF (the artifact IS
-            # cell-partitioned and carries centroids): before r15 an
-            # index_path stage without nprobe fell through to plain
-            # ADC with books=None and crashed; now it runs the same
-            # nprobe="auto" default the Python API resolves for
-            # nprobe=None (size-aware probed fraction via the
-            # sidecar's n_vectors).
-            corpus_index = None
-            centroids = None
-            occ_p95 = None
-            corpus_n = None
-            if cfg.get("index_path"):
-                from etl_router_spark.functions.pq import read_pq_index
-
-                corpus_index, books, centroids, idx_meta = read_pq_index(
-                    df.sparkSession, cfg["index_path"])
-                occ = idx_meta.get("cell_occupancy") or {}
-                occ_p95 = occ.get("p95")
-                # the corpus size rides the sidecar too (r15): it
-                # feeds the size-aware auto-nprobe fraction at zero
-                # cost (absent from pre-r15 sidecars -> None, flat 5%)
-                corpus_n = occ.get("n_vectors")
-            if cfg.get("shortlist") is not None:
-                from etl_router_spark.functions.pq import ivfpq_rerank_topk
-
-                return ivfpq_rerank_topk(
-                    queries, df, books, k=int(cfg.get("k", 5)),
-                    shortlist=int(cfg["shortlist"]),
-                    # "auto" (the default when index_path implies the
-                    # branch; a blank `nprobe:` YAML null means the
-                    # same) -> suggest_nprobe's size-aware probed
-                    # fraction (the sizing default's companion, r14/r15)
-                    nprobe=(None if cfg.get("nprobe", "auto")
-                            in ("auto", None)
-                            else int(cfg["nprobe"])),
-                    # no n_centroids key -> suggest_n_centroids sizing
-                    # (sqrt(corpus) cells, one count() at build — the
-                    # r12 chain A/B's fix for occupancy growing with
-                    # the corpus under a fixed cell count)
-                    n_centroids=(int(cfg["n_centroids"])
-                                 if "n_centroids" in cfg else None),
-                    centroids=centroids,
-                    id_col=cfg.get("id_field", "vec_id"),
-                    vec_col=cfg.get("vec_field", "embedding"),
-                    corpus_index=corpus_index,
-                    cell_occupancy_p95=occ_p95,
-                    occupancy_guard=cfg.get("occupancy_guard", "warn"),
-                    corpus_n=corpus_n)
-            from etl_router_spark.functions.pq import ivfpq_topk
-
-            return ivfpq_topk(queries, df, books, k=int(cfg.get("k", 5)),
-                              nprobe=(None if cfg.get("nprobe", "auto")
-                                      in ("auto", None)
-                                      else int(cfg["nprobe"])),
-                              n_centroids=(int(cfg["n_centroids"])
-                                           if "n_centroids" in cfg
-                                           else None),
-                              centroids=centroids,
-                              id_col=cfg.get("id_field", "vec_id"),
-                              vec_col=cfg.get("vec_field", "embedding"),
-                              corpus_index=corpus_index,
-                              corpus_n=corpus_n)
-        id_col = cfg.get("id_field", "vec_id")
-        method = cfg.get("method")
-        if method is None:
-            # blas is the numpy fast path but requires integral ids;
-            # route string/other id manifests to the portable sql
-            # twin instead of crashing (explicit method= still wins
-            # and gets pq_adc_topk's descriptive error)
-            from pyspark.sql import types as sqltypes
-
-            integral = (sqltypes.ByteType, sqltypes.ShortType,
-                        sqltypes.IntegerType, sqltypes.LongType)
-            method = ("blas" if isinstance(df.schema[id_col].dataType,
-                                           integral) else "sql")
-        return pq_adc_topk(queries, df, books, k=int(cfg.get("k", 5)),
-                           id_col=id_col,
-                           vec_col=cfg.get("vec_field", "embedding"),
-                           method=method)
-    if tt == "quality_classifier":
-        # model-based quality filter (fastText recipe): weights from
-        # explicit config, training over the input frame (label_field),
-        # or the deterministic md5-derived set — same precedence as pq
-        from etl_router_spark.functions.classifier import (
-            deterministic_weights,
-            quality_classifier_apply,
-            quality_classifier_train,
-        )
-
-        ws, bias = cfg.get("weights"), cfg.get("bias", 0.0)
-        if ws is None and cfg.get("label_field"):
-            ws, bias = quality_classifier_train(
-                df, cfg["label_field"],
-                text_col=cfg.get("text_field", "text"),
-                num_features=int(cfg.get("num_features", 256)),
-                max_iter=int(cfg.get("max_iter", 50)),
-                reg_param=float(cfg.get("reg_param", 0.0)))
-        elif ws is None:
-            ws, bias = deterministic_weights(int(cfg.get("num_features", 256)))
-        return quality_classifier_apply(
-            df, list(ws), float(bias),
-            text_col=cfg.get("text_field", "text"),
-            threshold=float(cfg.get("threshold", 0.5)))
-    if tt == "text_stats":
-        from etl_router_spark.functions.text import text_stats
-
-        return text_stats(df, cfg.get("text_field", "text"))
-    if tt == "langid":
-        from etl_router_spark.functions.text import language_id
-
-        return language_id(df, cfg.get("text_field", "text"))
-    if tt == "fingerprint":
-        from etl_router_spark.functions.text import fingerprint
-
-        return fingerprint(df, cfg.get("text_field", "text"))
-    if tt == "tokenize":
-        from etl_router_spark.functions.text import tokenize
-
-        return tokenize(df, cfg.get("text_field", "text"))
-    if tt == "multimodal_extract":
-        from etl_router_spark.functions.multimodal import extract_media_features
-
-        return extract_media_features(df, media_col=cfg.get("media_field", "media"),
-                                      id_col=cfg.get("id_field", "doc_id"),
-                                      decoder=cfg.get("decoder", "fake"),
-                                      feature_dim=int(cfg.get("feature_dim", 8)))
-    if tt == "decontaminate":
-        # benchmark side declared like lookup's dim: a source config
-        from etl_router_spark.functions.corpus import decontaminate
-
-        bench = read_source(df.sparkSession, cfg["benchmark"], streaming=False)
-        return decontaminate(df, bench,
-                             id_col=cfg.get("id_field", "doc_id"),
-                             text_col=cfg.get("text_field", "text"),
-                             n=int(cfg.get("ngram", 8)),
-                             mode=cfg.get("mode", "drop"))
-    if tt == "redact_spans":
-        from etl_router_spark.functions.corpus import redact_contaminated_spans
-
-        bench = read_source(df.sparkSession, cfg["benchmark"], streaming=False)
-        return redact_contaminated_spans(
-            df, bench,
-            id_col=cfg.get("id_field", "doc_id"),
-            text_col=cfg.get("text_field", "text"),
-            # 'ngram' mirrors the sibling decontaminate/bloom stages;
-            # 'n' kept as a back-compat alias
-            n=int(cfg.get("ngram", cfg.get("n", 8))),
-            sentinel=cfg.get("sentinel", "[REDACTED]"),
-            out_col=cfg.get("out_field", "clean_text"),
-        )
-    if tt == "decontaminate_fuzzy":
-        from etl_router_spark.functions.corpus import decontaminate_fuzzy
-
-        # build-once (r10 verdict ask): `benchmark_index` names a
-        # persisted minhash_index table (a source config, like
-        # lookup's dim) — the benchmark shingle->minhash build is
-        # skipped entirely and the stage costs one corpus probe pass.
-        # The index's own (num_hashes, bands, shingle_n) — persisted
-        # as column metadata through the parquet footer — are
-        # authoritative, exactly like the Bloom twin's `filter:`: a
-        # conflicting override would build band keys that never
-        # collide and pass every contaminated doc through silently,
-        # so it is a compile error; omitted keys adopt the index's.
-        bench_index = None
-        bench = None
-        nh, bd, sn = (int(cfg.get("num_hashes", 16)),
-                      int(cfg.get("bands", 4)),
-                      int(cfg.get("shingle_n", 3)))
-        hf = cfg.get("hash_family", "h60")
-        if "benchmark_index" in cfg:
-            from etl_router_spark.functions.dedup import minhash_index_params
-
-            bench_index = read_source(
-                df.sparkSession, cfg["benchmark_index"], streaming=False)
-            built = minhash_index_params(bench_index)
-            if built is not None:
-                for key in ("num_hashes", "bands", "shingle_n",
-                            "hash_family"):
-                    if key in cfg and (_index_param_norm(key, cfg[key])
-                                       != _index_param_norm(key, built[key])):
-                        raise ValueError(
-                            f"decontaminate_fuzzy: {key}={cfg[key]!r} "
-                            f"conflicts with the persisted index's "
-                            f"{built[key]!r} — probe params must match "
-                            "the build exactly (a mismatch means zero "
-                            "band-key collisions, i.e. silent "
-                            "non-detection); drop the key to use the "
-                            "index's own")
-                nh, bd, sn, hf = (built["num_hashes"], built["bands"],
-                                  built["shingle_n"], built["hash_family"])
-        else:
-            bench = read_source(
-                df.sparkSession, cfg["benchmark"], streaming=False)
-        return decontaminate_fuzzy(
-            df, bench,
-            id_col=cfg.get("id_field", "doc_id"),
-            text_col=cfg.get("text_field", "text"),
-            num_hashes=nh,
-            bands=bd,
-            shingle_n=sn,
-            threshold=float(cfg.get("threshold", 0.5)),
-            mode=cfg.get("mode", "drop"),
-            benchmark_index=bench_index,
-            hash_family=hf)
-    if tt == "bloom_build":
-        # the artifact-build half of build-once decontamination: the
-        # input (a benchmark corpus) folds into a ONE-ROW persistable
-        # filter frame, entirely engine-side; point a parquet sink at
-        # this stage and the output dir IS the probe stage's `filter:`
-        # (the MinHash analog is dedup_index_build -> benchmark_index)
-        from etl_router_spark.functions.corpus import bloom_filter_frame
-
-        return bloom_filter_frame(
-            df,
-            text_col=cfg.get("text_field", "text"),
-            n=int(cfg.get("ngram", 8)),
-            m_bits=int(cfg.get("m_bits", 1 << 22)),
-            k=int(cfg.get("hashes", 3)),
-            hash_family=cfg.get("hash_family", "xxhash64"))
-    if tt == "bloom_decontaminate":
-        from etl_router_spark.functions.corpus import (
-            bloom_decontaminate,
-            load_bloom_filter,
-        )
-
-        if "filter" in cfg:
-            # build-once (r10 verdict ask): `filter` is the path of a
-            # save_bloom_filter artifact — no benchmark source, no
-            # driver-side gram collection; the stage compiles to ONE
-            # map-side codegen probe pass (the stream_bloom_probe
-            # shape, now declarable from a manifest). The persisted
-            # build parameters are authoritative: a conflicting
-            # override would probe different positions and silently
-            # void the one-sided-error contract, so it is an error.
-            bf = load_bloom_filter(df.sparkSession, cfg["filter"])
-            for key, have in (("ngram", bf["n"]), ("m_bits", bf["m_bits"]),
-                              ("hashes", bf["k"])):
-                if key in cfg and int(cfg[key]) != have:
-                    raise ValueError(
-                        f"bloom_decontaminate: {key}={cfg[key]!r} conflicts"
-                        f" with the persisted filter's {have!r} — probe"
-                        " params must match the build bit-exactly; drop"
-                        " the key to use the filter's own")
-            if cfg.get("hash_family", bf["hash_family"]) != bf["hash_family"]:
-                raise ValueError(
-                    f"bloom_decontaminate: hash_family="
-                    f"{cfg['hash_family']!r} conflicts with the persisted"
-                    f" filter's {bf['hash_family']!r}")
-            return bloom_decontaminate(
-                df, None,
-                id_col=cfg.get("id_field", "doc_id"),
-                text_col=cfg.get("text_field", "text"),
-                n=bf["n"], m_bits=bf["m_bits"], k=bf["k"],
-                hash_family=bf["hash_family"],
-                mode=cfg.get("mode", "drop"),
-                broadcast=cfg.get("broadcast", "auto"),
-                prebuilt_words=bf["words"])
-        bench = read_source(df.sparkSession, cfg["benchmark"], streaming=False)
-        return bloom_decontaminate(df, bench,
-                                   id_col=cfg.get("id_field", "doc_id"),
-                                   text_col=cfg.get("text_field", "text"),
-                                   n=int(cfg.get("ngram", 8)),
-                                   m_bits=int(cfg.get("m_bits", 1 << 22)),
-                                   k=int(cfg.get("hashes", 3)),
-                                   mode=cfg.get("mode", "drop"),
-                                   hash_family=cfg.get("hash_family",
-                                                       "xxhash64"),
-                                   broadcast=cfg.get("broadcast", "auto"))
-    if tt == "retrieval_eval":
-        # qrels side declared like lookup's dim: a source config
-        from etl_router_spark.functions.indexing import retrieval_eval
-
-        qrels = read_source(df.sparkSession, cfg["qrels"], streaming=False)
-        return retrieval_eval(df, qrels,
-                              k=int(cfg.get("k", 10)),
-                              query_id_col=cfg.get("query_id_field",
-                                                   "query_id"),
-                              doc_id_col=cfg.get("doc_id_field", "doc_id"),
-                              rank_col=cfg.get("rank_field", "rank"),
-                              rel_col=cfg.get("rel_field", "rel"))
-    if tt == "hard_negatives":
-        # qrels side declared like retrieval_eval's: a source config
-        from etl_router_spark.functions.indexing import mine_hard_negatives
-
-        qrels = read_source(df.sparkSession, cfg["qrels"], streaming=False)
-        return mine_hard_negatives(
-            df, qrels,
-            n_negatives=int(cfg.get("n_negatives", 4)),
-            query_id_col=cfg.get("query_id_field", "query_id"),
-            doc_id_col=cfg.get("doc_id_field", "doc_id"),
-            rank_col=cfg.get("rank_field", "rank"),
-            rel_col=cfg.get("rel_field", "rel"))
-    if tt == "epoch_upsample":
-        from etl_router_spark.functions.corpus import epoch_upsample
-
-        return epoch_upsample(df, weights=dict(cfg["weights"]),
-                              token_budget=float(cfg["token_budget"]),
-                              domain_col=cfg.get("domain_field", "source"),
-                              key_col=cfg.get("key_field", "doc_id"),
-                              size_col=cfg.get("size_field"),
-                              max_epochs=float(cfg.get("max_epochs", 4.0)),
-                              salt=str(cfg.get("salt", "")),
-                              epoch_col=cfg.get("epoch_field", "epoch"))
-    if tt == "snapshot_diff":
-        # prior snapshot declared like lookup's dim: a source config
-        from etl_router_spark.functions.corpus import snapshot_diff
-
-        baseline = read_source(df.sparkSession, cfg["baseline"],
-                               streaming=False)
-        return snapshot_diff(baseline, df,
-                             id_col=cfg.get("id_field", "doc_id"),
-                             compare_cols=cfg.get("compare_fields"),
-                             status_col=cfg.get("status_field", "status"))
-    if tt == "hash_sample":
-        from etl_router_spark.functions.corpus import hash_sample
-
-        return hash_sample(df, rate=float(cfg.get("rate", 1.0)),
-                           key_col=cfg.get("key_field", "doc_id"),
-                           salt=cfg.get("salt", ""),
-                           strata_col=cfg.get("strata_field"),
-                           strata_rates=cfg.get("strata_rates"))
-    if tt == "c4_filter":
-        from etl_router_spark.functions.text import c4_rules
-
-        kw = {k: cfg[k] for k in (
-            "min_words_per_line", "terminal_punct", "min_sentences",
-            "banned_page_substrings", "banned_line_words",
-        ) if k in cfg}
-        return c4_rules(df, text_col=cfg.get("text_field", "text"),
-                        mode=cfg.get("mode", "tag"), **kw)
-    if tt == "gopher_filter":
-        from etl_router_spark.functions.text import gopher_rules
-
-        kw = {k: cfg[k] for k in (
-            "min_words", "max_words", "min_mean_word_len", "max_mean_word_len",
-            "max_symbol_ratio", "max_bullet_line_frac", "max_ellipsis_line_frac",
-            "min_alpha_word_ratio", "min_stopword_hits",
-        ) if k in cfg}
-        return gopher_rules(df, text_col=cfg.get("text_field", "text"),
-                            mode=cfg.get("mode", "tag"), **kw)
-    if tt == "duplicate_spans":
-        from etl_router_spark.functions.dedup import duplicate_ngram_spans
-
-        n_cfg = cfg.get("n", 5)
-        # a YAML list of widths = the several-n-in-one-scan shape
-        n_arg = ([int(k) for k in n_cfg]
-                 if isinstance(n_cfg, (list, tuple)) else int(n_cfg))
-        return duplicate_ngram_spans(df, n=n_arg,
-                                     id_col=cfg.get("id_field", "doc_id"),
-                                     text_col=cfg.get("text_field", "text"),
-                                     min_count=int(cfg.get("min_count", 2)))
-    if tt == "mix_sample":
-        from etl_router_spark.functions.corpus import mix_sample
-
-        return mix_sample(df, weights=cfg.get("weights"),
-                          domain_col=cfg.get("domain_field", "source"),
-                          key_col=cfg.get("key_field", "doc_id"),
-                          salt=cfg.get("salt", ""),
-                          size_col=cfg.get("size_field"),
-                          rate_col=cfg.get("rate_field"),
-                          temperature=(float(cfg["temperature"])
-                                       if cfg.get("temperature") is not None
-                                       else None))
-    if tt == "dsir_sample":
-        # target corpus declared like decontaminate's benchmark: a
-        # source config (DSIR selects raw docs resembling the target)
-        from etl_router_spark.functions.selection import dsir_sample
-
-        target = read_source(df.sparkSession, cfg["target"], streaming=False)
-        if "hash_family" not in cfg:
-            # BREAKING-CHANGE visibility (r14 ADVICE): the manifest
-            # default flipped h60 -> xxhash64 for bloom_*-consistency,
-            # and — unlike the MinHash index path — dsir_sample has no
-            # persisted artifact to fail fast against, so a pinned-salt
-            # manifest silently selects a DIFFERENT document set after
-            # the upgrade. Warn once per process; pin hash_family to
-            # silence (h60 reproduces pre-change selections exactly).
-            global _DSIR_FAMILY_WARNED
-            if not _DSIR_FAMILY_WARNED:
-                _DSIR_FAMILY_WARNED = True
-                import warnings
-
-                warnings.warn(
-                    "dsir_sample: hash_family not set — the manifest "
-                    "default is now 'xxhash64' (native hash, the "
-                    "production family shared with bloom_* stages). "
-                    "Manifests written before this default selected "
-                    "documents with 'h60'; the same salt now yields a "
-                    "DIFFERENT sample. Pin hash_family: h60 to "
-                    "reproduce old selections, or hash_family: "
-                    "xxhash64 to silence this warning.")
-        return dsir_sample(df, target, int(cfg.get("k", 1000)),
-                           id_col=cfg.get("id_field", "doc_id"),
-                           text_col=cfg.get("text_field", "text"),
-                           buckets=int(cfg.get("buckets", 4096)),
-                           smooth=float(cfg.get("smooth", 0.5)),
-                           salt=cfg.get("salt", "dsir"),
-                           # manifests default to the native-hash
-                           # production family, like bloom_* stages;
-                           # the Python API defaults to oracle-exact h60
-                           hash_family=cfg.get("hash_family",
-                                               "xxhash64"))
-    if tt == "weighted_sample":
-        from etl_router_spark.functions.selection import weighted_sample
-
-        return weighted_sample(df, int(cfg.get("k", 1000)),
-                               weight_col=cfg["weight_field"],
-                               id_col=cfg.get("id_field", "doc_id"),
-                               group_col=cfg.get("group_field"),
-                               salt=cfg.get("salt", "ws"))
-    if tt == "pack_sequences":
-        from etl_router_spark.functions.corpus import pack_sequences
-
-        return pack_sequences(df, max_tokens=int(cfg.get("max_tokens", 2048)),
-                              id_col=cfg.get("id_field", "doc_id"),
-                              token_count_col=cfg.get("token_count_field", "n_tokens"))
-    if tt == "bpe_tokenize":
-        from etl_router_spark.functions.text import bpe_tokenize
-
-        merges = cfg.get("merges")
-        if isinstance(merges, str):
-            # a bpe_train result persisted as JSON: [["a","b"], ...]
-            import json as _json
-
-            with open(merges) as fh:
-                merges = _json.load(fh)
-        if not merges:
-            raise ValueError("bpe_tokenize requires merges "
-                             "(inline pair list or bpe_train JSON path)")
-        return bpe_tokenize(df, [tuple(m) for m in merges],
-                            text_col=cfg.get("text_field", "text"),
-                            out_col=cfg.get("out_field", "bpe_tokens"))
-    if tt == "kafka_envelope":
-        # Kafka wire schema -> envelope -> typed columns, the manifest
-        # face of model/envelope.py (offset -> sequence_number,
-        # topic:partition:offset -> idempotency_key, headers ->
-        # metadata, payload parsed once by from_json)
-        from etl_router_spark.model.envelope import from_kafka, promote
-
-        env = from_kafka(df, record_type=cfg.get("record_type"),
-                         source_id=cfg.get("source_id"))
-        schema = cfg.get("payload_schema")
-        if not schema:
-            raise ValueError("kafka_envelope requires payload_schema (DDL)")
-        return promote(env, schema,
-                       keep_envelope=bool(cfg.get("keep_envelope", True)))
-    if tt == "pack_boundaries":
-        from etl_router_spark.functions.corpus import pack_with_boundaries
-
-        return pack_with_boundaries(df, max_tokens=int(cfg.get("max_tokens", 2048)),
-                                    id_col=cfg.get("id_field", "doc_id"),
-                                    token_count_col=cfg.get("token_count_field", "n_tokens"))
-    if tt == "repetition_stats":
-        from etl_router_spark.functions.text import repetition_stats
-
-        return repetition_stats(df, cfg.get("text_field", "text"))
-    if tt == "pii_redact":
-        from etl_router_spark.functions.text import pii_redact
-
-        return pii_redact(df, cfg.get("text_field", "text"),
-                          out_col=cfg.get("out_field", "clean_text"))
-    if tt == "chunk":
-        from etl_router_spark.functions.corpus import chunk_documents
-
-        return chunk_documents(df, window=int(cfg.get("window", 2048)),
-                               stride=int(cfg.get("stride", 2048)),
-                               id_col=cfg.get("id_field", "doc_id"),
-                               text_col=cfg.get("text_field", "text"))
-    if tt == "line_dedup":
-        from etl_router_spark.functions.corpus import line_dedup
-
-        tpl = cfg.get("tokens_per_line")
-        return line_dedup(df, id_col=cfg.get("id_field", "doc_id"),
-                          text_col=cfg.get("text_field", "text"),
-                          delimiter=cfg.get("delimiter", "\n"),
-                          tokens_per_line=int(tpl) if tpl is not None else None,
-                          join_sep=cfg.get("join_sep", "\n"),
-                          out_col=cfg.get("out_field", "text_deduped"))
-    if tt == "strip_repeated_lines":
-        from etl_router_spark.functions.text import strip_repeated_lines
-
-        return strip_repeated_lines(
-            df, text_col=cfg.get("text_field", "text"),
-            out_col=cfg.get("out_field", "clean_text"))
-    if tt == "text_normalize":
-        from etl_router_spark.functions.text import normalize_text
-
-        return normalize_text(df, text_col=cfg.get("text_field", "text"),
-                              out_col=cfg.get("out_field", "text_norm"),
-                              lowercase=bool(cfg.get("lowercase", True)),
-                              strip_non_alnum=bool(cfg.get("strip_non_alnum", False)),
-                              collapse_whitespace=bool(cfg.get("collapse_whitespace", True)))
-    if tt == "embedding_normalize":
-        from etl_router_spark.functions.embedding import l2_normalize
-
-        return l2_normalize(df, vec_col=cfg.get("vec_field", "embedding"),
-                            out_col=cfg.get("out_field", "embedding_norm"),
-                            norm_col=cfg.get("norm_field", "l2_norm"))
-    if tt == "embedding_quantize":
-        from etl_router_spark.functions.embedding import quantize_int8
-
-        return quantize_int8(df, vec_col=cfg.get("vec_field", "embedding"),
-                             out_col=cfg.get("out_field", "q_embedding"),
-                             scale_col=cfg.get("scale_field", "q_scale"))
-    if tt == "embedding_mean_pool":
-        from etl_router_spark.functions.embedding import mean_pool
-
-        return mean_pool(df, group_col=cfg.get("group_field", "doc_id"),
-                         vec_col=cfg.get("vec_field", "embedding"))
-    if tt == "embedding_pca_project":
-        from etl_router_spark.functions.embedding import pca_project
-
-        # components: inline k x d matrix, or a path to a JSON file
-        # produced by pca_train (the train step is a driver-side job,
-        # not a row transform — run it once, persist the model)
-        comps = cfg.get("components")
-        if isinstance(comps, str):
-            import json as _json
-
-            with open(comps) as fh:
-                model = _json.load(fh)
-            comps = model["components"]
-            mean = cfg.get("mean", model.get("mean"))
-        else:
-            mean = cfg.get("mean")
-        if not comps:
-            raise ValueError("embedding_pca_project requires components "
-                             "(inline matrix or pca_train JSON path)")
-        return pca_project(df, comps, mean=mean,
-                           vec_col=cfg.get("vec_field", "embedding"),
-                           out_col=cfg.get("out_field", "pca"))
-    if tt == "tfidf":
-        from etl_router_spark.functions.indexing import tfidf_topk
-
-        return tfidf_topk(df, id_col=cfg.get("id_field", "doc_id"),
-                          text_col=cfg.get("text_field", "text"),
-                          k=int(cfg.get("k", 5)))
-    if tt == "heavy_hitters":
-        from etl_router_spark.functions.indexing import heavy_hitters
-
-        return heavy_hitters(df, id_col=cfg.get("id_field", "doc_id"),
-                             text_col=cfg.get("text_field", "text"),
-                             k=int(cfg.get("k", 50)))
-    if tt == "inverted_index":
-        from etl_router_spark.functions.indexing import inverted_index
-
-        return inverted_index(df, id_col=cfg.get("id_field", "doc_id"),
-                              text_col=cfg.get("text_field", "text"),
-                              min_df=int(cfg.get("min_df", 1)),
-                              max_df=cfg.get("max_df"),
-                              max_postings=cfg.get("max_postings"))
-    if tt == "group_topk":
-        from etl_router_spark.functions.corpus import group_topk
-
-        return group_topk(df, group_col=cfg["group_field"],
-                          order_col=cfg["order_field"],
-                          k=int(cfg.get("k", 10)),
-                          ascending=bool(cfg.get("ascending", False)),
-                          tie_col=cfg.get("tie_field", "doc_id"))
-    if tt == "global_shuffle":
-        from etl_router_spark.functions.corpus import global_shuffle
-
-        return global_shuffle(df, seed=int(cfg.get("seed", 0)),
-                              id_col=cfg.get("id_field", "doc_id"))
-    if tt == "dedup_cluster":
-        # pairs -> connected components -> (id, cluster_id) per row;
-        # pair generation method chosen by config
-        from etl_router_spark.functions.dedup import dedup_clusters
-
-        id_col = cfg.get("id_field", "doc_id")
-        pairs = _near_dup_pairs(df, cfg, tt)
-        algorithm = cfg.get("cc_algorithm", "label")
-        if cfg.get("emit", "labels") == "canonical":
-            from etl_router_spark.functions.dedup import dedup_canonical
-
-            return dedup_canonical(df, pairs, id_col=id_col, algorithm=algorithm)
-        return dedup_clusters(df, pairs, id_col=id_col, algorithm=algorithm)
-    if tt == "leakage_splits":
-        # near-dup pairs -> connected components -> ONE split per
-        # cluster: the leakage guard split_assign alone lacks
-        from etl_router_spark.functions.corpus import leakage_safe_splits
-
-        return leakage_safe_splits(
-            df, _near_dup_pairs(df, cfg, tt),
-            fractions=dict(cfg["fractions"]),
-            id_col=cfg.get("id_field", "doc_id"),
-            salt=str(cfg.get("salt", "")),
-            out_col=cfg.get("out_field", "split"),
-            group_col=cfg.get("group_field", "split_group"),
-            algorithm=cfg.get("cc_algorithm", "label"))
-    if tt == "cdc_apply":
-        from etl_router_spark.functions.cdc import cdc_apply
-
-        return cdc_apply(df, key_cols=list(cfg["key_fields"]),
-                         order_cols=list(cfg["order_fields"]),
-                         op_col=cfg.get("op_field"),
-                         delete_values=tuple(cfg.get("delete_values", ("delete", "d"))))
-    if tt == "split_assign":
-        from etl_router_spark.functions.corpus import assign_splits
-
-        return assign_splits(df, key_col=cfg.get("key_field", "doc_id"),
-                             fractions=dict(cfg["fractions"]),
-                             salt=str(cfg.get("salt", "")),
-                             out_col=cfg.get("out_field", "split"))
-    if tt == "ngram_counts":
-        from etl_router_spark.functions.text import ngram_counts
-
-        return ngram_counts(df, text_col=cfg.get("text_field", "text"),
-                            n=int(cfg.get("n", 2)), k=int(cfg.get("k", 100)))
-    if tt == "char_entropy":
-        from etl_router_spark.functions.text import char_entropy
-
-        return char_entropy(df, text_col=cfg.get("text_field", "text"),
-                            id_col=cfg.get("id_field", "doc_id"),
-                            out_col=cfg.get("output_field", "char_entropy"))
-    if tt == "unigram_logprob":
-        from etl_router_spark.functions.text import unigram_logprob
-
-        return unigram_logprob(df, text_col=cfg.get("text_field", "text"),
-                               id_col=cfg.get("id_field", "doc_id"))
-    if tt == "bigram_logprob":
-        from etl_router_spark.functions.text import bigram_logprob
-
-        return bigram_logprob(df, text_col=cfg.get("text_field", "text"),
-                              id_col=cfg.get("id_field", "doc_id"),
-                              lam=float(cfg.get("lam", 0.7)),
-                              add_k=float(cfg.get("add_k", 0.5)))
-    if tt == "url_normalize":
-        from etl_router_spark.functions.text import normalize_url
-
-        return df.withColumn(
-            cfg.get("out_field", "url_norm"),
-            normalize_url(F.col(cfg.get("url_field", "url"))),
-        )
-    if tt == "domain_cap":
-        from etl_router_spark.functions.corpus import domain_cap
-
-        counts = cfg.get("domain_counts")
-        return domain_cap(
-            df, url_col=cfg.get("url_field", "url"),
-            cap=int(cfg.get("cap", 100)),
-            id_col=cfg.get("id_field", "doc_id"),
-            method=cfg.get("method", "exact"),
-            host_col=cfg.get("host_field"),
-            domain_counts=(read_source(df.sparkSession, counts,
-                                       streaming=False)
-                           if counts else None),
-            seed=int(cfg.get("seed", 0)),
-        )
-    if tt == "filter_attribution":
-        from etl_router_spark.functions.corpus import filter_attribution
-
-        # rules: {name: SQL boolean expression (True = keep)}
-        return filter_attribution(
-            df, {n: F.expr(sql) for n, sql in cfg["rules"].items()})
-    if tt == "yield_curve":
-        from etl_router_spark.functions.corpus import filter_yield_curve
-
-        return filter_yield_curve(
-            df, cfg["score_field"],
-            [float(t) for t in cfg["thresholds"]],
-            size_col=cfg.get("size_field"),
-            group_col=cfg.get("group_field"))
-    if tt == "quality_filter":
-        from etl_router_spark.functions.corpus import adaptive_quality_filter
-
-        return adaptive_quality_filter(
-            df, score_col=cfg["score_field"], group_col=cfg["group_field"],
-            quantile=float(cfg.get("quantile", 0.25)),
-            threshold_round=cfg.get("threshold_round"),
-        )
-    if tt == "quality_buckets":
-        from etl_router_spark.functions.corpus import quality_buckets
-
-        return quality_buckets(
-            df, score_col=cfg["score_field"], group_col=cfg["group_field"],
-            quantiles=tuple(cfg.get("quantiles", (1 / 3, 2 / 3))),
-            labels=tuple(cfg.get("labels", ("tail", "middle", "head"))),
-            threshold_round=cfg.get("threshold_round"),
-        )
-    if tt == "chunk_sentences":
-        from etl_router_spark.functions.corpus import chunk_by_sentences
-
-        return chunk_by_sentences(df, max_chars=int(cfg.get("max_chars", 200)),
-                                  id_col=cfg.get("id_field", "doc_id"),
-                                  text_col=cfg.get("text_field", "text"))
-    if tt == "bm25":
-        # query side declared like lookup's dim: a source config
-        from etl_router_spark.functions.indexing import bm25_topk
-
-        queries = read_source(df.sparkSession, cfg["queries"], streaming=False)
-        return bm25_topk(df, queries,
-                         id_col=cfg.get("id_field", "doc_id"),
-                         text_col=cfg.get("text_field", "text"),
-                         k1=float(cfg.get("k1", 1.2)),
-                         b=float(cfg.get("b", 0.75)),
-                         k=int(cfg.get("k", 10)))
-    if tt == "edit_distance_pairs":
-        from etl_router_spark.functions.dedup import edit_distance_pairs
-
-        return edit_distance_pairs(df, max_distance=int(cfg.get("max_distance", 2)),
-                                   id_col=cfg.get("id_field", "doc_id"),
-                                   text_col=cfg.get("text_field", "text"))
-    if tt in ("pagerank", "degree_stats", "triangle_count"):
-        from etl_router_spark.functions import graph
-
-        src = cfg.get("src_field", "src")
-        dst = cfg.get("dst_field", "dst")
-        simple = bool(cfg.get("assume_simple", False))
-        if tt == "pagerank":
-            return graph.pagerank(
-                df, src, dst,
-                iterations=int(cfg.get("iterations", 10)),
-                damping=float(cfg.get("damping", 0.85)),
-                broadcast_nodes=int(cfg.get("broadcast_nodes", 2_000_000)),
-                assume_simple=simple,
-            )
-        if tt == "degree_stats":
-            return graph.degree_stats(df, src, dst, assume_simple=simple)
-        # lazy in manifest pipelines: compile/explain must not execute
-        # the triangle job at plan-construction time
-        return graph.triangle_count(df, src, dst, assume_simple=simple,
-                                    eager=False)
-    return None
+    if tt in ("split", "join") or tt not in TRANSFORMS:
+        raise ValueError(f"stage {stage.id!r}: transform {tt!r} not dispatchable in a linear DAG")
+    return TRANSFORMS[tt].apply(df, cfg)
 
 
 # per-trigger intake knob per source type, for ratelimit delay mode
@@ -1293,10 +262,7 @@ def _compile_stage_sides(spark: SparkSession, pipeline: Pipeline,
                 # (or explicit `to`) equals their stage id
                 cfg = stage.config
                 base = inputs[0] if len(inputs) == 1 else apply_fan_in(inputs, None)
-                routes = T.apply_split(
-                    base, cfg["outputs"], cfg.get("default_output"),
-                    first_match=bool(cfg.get("first_match", False)),
-                )
+                routes = T.apply_split(base, **TRANSFORMS["split"].kwargs(base, cfg))
                 targets: dict[str, DataFrame] = {}
                 for o in cfg["outputs"]:
                     targets[o.get("to") or o["name"]] = routes[o["name"]]
@@ -1306,15 +272,8 @@ def _compile_stage_sides(spark: SparkSession, pipeline: Pipeline,
                 split_routes[sid] = targets
                 df = base  # pass-through for unrouted edges
             elif stage.transform_type == "join":
-                cfg = stage.config
-                right_id = cfg["right"]
-                df = T.apply_join(
-                    inputs[0], outputs[right_id], cfg["conditions"], cfg.get("join_type", "inner"),
-                    cfg.get("left_prefix"), cfg.get("right_prefix"),
-                    cfg.get("include"), cfg.get("exclude"),
-                    broadcast_right=bool(cfg.get("broadcast", False)),
-                    strategy=cfg.get("strategy"),
-                )
+                df = T.apply_join(inputs[0], outputs[stage.config["right"]],
+                                  **TRANSFORMS["join"].kwargs(inputs[0], stage.config))
             else:
                 base = inputs[0] if len(inputs) == 1 else apply_fan_in(inputs, None)
                 df = apply_transform_stage(base, stage, spark,

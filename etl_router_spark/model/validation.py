@@ -5,6 +5,14 @@ and the graph checks of ``conveyor-etl-routing/src/dag.rs:234-375``:
 
 - non-empty name, at least one stage;
 - unique stage ids (parser enforces), parallelism >= 1;
+- known source types (``sources.registry.SOURCE_REGISTRY``) and known
+  transform types (``compile.table.TRANSFORMS``);
+- transform config keys: each key must be one the type's spec declares
+  (the keys its operator is passed, the keys a build step or the
+  streaming runner reads, ``transform_type``/``type``), and every key
+  whose operator parameter has no default must be present. The error
+  names the stage, the key and the allowed keys;
+- ``spec.limits`` keys and values;
 - pipeline starts at source/fan_in, ends at sink/fan_out;
 - fan_in needs >= 2 inputs, fan_out >= 2 outputs (validation.rs:280-286);
 - field-mapping exclusivity: a mapping sets exactly one of
@@ -14,42 +22,11 @@ and the graph checks of ``conveyor-etl-routing/src/dag.rs:234-375``:
 
 from __future__ import annotations
 
+from etl_router_spark.compile.table import TRANSFORMS, Spec
 from etl_router_spark.model.manifest import Pipeline, Stage, StageType
+from etl_router_spark.sources.registry import SOURCE_REGISTRY
 
-KNOWN_TRANSFORMS = {
-    "filter", "map", "project", "rename", "cast", "mask", "validate",
-    "flatmap", "split", "dedupe", "ratelimit", "aggregate", "join",
-    "sessionize",
-    # large-scale data-pipeline extensions (first-class in this engine)
-    "dedup_exact", "dedup_minhash", "dedup_simhash", "dedup_embedding",
-    "similarity_topk", "text_stats", "langid", "fingerprint", "tokenize",
-    "multimodal_extract", "decontaminate", "hash_sample", "pack_sequences",
-    "repetition_stats", "pii_redact", "chunk",
-    "tfidf", "heavy_hitters", "inverted_index", "group_topk", "global_shuffle",
-    "dedup_cluster", "cdc_apply", "split_assign", "unigram_logprob",
-    "bigram_logprob", "dedup_index_build", "dedup_index_probe",
-    "dedup_ngram", "ngram_counts", "char_entropy", "line_dedup",
-    "embedding_normalize", "embedding_quantize", "text_normalize",
-    # user-code extension point (proto/transform.proto ProcessBatch)
-    "service",
-    "mix_sample", "duplicate_spans", "gopher_filter", "c4_filter",
-    "url_normalize", "quality_filter", "quality_buckets", "chunk_sentences",
-    "bm25", "pagerank", "degree_stats", "triangle_count",
-    "edit_distance_pairs", "embedding_mean_pool", "embedding_pca_project",
-    "pack_boundaries", "kafka_envelope", "bpe_tokenize",
-    "pq_encode", "pq_topk", "quality_classifier",
-    "dsir_sample", "weighted_sample", "bloom_decontaminate",
-    "retrieval_eval", "leakage_splits", "epoch_upsample", "snapshot_diff",
-    "domain_cap", "filter_attribution", "strip_repeated_lines",
-    "redact_spans", "yield_curve", "decontaminate_fuzzy",
-    "hard_negatives", "bloom_build",
-}
-
-KNOWN_SOURCES = {
-    "kafka", "kinesis", "pulsar", "rabbitmq", "sqs", "redis", "nats",
-    "file", "s3", "gcs", "http", "websocket", "postgres_cdc", "mysql_cdc",
-    "mongodb", "grpc", "jdbc", "memory", "rate", "jsonl_queue", "warc",
-}
+KNOWN_SOURCES = frozenset(SOURCE_REGISTRY)
 
 
 class ValidationError(ValueError):
@@ -118,8 +95,11 @@ def _validate_stage(s: Stage) -> list[str]:
         errors.append(f"stage {s.id!r}: parallelism must be >= 1")
     if s.stage_type == StageType.TRANSFORM:
         tt = s.transform_type
-        if tt not in KNOWN_TRANSFORMS:
+        spec = TRANSFORMS.get(tt)
+        if spec is None:
             errors.append(f"stage {s.id!r}: unknown transform_type {tt!r}")
+        else:
+            errors.extend(_check_keys(s, spec))
     if s.stage_type == StageType.SOURCE:
         st = s.source_type
         if st not in KNOWN_SOURCES:
@@ -131,4 +111,18 @@ def _validate_stage(s: Stage) -> list[str]:
                 f"stage {s.id!r}: mapping for {m.get('target')!r} sets {set_fields}; "
                 "exactly one of source/expression/literal allowed"
             )
+    return errors
+
+
+def _check_keys(s: Stage, spec: Spec) -> list[str]:
+    """Stage config keys against the type's spec: every key must be one
+    the compiler or the streaming runner reads, and every required one
+    present, so a typo fails here instead of silently keeping a default."""
+    allowed = spec.allowed()
+    errors = [f"stage {s.id!r}: unknown key {k!r} for transform "
+              f"{s.transform_type!r} (allowed: {sorted(allowed)})"
+              for k in s.config if k not in allowed]
+    errors += [f"stage {s.id!r}: transform {s.transform_type!r} requires key {k!r}"
+               for k in spec.required()
+               if not any(a in s.config for a in spec.spellings(k))]
     return errors

@@ -256,7 +256,7 @@ def test_dsir_manifest_family_default_warns_once(spark, sf_dir, tmp_path):
     (r14 ADVICE, the round's one medium)."""
     import warnings
 
-    from etl_router_spark.compile import pipeline as P
+    from etl_router_spark.compile import table as P
     from etl_router_spark.compile.pipeline import compile_pipeline
     from etl_router_spark.model.parser import parse_manifest_dict
 

@@ -148,6 +148,6 @@ def test_pipeline_service_stage(spark):
 
 
 def test_service_in_known_transforms():
-    from etl_router_spark.model.validation import KNOWN_TRANSFORMS
+    from etl_router_spark.compile.table import TRANSFORMS
 
-    assert "service" in KNOWN_TRANSFORMS
+    assert "service" in TRANSFORMS
