@@ -416,10 +416,11 @@ def build_parser() -> argparse.ArgumentParser:
                    help="streaming: availableNow then exit")
     p.add_argument("--exactly-once", action="store_true",
                    dest="exactly_once",
-                   help="streaming: commit a marker per epoch after all "
-                        "sinks; replayed epochs with a marker are skipped "
-                        "(CommitMarker semantics on fan-out and --all "
-                        "group queries)")
+                   help="streaming: every per-epoch query commits a "
+                        "marker after its epoch's writes, and a replayed "
+                        "epoch with a marker is skipped (CommitMarker "
+                        "semantics); native file sinks are exactly-once "
+                        "through Spark's log either way")
     p.add_argument("--checkpoint")
     p.set_defaults(fn=cmd_run)
 

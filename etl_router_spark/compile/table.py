@@ -84,6 +84,9 @@ class Spec:
     ``extra`` keys are read by ``build`` or by the streaming runner. Each
     key list may be written as one space-separated string.
     ``build(op, df, cfg, kwargs)`` replaces the plain ``op(df, **kwargs)``.
+    ``choices`` maps a key whose value picks an operator or a build branch
+    to its allowed values; ``parts(cfg)`` names the ``PARTS`` specs the
+    build applies for ``cfg``, whose required keys the stage then needs.
     """
 
     op: str | None = None
@@ -94,6 +97,8 @@ class Spec:
     aliases: Mapping[str, str] = field(default_factory=dict)
     extra: tuple[str, ...] | str = ()
     build: Callable[..., Any] | None = None
+    choices: Mapping[str, tuple[str, ...]] = field(default_factory=dict)
+    parts: Callable[[Mapping[str, Any]], tuple[str, ...]] = lambda cfg: ()
 
     def __post_init__(self):
         for name in ("keys", "sources", "extra"):
@@ -291,54 +296,61 @@ PARTS: dict[str, Spec] = {
     "pq.train": Spec("functions.pq:pq_train", "m k_centroids vec_field id_field sample_fraction",
                      renames={"k_centroids": "k"}),
     "pq.books": Spec("functions.pq:deterministic_codebooks", "dim m k_centroids",
-                     renames={"k_centroids": "k"}),
+                     renames={"k_centroids": "k"}, build=lambda op, df, cfg, kw: op(**kw)),
     "classifier.train": Spec("functions.classifier:quality_classifier_train",
                              "label_field text_field num_features max_iter reg_param"),
     "envelope": Spec("model.envelope:from_kafka", "record_type source_id"),
 }
 
 
+def _methods(family: str) -> tuple[str, ...]:
+    """The ``method`` values of a ``PARTS`` family: ``<family>.<method>``."""
+    return tuple(k.partition(".")[2] for k in PARTS if k.startswith(f"{family}."))
+
+
+def _embedding_parts(cfg):
+    # an unset method is the exact cosine path
+    return (f"embedding.{cfg.get('method') or 'cosine'}",)
+
+
+def _pairs_parts(cfg):
+    return (f"pairs.{cfg.get('method') or 'simhash'}",)
+
+
 def _dedup_embedding(op, df, cfg, kw):
-    method = cfg.get("method")
-    return PARTS[f"embedding.{method if method in ('lsh', 'semantic') else 'cosine'}"
-                 ].apply(df, cfg)
+    return PARTS[_embedding_parts(cfg)[0]].apply(df, cfg)
 
 
 def _near_dup_pairs(df, cfg):
-    method = cfg.get("method", "simhash")
-    if f"pairs.{method}" not in PARTS:
-        raise ValueError(f"near-dup pairs: unknown method {method!r}")
-    return PARTS[f"pairs.{method}"].apply(df, cfg)
+    return PARTS[_pairs_parts(cfg)[0]].apply(df, cfg)
 
 
 def _dedup_cluster(op, df, cfg, kw):
     # pairs -> connected components -> (id, cluster_id) per row, or the
     # canonical row per cluster
-    if cfg.get("emit", "labels") == "canonical":
+    if cfg.get("emit") == "canonical":
         op = _operator("functions.dedup:dedup_canonical")
     return op(df, _near_dup_pairs(df, cfg), **kw)
 
 
-def _codebooks(df, cfg):
-    """Product-quantization codebooks: explicit config, training over the
-    input frame, or the deterministic md5-derived set — in that
-    precedence order."""
+def _codebook_parts(cfg):
+    """Product-quantization codebooks come from explicit config, training
+    over the input frame, or the deterministic md5-derived set (which
+    needs ``dim``) — in that precedence order."""
     if cfg.get("codebooks") is not None:
-        return cfg["codebooks"]
-    if cfg.get("train"):
-        return PARTS["pq.train"].apply(df, cfg)
-    if "dim" not in cfg:
-        raise ValueError("pq stage needs dim (for the deterministic codebooks) "
-                         "unless codebooks/train/index_path is given")
-    books = PARTS["pq.books"]
-    return _operator(books.op)(**books.kwargs(df, cfg))
+        return ()
+    return ("pq.train",) if cfg.get("train") else ("pq.books",)
+
+
+def _codebooks(df, cfg):
+    parts = _codebook_parts(cfg)
+    return PARTS[parts[0]].apply(df, cfg) if parts else cfg["codebooks"]
 
 
 def _pq_topk(op, df, cfg, kw):
     from etl_router_spark.functions import pq
 
     index_path = cfg.get("index_path")
-    # sidecar codebooks win below, so index_path needs no dim
     books = None if index_path else _codebooks(df, cfg)
     queries = _queries(df, cfg)
     if "nprobe" not in cfg and not index_path:
@@ -458,7 +470,8 @@ TRANSFORMS: dict[str, Spec] = {
                    "tiebreak_fields within_watermark window"),
     "ratelimit": Spec("compile.transforms:apply_ratelimit", "key_fields max_rate window "
                       "ts_field on_exceed tiebreak_fields",
-                      renames={"window": "window_duration"}, build=_ratelimit),
+                      renames={"window": "window_duration"}, build=_ratelimit,
+                      choices={"on_exceed": ("drop", "tag", "error", "delay")}),
     # emit/emit_interval pick the streaming output mode and trigger
     "aggregate": Spec("compile.transforms:apply_aggregate",
                       "group_by aggregations window ts_field", extra="emit emit_interval",
@@ -490,18 +503,25 @@ TRANSFORMS: dict[str, Spec] = {
                          "id_field n threshold max_df pair_chunk max_candidates"),
     "dedup_simhash": PARTS["pairs.simhash"],
     "dedup_embedding": Spec(extra=("method", *_keys(*(
-        v for k, v in PARTS.items() if k.startswith("embedding.")))), build=_dedup_embedding),
+        v for k, v in PARTS.items() if k.startswith("embedding.")))), build=_dedup_embedding,
+        choices={"method": _methods("embedding")}, parts=_embedding_parts),
     "dedup_cluster": Spec("functions.dedup:dedup_clusters", "id_field cc_algorithm",
                           renames={"cc_algorithm": "algorithm"},
-                          extra=("emit", "method", *_PAIR_KEYS), build=_dedup_cluster),
+                          extra=("emit", "method", *_PAIR_KEYS), build=_dedup_cluster,
+                          choices={"emit": ("labels", "canonical"),
+                                   "method": _methods("pairs")}, parts=_pairs_parts),
     "similarity_topk": Spec("functions.similarity:brute_force_topk", "k id_field vec_field",
                             extra="query_condition",
                             build=lambda op, df, cfg, kw: op(_queries(df, cfg), df, **kw)),
     "pq_encode": Spec("functions.pq:pq_encode", "id_field vec_field keep_vec", extra=_PQ_KEYS,
-                      build=lambda op, df, cfg, kw: op(df, _codebooks(df, cfg), **kw)),
+                      build=lambda op, df, cfg, kw: op(df, _codebooks(df, cfg), **kw),
+                      parts=_codebook_parts),
+    # index_path's sidecar codebooks win over every other source
     "pq_topk": Spec("functions.pq:pq_adc_topk", "k id_field vec_field",
                     extra=(*_PQ_KEYS, "index_path", "query_condition", "method", "nprobe",
-                           "n_centroids", "shortlist", "occupancy_guard"), build=_pq_topk),
+                           "n_centroids", "shortlist", "occupancy_guard"), build=_pq_topk,
+                    choices={"method": ("sql", "blas")},
+                    parts=lambda cfg: () if cfg.get("index_path") else _codebook_parts(cfg)),
     # model-based quality filter (fastText recipe)
     "quality_classifier": _text("functions.classifier:quality_classifier_apply", "threshold",
                                 extra=("weights", "bias", *_keys(PARTS["classifier.train"])),
@@ -611,7 +631,8 @@ TRANSFORMS: dict[str, Spec] = {
     "leakage_splits": Spec("functions.corpus:leakage_safe_splits",
                            "fractions id_field salt out_field group_field cc_algorithm",
                            renames={"cc_algorithm": "algorithm"}, extra=("method", *_PAIR_KEYS),
-                           build=lambda op, df, cfg, kw: op(df, _near_dup_pairs(df, cfg), **kw)),
+                           build=lambda op, df, cfg, kw: op(df, _near_dup_pairs(df, cfg), **kw),
+                           choices={"method": _methods("pairs")}, parts=_pairs_parts),
     "cdc_apply": Spec("functions.cdc:cdc_apply", "key_fields order_fields op_field delete_values"),
     "split_assign": Spec("functions.corpus:assign_splits", "key_field fractions salt out_field",
                          defaults={"key_field": "doc_id"}),

@@ -67,17 +67,6 @@ def lsh_bucket_keys_sql(vec_sql: str, dim: int, planes: int, tables: int) -> str
     return "array(" + ", ".join(keys) + ")"
 
 
-def lsh_bucket_col(vec_sql: str, dim: int, planes: int, table: int = 0) -> Column:
-    """Sign-pattern bucket id for a vector column (by SQL name): bit p =
-    (v . h_p) > 0. ``table`` offsets the hyperplane family so multiple
-    independent hash tables come from the same formula."""
-    bits = []
-    for p in range(planes):
-        h = _hyperplane(dim, table * planes + p)
-        bits.append(f"(CASE WHEN {_dot_sql(vec_sql, h)} > 0 THEN {2 ** p} ELSE 0 END)")
-    return F.expr(f"CAST(({' + '.join(bits)}) AS INT)")
-
-
 def lsh_bucket_keys(vec_sql: str, dim: int, planes: int, tables: int) -> Column:
     """Array of per-table bucket keys ('t:bucket') for candidate union."""
     return F.expr(lsh_bucket_keys_sql(vec_sql, dim, planes, tables))

@@ -15,11 +15,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
-
 # columns known to be event-time nanos in the fixtures
 _NANO_TS_COLUMNS = {"events": ["ts"]}
 
@@ -243,16 +238,6 @@ def write_bucketed(
         writer = writer.bucketBy(buckets, *bucket_by)
         writer = writer.sortBy(*(sort_by or bucket_by))
     writer.saveAsTable(table)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for spark.sql use."""
-    for t, df in load_all(spark, sf_dir).items():
-        df.createOrReplaceTempView(t)
 
 
 def compact_files(

@@ -12,6 +12,10 @@ and the graph checks of ``conveyor-etl-routing/src/dag.rs:234-375``:
   streaming runner reads, ``transform_type``/``type``), and every key
   whose operator parameter has no default must be present. The error
   names the stage, the key and the allowed keys;
+- transform selector values: a key that picks an operator or a build
+  branch (``method``, ``emit``, ...) must hold one of the values its spec
+  declares, and the required keys of the ``PARTS`` specs the config
+  picks must be present (``dim`` for ``dedup_embedding`` ``method: lsh``);
 - ``spec.limits`` keys and values;
 - pipeline starts at source/fan_in, ends at sink/fan_out;
 - fan_in needs >= 2 inputs, fan_out >= 2 outputs (validation.rs:280-286);
@@ -22,7 +26,7 @@ and the graph checks of ``conveyor-etl-routing/src/dag.rs:234-375``:
 
 from __future__ import annotations
 
-from etl_router_spark.compile.table import TRANSFORMS, Spec
+from etl_router_spark.compile.table import PARTS, TRANSFORMS, Spec
 from etl_router_spark.model.manifest import Pipeline, Stage, StageType
 from etl_router_spark.sources.registry import SOURCE_REGISTRY
 
@@ -116,13 +120,24 @@ def _validate_stage(s: Stage) -> list[str]:
 
 def _check_keys(s: Stage, spec: Spec) -> list[str]:
     """Stage config keys against the type's spec: every key must be one
-    the compiler or the streaming runner reads, and every required one
-    present, so a typo fails here instead of silently keeping a default."""
+    the compiler or the streaming runner reads, every selector value one
+    the spec allows, and every required one present, so a typo fails
+    here instead of silently keeping a default or picking another
+    operator."""
     allowed = spec.allowed()
     errors = [f"stage {s.id!r}: unknown key {k!r} for transform "
               f"{s.transform_type!r} (allowed: {sorted(allowed)})"
               for k in s.config if k not in allowed]
-    errors += [f"stage {s.id!r}: transform {s.transform_type!r} requires key {k!r}"
-               for k in spec.required()
-               if not any(a in s.config for a in spec.spellings(k))]
+    bad = [f"stage {s.id!r}: transform {s.transform_type!r} key {k!r} has value "
+           f"{s.config[k]!r} (allowed: {list(values)})"
+           for k, values in spec.choices.items()
+           if s.config.get(k) is not None and s.config[k] not in values]
+    errors += bad
+    # the PARTS a valid selector picks add their own required keys
+    parts = () if bad else spec.parts(s.config)
+    for owner in (spec, *(PARTS[name] for name in parts)):
+        errors += [f"stage {s.id!r}: transform {s.transform_type!r} requires key {k!r}"
+                   + ("" if owner is spec else f" (read by {owner.op})")
+                   for k in owner.required()
+                   if not any(a in s.config for a in owner.spellings(k))]
     return errors

@@ -866,10 +866,10 @@ def stream_sessionize_on_event(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_sink_grpc_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming delivery to the typed gRPC sink with exactly-once
     epochs (proto/sink.proto:26-30 EXACTLY_ONCE + CommitMarker):
-    foreachBatch guards each epoch with the crash-atomic marker
-    protocol (skip if committed), ships the micro-batch over the real
-    wire via write_sink(grpc), then marks. The stream is RUN TWICE
-    from the same checkpoint — availableNow replays nothing new the
+    foreachBatch runs the engine's per_epoch body: skip a committed
+    epoch, ship the micro-batch over the real wire via write_sink(grpc),
+    then mark it with the crash-atomic marker protocol. The stream is
+    RUN TWICE from the same checkpoint — availableNow replays nothing new the
     second time, and a manually re-invoked epoch function with the
     marker present must NOT resend — so the receiver's staging holds
     each record exactly once, value-checked against the batch oracle."""
@@ -879,7 +879,7 @@ def stream_sink_grpc_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame
     from etl_router_spark.sinks.grpc_client import GrpcLinesReceiver
     from etl_router_spark.sinks.registry import write_sink
     from etl_router_spark.sources.registry import read_source
-    from etl_router_spark.streaming.exactly_once import epoch_committed, mark_epoch
+    from etl_router_spark.streaming.exactly_once import per_epoch
 
     wd = tempfile.mkdtemp(prefix="etl_stream_grpc_eo_")
     stage, markers = f"{wd}/stage", f"{wd}/markers"
@@ -899,15 +899,14 @@ def stream_sink_grpc_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame
     rx = GrpcLinesReceiver(on_payload, b"/conveyor.etl.Ingest/Push")
     seen_epochs: list[int] = []
 
+    ship = per_epoch(lambda batch_df: write_sink(batch_df, {
+        "sink_type": "grpc", "endpoint": f"127.0.0.1:{rx.port}",
+        "batch_size": 256,
+        "retry": {"max_retries": 2, "initial_backoff_ms": 10},
+    }), markers, persist=False)
+
     def ship_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        if epoch_committed(markers, epoch_id):
-            return
-        write_sink(batch_df, {
-            "sink_type": "grpc", "endpoint": f"127.0.0.1:{rx.port}",
-            "batch_size": 256,
-            "retry": {"max_retries": 2, "initial_backoff_ms": 10},
-        })
-        mark_epoch(markers, epoch_id)
+        ship(batch_df, epoch_id)
         seen_epochs.append(epoch_id)
 
     src = _stream_events(spark, sf_dir, wd)

@@ -45,13 +45,6 @@ def h2_frame(ftype: int, flags: int, stream: int, payload: bytes) -> bytes:
 hpack_literal = encode_literal
 
 
-def hpack_parse(block: bytes) -> dict[bytes, bytes]:
-    """One-shot parse with a fresh decoder — only valid for a block
-    that makes no dynamic-table back-references (e.g. our own
-    encoder's output).  Connection loops hold a ``HpackDecoder``."""
-    return HpackDecoder().decode_dict(block)
-
-
 def headers_fragment(flags: int, payload: bytes) -> bytes:
     """Strip RFC 7540 §6.2 PADDED / PRIORITY fields from a HEADERS
     frame payload, returning the raw header-block fragment."""

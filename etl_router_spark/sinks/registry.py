@@ -11,10 +11,12 @@ both decode a file, s3 or gcs sink through ``_file_sink``. ``start_sink``
 streams memory and console natively, and a file, s3 or gcs sink through
 Spark's exactly-once file sink when the output mode is append and the
 config ``mode`` is append or unset. Everything else (an upsert or
-overwrite ``mode``, update output mode, other sink types) is written per
-epoch by ``write_sink`` (at-least-once on a replayed epoch), so each
-epoch gets what a batch run of that epoch gets. Batch parquet writes are
-atomic per job (``proto/sink.proto:26-30``).
+overwrite ``mode``, update output mode, other sink types) is a per-epoch
+query (``streaming.exactly_once.start_per_epoch``) whose epochs
+``write_sink`` writes, so each epoch gets what a batch run of that epoch
+gets: at-least-once on a replayed epoch, or exactly-once per epoch with
+a marker directory. Batch parquet writes are atomic per job
+(``proto/sink.proto:26-30``).
 """
 
 from __future__ import annotations
@@ -267,12 +269,23 @@ def start_sink(
     checkpoint: str,
     trigger: dict[str, Any],
     name: str | None = None,
+    marker_dir: str | None = None,
 ) -> StreamingQuery:
     """Start the streaming query that writes ``df`` to the sink ``cfg``;
-    the module docstring gives the rule that picks the writer."""
+    the module docstring gives the rule that picks the writer. A
+    per-epoch sink commits its epochs under ``marker_dir`` when given."""
     stype = _sink_type(cfg)
-    writer = df.writeStream.option("checkpointLocation", checkpoint).trigger(**trigger)
     qname = cfg.get("name") or name  # memory sink: queryName == table name
+    if stype not in ("memory", "console") and not (
+            stype in _FILE_SINKS and output_mode == "append"
+            and (cfg.get("mode") or "append").lower() == "append"):
+        # imported here: the streaming package imports this module
+        from etl_router_spark.streaming.exactly_once import start_per_epoch
+
+        return start_per_epoch(df, lambda batch_df: write_sink(batch_df, cfg),
+                               checkpoint, trigger, qname, marker_dir,
+                               output_mode, persist=False)
+    writer = df.writeStream.option("checkpointLocation", checkpoint).trigger(**trigger)
     if qname:
         writer = writer.queryName(qname)
     if stype == "memory":
@@ -282,10 +295,5 @@ def start_sink(
         return writer.format("memory").outputMode(mode).start()
     if stype == "console":
         return writer.format("console").outputMode(output_mode).start()
-    if (stype in _FILE_SINKS and output_mode == "append"
-            and (cfg.get("mode") or "append").lower() == "append"):
-        _, path, writer = _file_sink(cfg, writer)
-        return writer.outputMode("append").start(path)
-    return writer.foreachBatch(
-        lambda batch_df, _epoch: write_sink(batch_df, cfg)
-    ).outputMode(output_mode).start()
+    _, path, writer = _file_sink(cfg, writer)
+    return writer.outputMode("append").start(path)

@@ -1,21 +1,25 @@
-"""Exactly-once delivery for the foreachBatch sink path.
+"""Per-epoch delivery: the one ``foreachBatch`` path and its markers.
 
-Spark's native file sink is exactly-once via its manifest log, but
-``foreachBatch`` (the fan-out / jdbc / custom-sink path) only guarantees
-at-least-once: after a failure the epoch whose writes completed but
-whose checkpoint commit didn't is REPLAYED. The reference solves this
-with commit markers + idempotency acks (``proto/sink.proto:26-30,
-67-70``, ack ``DUPLICATE`` ``source.proto:43-48``); the same idea here:
+Native file sinks are exactly-once through Spark's manifest log. Every
+other streaming query is per-epoch: ``start_per_epoch`` starts it with
+``per_epoch`` as its ``foreachBatch`` body. A per-epoch query is
+at-least-once (an epoch whose writes completed but whose checkpoint
+commit did not is replayed), or exactly-once per epoch with a marker
+directory. The reference solves this with commit markers + idempotency
+acks (``proto/sink.proto:26-30, 67-70``, ack ``DUPLICATE``
+``source.proto:43-48``); the same idea here:
 
-- ``idempotent_writer(cfg, marker_dir)`` wraps a batch sink write with a
-  per-epoch commit marker. A replayed epoch finds its marker and is
-  skipped — write-once per epoch id, because Structured Streaming
-  guarantees epoch ids are stable across replays of the same data.
+- ``per_epoch(write, marker_dir)`` writes an epoch, then commits its
+  marker. A replayed epoch finds its marker and is skipped — write-once
+  per epoch id, because Structured Streaming guarantees epoch ids are
+  stable across replays of the same data.
 - ``dedupe_idempotency(df, key)`` drops replayed records by
   idempotency key inside the stream (the record-level guard, e.g. after
   ``envelope.from_kafka`` which builds topic:partition:offset keys).
+- ``jdbc_idempotent_writer`` keeps its epoch markers in the database
+  it writes to.
 
-Markers are one empty file per epoch in ``marker_dir`` — same
+Markers are one small file per epoch in ``marker_dir`` — same
 durability class as the sink itself (put it next to the sink path so
 both survive or vanish together).
 """
@@ -27,8 +31,7 @@ import re
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame
-
-from etl_router_spark.sinks.registry import write_sink
+from pyspark.sql.streaming import StreamingQuery
 
 # SQL identifiers this module interpolates into raw statements (the
 # marker-protocol SQL runs over plain java.sql, outside Spark's quoted
@@ -150,43 +153,50 @@ def mark_epoch(marker_dir: str, epoch_id: int) -> None:
         os.close(dfd)
 
 
-def idempotent_writer(
-    cfg: dict[str, Any], marker_dir: str
-) -> Callable[[DataFrame, int], None]:
-    """foreachBatch function with per-epoch commit markers.
-
-    Write happens before the marker: a crash between them re-runs the
-    write on replay (the write itself must tolerate that — parquet
-    append duplicates are then bounded to ONE epoch, or use an
-    overwrite-by-epoch partition layout for true idempotence, see
-    ``epoch_partitioned_writer``).
-    """
+def per_epoch(write: Callable[[DataFrame], None], marker_dir: str | None = None,
+              persist: bool = True) -> Callable[[DataFrame, int], None]:
+    """The ``foreachBatch`` body of every per-epoch query: skip an epoch
+    whose marker exists, ``write`` the batch (persisted around the write
+    when ``persist``, for writers that read it more than once), then mark
+    the epoch. ``marker_dir=None``: no marker (at-least-once)."""
 
     def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        if epoch_committed(marker_dir, epoch_id):
+        if marker_dir and epoch_committed(marker_dir, epoch_id):
             return  # replayed epoch: sink ack DUPLICATE
-        write_sink(batch_df, cfg)
-        mark_epoch(marker_dir, epoch_id)
+        if persist:
+            batch_df.persist()
+        try:
+            write(batch_df)
+        finally:
+            if persist:
+                batch_df.unpersist()
+        if marker_dir:
+            mark_epoch(marker_dir, epoch_id)
 
     return write_epoch
 
 
-def epoch_partitioned_writer(
-    path: str, fmt: str = "parquet"
-) -> Callable[[DataFrame, int], None]:
-    """Truly idempotent file writes: each epoch overwrites its OWN
-    partition directory (``.../_epoch=<id>/``), so replaying an epoch
-    rewrites identical data in place instead of appending duplicates —
-    the overwrite-by-epoch pattern."""
-
-    def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.write.format(fmt)
-            .mode("overwrite")
-            .save(f"{path}/_epoch={epoch_id}")
-        )
-
-    return write_epoch
+def start_per_epoch(
+    root: DataFrame,
+    write: Callable[[DataFrame], None],
+    checkpoint: str,
+    trigger: dict[str, Any],
+    name: str | None,
+    marker_dir: str | None = None,
+    output_mode: str = "append",
+    persist: bool = True,
+) -> StreamingQuery:
+    """Start the query that hands each epoch of ``root`` to
+    ``per_epoch(write, marker_dir, persist)``: the one place the engine
+    starts a ``foreachBatch`` query."""
+    writer = (root.writeStream
+              .foreachBatch(per_epoch(write, marker_dir, persist))
+              .option("checkpointLocation", checkpoint)
+              .trigger(**trigger)
+              .outputMode(output_mode))
+    if name:
+        writer = writer.queryName(name)
+    return writer.start()
 
 
 def dedupe_idempotency(df: DataFrame, key: str = "idempotency_key",

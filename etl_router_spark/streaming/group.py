@@ -25,9 +25,10 @@ Semantics and caveats, deliberately matching the fan-out writer in
   through ``run_streaming`` — genuine cross-epoch streaming state —
   with a warning naming the stage, and fusion proceeds for the
   remaining stateless-tail members.
-- Delivery is at-least-once per epoch (a retried epoch rewrites every
-  member's sinks); ``exactly_once=True`` adds the CommitMarker skip
-  (``proto/sink.proto:67-70``) shared with the fan-out path.
+- A group query is per-epoch, like every ``foreachBatch`` query of the
+  engine: at-least-once (a retried epoch rewrites every member's
+  sinks), or exactly-once per epoch with ``exactly_once=True``, whose
+  markers live under ``group_<n>_markers``.
 - A route-mode validate inside the shared prefix propagates its DLQ
   side to EVERY member, keyed by the member's own stage id — the same
   contract ``compile_group`` enforces in batch (r11 fix, commit
@@ -52,11 +53,11 @@ from etl_router_spark.compile.pipeline import (
 )
 from etl_router_spark.model.manifest import Pipeline
 from etl_router_spark.sinks.registry import same_file_target
+from etl_router_spark.streaming.exactly_once import start_per_epoch
 from etl_router_spark.streaming.runner import (
     DEFAULT_TRIGGER,
     StreamingExecution,
     _stateful_stage,
-    per_epoch,
     run_streaming,
 )
 
@@ -65,7 +66,6 @@ def _make_group_writer(
     spark: SparkSession,
     g: OptimizedGroup,
     dlq_sink: dict[str, Any] | None,
-    marker_dir: str | None,
 ):
     """The per-epoch replay: shared prefix once, then every tail; all
     members' sinks and DLQ frames are written in one concurrent step."""
@@ -96,7 +96,7 @@ def _make_group_writer(
             if prefix_ids:
                 shared_df.unpersist()
 
-    return per_epoch(write, marker_dir)
+    return write
 
 
 def run_streaming_group(
@@ -178,16 +178,8 @@ def run_streaming_group(
         src_outputs: dict[str, DataFrame] = {}
         compile_stages(spark, rep, [src_id], src_outputs, streaming=True,
                        source_overrides=source_overrides)
-        writer = _make_group_writer(
-            spark, g, dlq_sink,
+        queries[f"group:{gi}:{g.source_label}"] = start_per_epoch(
+            src_outputs[src_id], _make_group_writer(spark, g, dlq_sink),
+            f"{checkpoint_root}/group_{gi}", trig, f"group.{g.source_label}",
             f"{checkpoint_root}/group_{gi}_markers" if exactly_once else None)
-        q = (
-            src_outputs[src_id].writeStream
-            .foreachBatch(writer)
-            .option("checkpointLocation", f"{checkpoint_root}/group_{gi}")
-            .trigger(**trig)
-            .queryName(f"group.{g.source_label}")
-            .start()
-        )
-        queries[f"group:{gi}:{g.source_label}"] = q
     return StreamingExecution(queries)

@@ -20,25 +20,27 @@ Maps the reference's streaming control plane onto Structured Streaming:
   pacing (maxFilesPerTrigger / maxOffsetsPerTrigger), configured on the
   source, not here — Spark's pull model needs no credit protocol.
 
-Delivery: sinks outside the shared writers start through
-``sinks.registry.start_sink`` from the config a batch run writes:
-append-mode file, s3 and gcs sinks (config ``mode`` append or unset)
-use Spark's exactly-once file sink; upsert/overwrite, update output mode
-and other sink types are written per epoch by ``write_sink``, as the
-fan-out and fan-in writers write theirs. A shared writer's epoch
-writes all its sinks and DLQ frames through ``write_outputs``:
-concurrently across targets, in order per target. When one write fails,
-the others still finish, the query fails, and the epoch (never marked)
-is replayed. Per-epoch writes are therefore at-least-once — pair with
-idempotent sinks, dedupe on ``idempotency_key`` downstream
-(``proto/sink.proto:26-30``) or pass ``exactly_once=True``. A shared
-writer replays its stages as a batch plan per epoch, so none of them
-may keep state across epochs.
+Delivery: one rule. Native file sinks (append-mode file, s3 and gcs
+sinks, config ``mode`` append or unset, started by
+``sinks.registry.start_sink``) are exactly-once through Spark's log.
+Every other query is per-epoch and starts through
+``streaming.exactly_once.start_per_epoch``: the fan-in, fan-out and
+fused-group writers, per-epoch DLQ queries, and ``start_sink``'s
+upsert/overwrite, update-mode and non-file sinks. A per-epoch query is
+at-least-once: when a write fails the query fails and the epoch is
+replayed. With ``exactly_once=True`` it is exactly-once per epoch: the
+epoch commits a marker under ``markers_<root stage>`` after its writes,
+and a replayed epoch that finds its marker is skipped. A shared writer's
+epoch writes all its sinks and DLQ frames through ``write_outputs``:
+concurrently across targets, in order per target; when one write fails
+the others still finish and the epoch is not marked. A shared writer
+replays its stages as a batch plan per epoch, so none of them may keep
+state across epochs.
 """
 
 from __future__ import annotations
 
-from typing import Any, Callable
+from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
@@ -50,7 +52,7 @@ from etl_router_spark.compile.pipeline import (
 )
 from etl_router_spark.model.manifest import Pipeline, StageType
 from etl_router_spark.sinks.registry import start_sink
-from etl_router_spark.streaming.exactly_once import epoch_committed, mark_epoch
+from etl_router_spark.streaming.exactly_once import start_per_epoch
 
 DEFAULT_TRIGGER: dict[str, Any] = {"availableNow": True}
 
@@ -144,27 +146,6 @@ def _descendant_order(pipeline: Pipeline, root: str) -> list[str]:
     return [s for s in pipeline.topological_order() if s in reach]
 
 
-def per_epoch(write: Callable[[DataFrame], None],
-              marker_dir: str | None = None) -> Callable[[DataFrame, int], None]:
-    """The ``foreachBatch`` body of the fan-out, fan-in and fused-group
-    writers: skip an epoch whose marker exists, persist the batch,
-    ``write`` it, unpersist, mark. ``marker_dir=None``: no marker
-    (at-least-once); see ``streaming.exactly_once``."""
-
-    def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        if marker_dir and epoch_committed(marker_dir, epoch_id):
-            return
-        batch_df.persist()
-        try:
-            write(batch_df)
-        finally:
-            batch_df.unpersist()
-        if marker_dir:
-            mark_epoch(marker_dir, epoch_id)
-
-    return write_epoch
-
-
 def _derive_trigger(pipeline: Pipeline) -> dict[str, Any] | None:
     """``emit: periodic`` (types.rs:634-641 AggregateEmit::Periodic) is
     a timer-driven emit of current aggregate state: map it to a
@@ -203,17 +184,19 @@ def run_streaming(
     stage's state across epochs. Each query checkpoints independently
     under ``checkpoint_root``.
 
-    ``exactly_once=True``: fan-out epochs commit a marker after writing
-    all sinks (``streaming.exactly_once``); a replayed epoch that
-    already carries a marker is skipped — CommitMarker semantics
-    (``proto/sink.proto:67-70``).
+    ``exactly_once=True``: every per-epoch query (fan-in, fan-out, DLQ
+    and non-native sink queries) commits a marker under
+    ``{checkpoint_root}/markers_<root stage>`` after its epoch's writes;
+    a replayed epoch that already carries a marker is skipped —
+    CommitMarker semantics (``proto/sink.proto:67-70``). Native file
+    sinks are exactly-once through Spark's log either way.
 
     A DLQ gets Spark's native file sink only when ``dlq_sink`` is None
     and one query of this pipeline is its sole writer: the sink's
     ``_spark_metadata`` log admits one query and hides files it did not
     write, and a ``dlq_sink`` override may be shared with other
     pipelines. Otherwise every DLQ frame is written per epoch through
-    ``write_outputs``, under its DLQ lock (at-least-once on replay).
+    ``write_outputs``, under its DLQ lock.
     A caller that starts several pipelines whose manifests declare one
     DLQ directory passes it as ``dlq_sink`` (``run_streaming_group``
     does).
@@ -241,6 +224,10 @@ def run_streaming(
             break
     queries: dict[str, StreamingQuery] = {}
     handled: set[str] = set()
+
+    def markers(root: str) -> str | None:
+        """The marker directory of the per-epoch query rooted at ``root``."""
+        return f"{checkpoint_root}/markers_{root}" if exactly_once else None
 
     # fan-in stages with a declared late_policy get the reference's
     # per-source watermark semantics (watermark.rs:84-147): each epoch
@@ -321,18 +308,12 @@ def run_streaming(
                                        failed_stage=fid, pipeline=pipeline.name)
                 write_outputs(pipeline, sinks, dlqs, dlq_sink)
 
-            return per_epoch(write)
+            return write
 
-        q = (
-            tagged.writeStream.foreachBatch(
-                make_fanin_writer(fid, order, tracker, ts_field, policy)
-            )
-            .option("checkpointLocation", f"{checkpoint_root}/fanin_{fid}")
-            .trigger(**trig)
-            .queryName(f"{pipeline.name}.fanin.{fid}")
-            .start()
-        )
-        queries[f"fanin:{fid}"] = q
+        queries[f"fanin:{fid}"] = start_per_epoch(
+            tagged, make_fanin_writer(fid, order, tracker, ts_field, policy),
+            f"{checkpoint_root}/fanin_{fid}", trig,
+            f"{pipeline.name}.fanin.{fid}", markers(fid))
         handled.update(order)
 
     # a fan-out with >= 2 sinks below it and no stateful stage there
@@ -345,19 +326,13 @@ def run_streaming(
                 for s in order) < 2
                 or _stateful_stage(pipeline, order) is not None):
             continue
-        write = per_epoch(
+        queries[f"fanout:{fid}"] = start_per_epoch(
+            compiled.stage_frames[fid],
             lambda b, fid=fid, order=order: write_outputs(
                 pipeline, *compile_stages(spark, pipeline, order, {fid: b}),
                 dlq_sink),
-            f"{checkpoint_root}/markers_{fid}" if exactly_once else None)
-        q = (
-            compiled.stage_frames[fid].writeStream.foreachBatch(write)
-            .option("checkpointLocation", f"{checkpoint_root}/fanout_{fid}")
-            .trigger(**trig)
-            .queryName(f"{pipeline.name}.fanout.{fid}")
-            .start()
-        )
-        queries[f"fanout:{fid}"] = q
+            f"{checkpoint_root}/fanout_{fid}", trig,
+            f"{pipeline.name}.fanout.{fid}", markers(fid))
         handled.update(order)
 
     for sid, df in compiled.sink_frames.items():
@@ -367,6 +342,7 @@ def run_streaming(
             df, pipeline.stages[sid].config, infer_output_mode(pipeline, sid),
             f"{checkpoint_root}/{sid}", trig,
             name=f"{pipeline.name}_{sid}".replace("-", "_"),
+            marker_dir=markers(sid),
         )
 
     # the writers above write the DLQ frames of the stages they replay;
@@ -383,13 +359,13 @@ def run_streaming(
             ckpt = f"{checkpoint_root}/dlq_{sid}"
             name = f"{pipeline.name}_dlq_{sid}".replace("-", "_")
             queries[f"dlq:{sid}"] = (
-                start_sink(df, dlq_cfg, "append", ckpt, trig, name=name)
+                start_sink(df, dlq_cfg, "append", ckpt, trig, name=name,
+                           marker_dir=markers(sid))
                 if sole else
-                df.writeStream.foreachBatch(
-                    lambda b, _, sid=sid: write_outputs(
-                        pipeline, {}, {sid: b}, dlq_sink))
-                .option("checkpointLocation", ckpt).trigger(**trig)
-                .queryName(name).start()
+                start_per_epoch(
+                    df, lambda b, sid=sid: write_outputs(
+                        pipeline, {}, {sid: b}, dlq_sink),
+                    ckpt, trig, name, markers(sid), persist=False)
             )
 
     return StreamingExecution(queries)

@@ -265,6 +265,44 @@ def test_typos_fail_validation(case, config, needle):
         assert "allowed: [" in str(err.value)
 
 
+@pytest.mark.parametrize("case, config, needle", [
+    # a misspelled selector value: it used to pick another operator or
+    # fail only at compile
+    ("dedup_embedding", {"method": "lshh"}, "key 'method' has value 'lshh'"),
+    ("dedup_cluster", {"emit": "canonicl"}, "key 'emit' has value 'canonicl'"),
+    ("dedup_cluster", {"method": "minhashh"}, "key 'method' has value 'minhashh'"),
+    ("leakage_splits", {"method": "minhashh"}, "key 'method' has value 'minhashh'"),
+    ("pq_topk", {"method": "fast"}, "key 'method' has value 'fast'"),
+    ("ratelimit", {"on_exceed": "dorp"}, "key 'on_exceed' has value 'dorp'"),
+    # a key only the picked PARTS operator requires
+    ("dedup_embedding", {"method": "lsh", "dim": None}, "requires key 'dim'"),
+    ("pq_encode", {"dim": None}, "requires key 'dim'"),
+    ("pq_topk", {"dim": None}, "requires key 'dim'"),
+])
+def test_selectors_fail_validation(case, config, needle):
+    from etl_router_spark.model.validation import ValidationError, validate_pipeline
+
+    with pytest.raises(ValidationError, match=needle) as err:
+        validate_pipeline(_smoke(case, **config))
+    assert "stage 't'" in str(err.value)
+    if "requires" not in needle:
+        assert "allowed: [" in str(err.value)
+
+
+@pytest.mark.parametrize("case, config", [
+    ("dedup_embedding", {"method": None}),  # unset: the cosine path
+    ("dedup_embedding", {"method": "cosine"}),
+    ("dedup_cluster", {"emit": None, "method": None}),  # labels, simhash
+    ("pq_encode", {"dim": None, "train": True}),
+    ("pq_encode", {"dim": None, "codebooks": [[[0.0, 0.0]]]}),
+    ("pq_topk", {"dim": None, "index_path": "/i"}),
+])
+def test_selector_defaults_and_alternatives_validate(case, config):
+    from etl_router_spark.model.validation import validate_pipeline
+
+    validate_pipeline(_smoke(case, **config))
+
+
 def test_alias_and_streaming_keys_validate():
     from etl_router_spark.model.validation import validate_pipeline
 
