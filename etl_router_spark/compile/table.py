@@ -32,7 +32,7 @@ import re
 import warnings
 from dataclasses import dataclass, field, replace
 from functools import cache
-from typing import Any, Callable, Mapping
+from typing import Any, Callable, Literal, Mapping, get_args, get_origin, get_type_hints
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as sqltypes
@@ -85,8 +85,10 @@ class Spec:
     key list may be written as one space-separated string.
     ``build(op, df, cfg, kwargs)`` replaces the plain ``op(df, **kwargs)``.
     ``choices`` maps a key whose value picks an operator or a build branch
-    to its allowed values; ``parts(cfg)`` names the ``PARTS`` specs the
-    build applies for ``cfg``, whose required keys the stage then needs.
+    to its allowed values (a key filling a ``Literal[...]`` parameter gets
+    them from the annotation); ``parts(cfg)`` names the ``PARTS`` specs the
+    build applies for ``cfg``, whose required keys the stage then needs;
+    ``unread`` maps a key to the keys picking a branch that ignores it.
     """
 
     op: str | None = None
@@ -99,6 +101,7 @@ class Spec:
     build: Callable[..., Any] | None = None
     choices: Mapping[str, tuple[str, ...]] = field(default_factory=dict)
     parts: Callable[[Mapping[str, Any]], tuple[str, ...]] = lambda cfg: ()
+    unread: Mapping[str, tuple[str, ...]] = field(default_factory=dict)
 
     def __post_init__(self):
         for name in ("keys", "sources", "extra"):
@@ -116,6 +119,15 @@ class Spec:
 
     def allowed(self) -> set[str]:
         return {"transform_type", "type", *self.keys, *self.aliases, *self.extra}
+
+    def selectors(self) -> dict[str, tuple]:
+        """The keys whose value must be one of a fixed set, with that set."""
+        if not self.op:
+            return dict(self.choices)
+        hints = get_type_hints(_operator(self.op))
+        lits = {k: get_args(hints[p]) for k in (*self.keys, *self.extra)
+                if get_origin(hints.get(p := self.param(k))) is Literal}
+        return {**lits, **self.choices}
 
     def required(self) -> list[str]:
         """Keys whose parameter has neither a signature nor a manifest
@@ -470,8 +482,7 @@ TRANSFORMS: dict[str, Spec] = {
                    "tiebreak_fields within_watermark window"),
     "ratelimit": Spec("compile.transforms:apply_ratelimit", "key_fields max_rate window "
                       "ts_field on_exceed tiebreak_fields",
-                      renames={"window": "window_duration"}, build=_ratelimit,
-                      choices={"on_exceed": ("drop", "tag", "error", "delay")}),
+                      renames={"window": "window_duration"}, build=_ratelimit),
     # emit/emit_interval pick the streaming output mode and trigger
     "aggregate": Spec("compile.transforms:apply_aggregate",
                       "group_by aggregations window ts_field", extra="emit emit_interval",
@@ -520,7 +531,8 @@ TRANSFORMS: dict[str, Spec] = {
     "pq_topk": Spec("functions.pq:pq_adc_topk", "k id_field vec_field",
                     extra=(*_PQ_KEYS, "index_path", "query_condition", "method", "nprobe",
                            "n_centroids", "shortlist", "occupancy_guard"), build=_pq_topk,
-                    choices={"method": ("sql", "blas")},
+                    # method picks the flat ADC scorer; IVF-PQ has one
+                    unread={"method": ("nprobe", "index_path")},
                     parts=lambda cfg: () if cfg.get("index_path") else _codebook_parts(cfg)),
     # model-based quality filter (fastText recipe)
     "quality_classifier": _text("functions.classifier:quality_classifier_apply", "threshold",

@@ -19,7 +19,7 @@ Design rules (scale-first):
 from __future__ import annotations
 
 from functools import reduce
-from typing import Any
+from typing import Any, Literal
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -437,7 +437,7 @@ def apply_ratelimit(
     max_rate: int,
     window_duration: str = "1 hour",
     ts_field: str = "event_time",
-    on_exceed: str = "drop",
+    on_exceed: Literal["drop", "tag", "error", "delay"] = "drop",
     tiebreak_fields: list[str] | None = None,
     tag_field: str = "rate_limited",
 ) -> DataFrame:

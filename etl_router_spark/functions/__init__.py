@@ -13,7 +13,6 @@ from etl_router_spark.functions.text import (  # noqa: F401
     text_stats,
     language_id,
     fingerprint,
-    shingles,
 )
 from etl_router_spark.functions.dedup import (  # noqa: F401
     CandidateBudgetExceeded,

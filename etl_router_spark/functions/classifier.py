@@ -31,6 +31,7 @@ import hashlib
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_router_spark.functions.sqltext import sql_double, sql_ident
 from etl_router_spark.functions.text import h60_sql, tokens_sql
 
 __all__ = [
@@ -71,13 +72,13 @@ def quality_score_sql(text_expr: str, weights: list[float], bias: float,
     big enough that materializing them costs what recomputing saves —
     so the default stays inline and this hook exists for callers that
     already HAVE a token column. Scores are bit-identical either way."""
-    w_arr = "array(" + ",".join(f"{w!r}D" for w in weights) + ")"
+    w_arr = "array(" + ",".join(map(sql_double, weights)) + ")"
     toks = (toks_expr or
             f"filter({tokens_sql(f'lower({text_expr})')}, t -> t != '')")
     s = (f"aggregate({toks}, 0D, (acc, t) -> "
          f"acc + element_at({w_arr}, {_bucket_sql('t', num_features)} + 1))")
     z = (f"(CASE WHEN size({toks}) > 0 "
-         f"THEN {s} / size({toks}) ELSE 0D END + {bias!r}D)")
+         f"THEN {s} / size({toks}) ELSE 0D END + {sql_double(bias)})")
     return f"round(1D / (1D + exp(-({z}))), 6)"
 
 
@@ -93,10 +94,10 @@ def quality_classifier_apply(
     """Score every document with literal weights: one token pass per
     row, fully map-side. Adds ``out_col`` (rounded sigmoid) and
     ``label_col`` (score >= threshold)."""
-    score = quality_score_sql(text_col, weights, bias, len(weights))
+    score = quality_score_sql(sql_ident(text_col), weights, bias, len(weights))
     return df.selectExpr(
         "*",
-        f"{score} AS {out_col}",
+        f"{score} AS {sql_ident(out_col, alias=True)}",
     ).withColumn(label_col, (F.col(out_col) >= F.lit(threshold)).cast("int"))
 
 
@@ -129,13 +130,13 @@ def quality_classifier_train(
     # x17-50 at F=256 on 3 KB docs (SCALE.md round-14); unlike the
     # entropy/apply cases the hoisted array is small ints, so
     # materializing it is cheap and the saved work (md5) is expensive
-    toks = f"filter({tokens_sql(f'lower({text_col})')}, t -> t != '')"
+    toks = f"filter({tokens_sql(f'lower({sql_ident(text_col)})')}, t -> t != '')"
     bks = f"transform({toks}, t -> {_bucket_sql('t', num_features)})"
     dense = (f"transform(sequence(0, {num_features - 1}), "
              f"b -> CAST(size(filter(__qc_bks, x -> x = b)) AS DOUBLE)"
              f" / greatest(size(__qc_bks), 1))")
     feats = df.withColumn("__qc_bks", F.expr(bks)).selectExpr(
-        f"CAST({label_col} AS DOUBLE) AS label", f"{dense} AS f"
+        f"CAST({sql_ident(label_col)} AS DOUBLE) AS label", f"{dense} AS f"
     ).select("label", array_to_vector(F.col("f")).alias("features"))
     lr = LogisticRegression(maxIter=max_iter, regParam=reg_param)
     model = lr.fit(feats)

@@ -26,10 +26,28 @@ twins are exact across engines.
 
 from __future__ import annotations
 
+from typing import Literal, get_args
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_router_spark.functions.text import h60, shingles, tokens_col
+from etl_router_spark.functions.sqltext import sql_ident, sql_str
+from etl_router_spark.functions.text import DropOrTag, bound_shingles_sql, h60_sql, tokens_sql
+
+# domain_cap's ranking: exact per-host windows, a precomputed
+# threshold, or both
+CapMethod = Literal["exact", "threshold", "hybrid"]
+
+
+def _salted_h60(salt: str, key_col: str) -> Column:
+    """``h60(salt|key)``, the draw of the hash-bucketed samplers."""
+    key = f"CAST({sql_ident(key_col)} AS STRING)"
+    return F.expr(h60_sql(f"concat({sql_str(f'{salt}|')}, {key})"))
+
+
+def _distinct_grams(text_col: str, n: int) -> Column:
+    """The distinct word ``n``-grams of ``text_col`` as an array."""
+    return F.expr(f"array_distinct({bound_shingles_sql(sql_ident(text_col), n)})")
 
 
 def contaminated_ids(
@@ -51,10 +69,10 @@ def contaminated_ids(
     """
     doc_grams = docs.select(
         F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(shingles(F.col(text_col), n))).alias("gram"),
+        F.explode(_distinct_grams(text_col, n)).alias("gram"),
     )
     bench_grams = benchmark.select(
-        F.explode(F.array_distinct(shingles(F.col(text_col), n))).alias("gram")
+        F.explode(_distinct_grams(text_col, n)).alias("gram")
     ).distinct()
     if broadcast_benchmark:
         bench_grams = F.broadcast(bench_grams)
@@ -67,7 +85,7 @@ def decontaminate(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 8,
-    mode: str = "drop",
+    mode: DropOrTag = "drop",
     tag_field: str = "contaminated",
     broadcast_benchmark: bool = True,
 ) -> DataFrame:
@@ -80,7 +98,7 @@ def decontaminate(
     if mode == "tag":
         flagged = bad.withColumn(tag_field, F.lit(True))
         return docs.join(flagged, id_col, "left").fillna(False, [tag_field])
-    raise ValueError(f"mode must be drop|tag, got {mode!r}")
+    raise ValueError(f"mode must be {'|'.join(get_args(DropOrTag))}, got {mode!r}")
 
 
 def decontaminate_fuzzy(
@@ -93,7 +111,7 @@ def decontaminate_fuzzy(
     bands: int = 4,
     shingle_n: int = 3,
     threshold: float = 0.5,
-    mode: str = "drop",
+    mode: DropOrTag = "drop",
     tag_field: str = "contaminated",
     benchmark_index: DataFrame | None = None,
     hash_family: str = "h60",
@@ -168,7 +186,7 @@ def decontaminate_fuzzy(
     if mode == "tag":
         flagged = bad.withColumn(tag_field, F.lit(True))
         return docs.join(flagged, id_col, "left").fillna(False, [tag_field])
-    raise ValueError(f"mode must be drop|tag, got {mode!r}")
+    raise ValueError(f"mode must be {'|'.join(get_args(DropOrTag))}, got {mode!r}")
 
 
 def _bloom_pos_sql(gram_expr: str, m_bits: int, k: int,
@@ -317,7 +335,7 @@ def _bloom_packed_words(benchmark: DataFrame, text_col: str, n: int,
     # so an under-partitioned benchmark scan runs it on one core; spread
     # first (no-op at real scale — see spread_small_scan)
     grams = spread_small_scan(benchmark).selectExpr(
-        f"explode(array_distinct({bound_shingles_sql(text_col, n)})) AS gram"
+        f"explode(array_distinct({bound_shingles_sql(sql_ident(text_col), n)})) AS gram"
     ).distinct()
     if hash_family == "h60":
         # hoist the digests into their own projection so each md5 is
@@ -435,7 +453,7 @@ def bloom_decontaminate(
     n: int = 8,
     m_bits: int = 1 << 16,
     k: int = 3,
-    mode: str = "drop",
+    mode: DropOrTag = "drop",
     tag_field: str = "contaminated",
     hash_family: str = "h60",
     broadcast: bool | str = "auto",
@@ -561,14 +579,14 @@ def bloom_decontaminate(
         digs = _h60_digests_sql("g", k)
         pos = _bloom_pos_hoisted_sql("ds", m_bits, k)
         flag_sql = (
-            f"exists(transform({bound_shingles_sql(text_col, n)}, "
+            f"exists(transform({bound_shingles_sql(sql_ident(text_col), n)}, "
             f"g -> array({', '.join(digs)})), ds -> "
             f"forall(array({', '.join(pos)}), {bit_test}))"
         )
     else:
         pos = _bloom_pos_sql("g", m_bits, k, hash_family)
         flag_sql = (
-            f"exists({bound_shingles_sql(text_col, n)}, g -> "
+            f"exists({bound_shingles_sql(sql_ident(text_col), n)}, g -> "
             f"forall(array({', '.join(pos)}), {bit_test}))"
         )
     flagged = probe.withColumn(tag_field, F.expr(flag_sql)).drop("__bf")
@@ -595,7 +613,7 @@ def bloom_decontaminate(
         return flagged.filter(keep).drop(tag_field)
     if mode == "tag":
         return flagged
-    raise ValueError(f"mode must be drop|tag, got {mode!r}")
+    raise ValueError(f"mode must be {'|'.join(get_args(DropOrTag))}, got {mode!r}")
 
 
 def hash_sample(
@@ -615,7 +633,7 @@ def hash_sample(
     makes staged scale-ups consistent). ``strata_rates`` overrides the
     base rate per value of ``strata_col`` (domain mixing).
     """
-    bucket = F.pmod(h60(F.concat(F.lit(f"{salt}|"), F.col(key_col).cast("string"))), F.lit(1_000_000))
+    bucket = F.pmod(_salted_h60(salt, key_col), F.lit(1_000_000))
     if strata_col and strata_rates:
         thr: Column = F.lit(int(rate * 1_000_000))
         for value, r in sorted(strata_rates.items()):
@@ -642,14 +660,14 @@ def chunk_documents(
     """
     if stride <= 0 or window <= 0:
         raise ValueError("window and stride must be positive")
-    toks = tokens_col(text_col)
+    toks = F.expr(tokens_sql(sql_ident(text_col)))
     n = F.size(toks)
     n_chunks = F.when(n <= window, F.lit(1)).otherwise(
         F.ceil((n - window) / F.lit(float(stride))).cast("int") + 1
     )
     out = df.withColumn("chunk_id", F.explode(F.sequence(F.lit(0), n_chunks - 1)))
     start = F.col("chunk_id") * stride + 1  # slice() is 1-based
-    piece = F.slice(tokens_col(text_col), start, window)
+    piece = F.slice(toks, start, window)
     return (
         out.withColumn("chunk_text", F.concat_ws(" ", piece))
         .withColumn("n_chunk_tokens", F.size(piece).cast("bigint"))
@@ -832,7 +850,7 @@ def assign_splits(
     if abs(total - 1.0) > 1e-9:
         raise ValueError(f"fractions must sum to 1, got {total}")
     bucket = F.pmod(
-        h60(F.concat(F.lit(f"{salt}|"), F.col(key_col).cast("string"))),
+        _salted_h60(salt, key_col),
         F.lit(1_000_000),
     )
     names = list(fractions)
@@ -911,10 +929,10 @@ def segment_lines(
     if tokens_per_line is not None:
         if tokens_per_line <= 0:
             raise ValueError("tokens_per_line must be positive")
-        # tokens bound once per row (r15, the shingles() trap): a
+        # tokens bound once per row (r15, the bound_shingles_sql trap): a
         # captured split EXPRESSION in the per-window lambda would
         # re-tokenize once per LINE segment — O(len^2/window) per doc
-        toks = tokens_col(text_col)
+        toks = F.expr(tokens_sql(sql_ident(text_col)))
 
         def _windows(t: Column) -> Column:
             n_lines = F.ceil(F.size(t) / F.lit(float(tokens_per_line))).cast("int")
@@ -967,8 +985,8 @@ def line_dedup(
     set); this is part of the training-data surface built on top.
     """
     lines = segment_lines(df, id_col, text_col, delimiter, tokens_per_line)
-    norm = F.lower(F.regexp_replace(F.trim(F.col("line")), r"\s+", " "))
-    keyed = lines.withColumn("line_key", h60(norm))
+    norm = "lower(regexp_replace(trim(line), '\\\\s+', ' '))"
+    keyed = lines.withColumn("line_key", F.expr(h60_sql(norm)))
 
     winners = (
         keyed.groupBy("line_key")
@@ -1084,7 +1102,7 @@ def mix_sample(
         # differently per engine)
         wdf = spark.createDataFrame(
             [(k, float(v)) for k, v in sorted(weights.items())],
-            f"`{domain_col}` string, __w double",
+            f"{sql_ident(domain_col, alias=True)} string, __w double",
         )
         nw = sizes.join(F.broadcast(wdf), domain_col)
     scale = nw.agg(F.min(F.col("__n") / F.col("__w")).alias("__scale"))
@@ -1095,7 +1113,7 @@ def mix_sample(
         .select(domain_col, "__rate")
     )
     bucket = F.pmod(
-        h60(F.concat(F.lit(f"{salt}|"), F.col(key_col).cast("string"))), F.lit(1_000_000)
+        _salted_h60(salt, key_col), F.lit(1_000_000)
     )
     out = (
         df.join(F.broadcast(rates), domain_col)
@@ -1159,7 +1177,7 @@ def epoch_upsample(
     wsum = float(sum(float(v) for v in weights.values()))
     wdf = spark.createDataFrame(
         [(k, float(v)) for k, v in sorted(weights.items())],
-        f"`{domain_col}` string, __w double",
+        f"{sql_ident(domain_col, alias=True)} string, __w double",
     )
     epochs = (
         sizes.join(F.broadcast(wdf), domain_col)
@@ -1179,7 +1197,7 @@ def epoch_upsample(
         .select(domain_col, "__epochs")
     )
     bucket = F.pmod(
-        h60(F.concat(F.lit(f"{salt}|"), F.col(key_col).cast("string"))),
+        _salted_h60(salt, key_col),
         F.lit(1_000_000),
     )
     full = F.floor(F.col("__epochs")).cast("int")
@@ -1226,15 +1244,11 @@ def snapshot_diff(
     if not compare_cols:
         raise ValueError("snapshot_diff: no columns to compare")
 
-    def digest(side: DataFrame) -> Column:
-        parts = []
-        for c in compare_cols:
-            parts.append(F.coalesce(F.col(c).cast("string"), F.lit("\x00")))
-            parts.append(F.lit("\x1f"))
-        return h60(F.concat(*parts[:-1]))
-
-    o = old.select(F.col(id_col), digest(old).alias("old_digest"))
-    n = new.select(F.col(id_col), digest(new).alias("new_digest"))
+    digest = F.expr(h60_sql("concat({})".format(f", {sql_str(chr(0x1f))}, ".join(
+        f"coalesce(CAST({sql_ident(c)} AS STRING), {sql_str(chr(0))})"
+        for c in compare_cols))))
+    o = old.select(F.col(id_col), digest.alias("old_digest"))
+    n = new.select(F.col(id_col), digest.alias("new_digest"))
     status = (
         F.when(F.col("old_digest").isNull(), F.lit("added"))
         .when(F.col("new_digest").isNull(), F.lit("removed"))
@@ -1468,7 +1482,7 @@ def domain_cap(
     url_col: str = "url",
     cap: int = 100,
     id_col: str = "doc_id",
-    method: str = "exact",
+    method: CapMethod = "exact",
     host_col: str | None = None,
     domain_counts: DataFrame | None = None,
     seed: int = 0,
@@ -1519,14 +1533,14 @@ def domain_cap(
     """
     from etl_router_spark.functions.text import url_host
 
-    if method not in ("exact", "threshold", "hybrid"):
+    if method not in get_args(CapMethod):
         raise ValueError(f"domain_cap: unknown method {method!r}")
     if cap <= 0:
         raise ValueError("domain_cap: cap must be positive")
     host = F.col(host_col) if host_col else url_host(F.col(url_col))
     hdf = df.withColumn("host", host)
-    rank_key = h60(F.concat_ws(
-        "|", F.lit(str(seed)), F.col(id_col).cast("string")))
+    rank_key = F.expr(h60_sql(
+        f"concat_ws('|', {sql_str(str(seed))}, CAST({sql_ident(id_col)} AS STRING))"))
 
     def exact_cap(frame: DataFrame) -> DataFrame:
         w = Window.partitionBy("host").orderBy(
@@ -1675,7 +1689,7 @@ def filter_yield_curve(
     stacked = ", ".join(
         f"CAST({repr(float(t))} AS DOUBLE), __d{i}, __u{i}"
         for i, t in enumerate(thresholds))
-    cols = ([group_col] if group_col else []) + [
+    cols = ([sql_ident(group_col)] if group_col else []) + [
         f"stack({len(thresholds)}, {stacked}) AS "
         "(threshold, n_docs_kept, n_units_kept)",
         "__n", "__u",
@@ -1727,18 +1741,15 @@ def redact_contaminated_spans(
     Output: input columns plus ``out_col``, ``n_tokens_redacted``
     (tokens removed), ``n_spans`` (contiguous redacted runs).
     """
-    sent = "'" + sentinel.replace("'", "''") + "'"
-    from etl_router_spark.functions.text import tokens_sql as _tok_sql
-
-    toks_sql = _tok_sql(f"`{text_col}`")
-    grams = shingles(F.col(text_col), n)
+    sent = sql_str(sentinel)
+    toks_sql = tokens_sql(sql_ident(text_col))
+    grams = F.expr(bound_shingles_sql(sql_ident(text_col), n))
     doc_grams = docs.select(
         F.col(id_col).alias("__id"),
         F.posexplode(grams).alias("__pos", "__gram"),
     )
     bench_grams = benchmark.select(
-        F.explode(F.array_distinct(shingles(F.col(text_col), n)))
-         .alias("__gram")
+        F.explode(_distinct_grams(text_col, n)).alias("__gram")
     ).distinct()
     if broadcast_benchmark:
         bench_grams = F.broadcast(bench_grams)
@@ -1800,13 +1811,11 @@ def contamination_report(
     """
     bench_grams = benchmark.select(
         F.col(bench_id_col).alias("bench_id"),
-        F.explode(F.array_distinct(shingles(F.col(text_col), n)))
-         .alias("gram"),
+        F.explode(_distinct_grams(text_col, n)).alias("gram"),
     ).distinct()
     doc_grams = docs.select(
         F.col(id_col).alias("corpus_id"),
-        F.explode(F.array_distinct(shingles(F.col(text_col), n)))
-         .alias("gram"),
+        F.explode(_distinct_grams(text_col, n)).alias("gram"),
     )
     hits = (
         doc_grams.join(F.broadcast(bench_grams), "gram")

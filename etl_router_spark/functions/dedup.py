@@ -25,12 +25,14 @@ from __future__ import annotations
 
 import math
 import weakref
+from typing import Literal, get_args
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from etl_router_spark.functions.iterate import materialize
-from etl_router_spark.functions.text import h60_sql, shingles, shingles_sql, tokens_col, tokens_sql
+from etl_router_spark.functions.sqltext import sql_ident
+from etl_router_spark.functions.text import h60_sql, shingles_sql, tokens_sql
 from etl_router_spark.io import spread_small_scan
 
 
@@ -45,7 +47,7 @@ def _shingle_hashes(
     """
     return (
         spread_small_scan(df)
-        .selectExpr(f"{id_col} AS id", f"{tokens_sql(text_col)} AS __toks")
+        .selectExpr(f"{sql_ident(id_col)} AS id", f"{tokens_sql(sql_ident(text_col))} AS __toks")
         .selectExpr(
             "id",
             f"explode(array_distinct({shingles_sql('__toks', n)})) AS __st",
@@ -398,7 +400,7 @@ def minhash_signatures(
     """
     sh = (
         spread_small_scan(df)
-        .selectExpr(f"{id_col} AS id", f"{tokens_sql(text_col)} AS __toks")
+        .selectExpr(f"{sql_ident(id_col)} AS id", f"{tokens_sql(sql_ident(text_col))} AS __toks")
         .selectExpr(
             "id",
             f"explode(array_distinct({shingles_sql('__toks', shingle_n)})) AS shingle",
@@ -1065,7 +1067,7 @@ def simhash(
     # the extra exchange costs more than single-core map time saves
     # (unlike the per-shingle md5 streams in ngram/minhash above)
     toks = df.selectExpr(
-        f"{id_col} AS id", f"explode({tokens_sql(text_col)}) AS tok"
+        f"{sql_ident(id_col)} AS id", f"explode({tokens_sql(sql_ident(text_col))}) AS tok"
     ).selectExpr("id", f"{h60_sql('tok')} AS h")
     # the per-bit expressions are built as SQL text and parsed once:
     # composing them from nested Column ops costs ~2 py4j round trips
@@ -1206,7 +1208,7 @@ def connected_components(
     (``functions/iterate.py``).
     """
     edges = (
-        pairs.selectExpr(f"{id_a} AS u", f"{id_b} AS v")
+        pairs.selectExpr(f"{sql_ident(id_a)} AS u", f"{sql_ident(id_b)} AS v")
         .filter("u <> v")
     )
     if algorithm == "star":
@@ -1442,6 +1444,7 @@ def embedding_lsh_pairs(
     cosine rounded 1e-6), threshold-filtered BEFORE the cross-table
     distinct.
     """
+    from etl_router_spark.functions.pq import vec_col_sql
     from etl_router_spark.functions.similarity import lsh_bucket_keys_sql
 
     if planes == "auto":
@@ -1451,10 +1454,11 @@ def embedding_lsh_pairs(
     elif not isinstance(planes, int):
         raise ValueError(f"planes must be an int or 'auto', got {planes!r}")
 
-    keys = lsh_bucket_keys_sql(f"CAST({vec_col} AS ARRAY<DOUBLE>)", dim, planes, tables)
+    vec = vec_col_sql(vec_col)
+    keys = lsh_bucket_keys_sql(vec, dim, planes, tables)
     buckets = df.selectExpr(
-        f"{id_col} AS id",
-        f"CAST({vec_col} AS ARRAY<DOUBLE>) AS vec",
+        f"{sql_ident(id_col)} AS id",
+        f"{vec} AS vec",
         f"explode({keys}) AS bucket",
     )
     pinned: list[DataFrame] = []
@@ -1548,6 +1552,7 @@ def semantic_dedup(
     from etl_router_spark.functions.pq import (
         standin_centroids,
         suggest_n_centroids,
+        vec_col_sql,
         with_cells,
     )
 
@@ -1568,7 +1573,7 @@ def semantic_dedup(
         raise ValueError(
             "centroids= is empty; an empty stand-in would put every "
             "row in one NULL cell and silently go corpus-quadratic")
-    vec = f"CAST({vec_col} AS ARRAY<DOUBLE>)"
+    vec = vec_col_sql(vec_col)
     # with_cells = the shared assignment contract with pq_index's size
     # dispatch: expression below 64 cells (oracle-gate fixtures keep
     # their pure-JVM plan), Arrow-vectorized numpy above it — at
@@ -1577,7 +1582,7 @@ def semantic_dedup(
     # dims) per row (see pq._ARROW_ASSIGN_MIN_CELLS)
     assigned = with_cells(df, vec_col, centroids, cell_col)
     buckets = assigned.selectExpr(
-        f"{id_col} AS id", f"{vec} AS vec", f"{cell_col} AS __cell")
+        f"{sql_ident(id_col)} AS id", f"{vec} AS vec", f"{sql_ident(cell_col)} AS __cell")
     pinned: list[DataFrame] = []
     pairs = _bucket_local_pairs(
         buckets, ["__cell"], salt_cap, max_candidates,
@@ -1597,12 +1602,15 @@ def semantic_dedup(
         assigned.join(dropped, id_col, "left_anti"), pinned)
 
 
+CosineMethod = Literal["block", "blas", "sql"]
+
+
 def embedding_cosine_pairs(
     df: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.95,
-    method: str = "block",
+    method: CosineMethod = "block",
     num_blocks: int = 16,
 ) -> DataFrame:
     """Exact near-dup pairs by cosine >= threshold (brute-force).
@@ -1648,7 +1656,7 @@ def embedding_cosine_pairs(
     if method == "block":
         return _block_cosine_pairs(df, id_col, vec_col, threshold, num_blocks)
     if method != "blas":
-        raise ValueError("method must be 'block', 'blas' or 'sql'")
+        raise ValueError(f"method must be one of {get_args(CosineMethod)}")
 
     import numpy as np
     import pandas as pd
@@ -1874,7 +1882,7 @@ def duplicate_ngram_spans(
     scan instead of len(n).
     """
     # the scalar-n path routes through the list machinery (r15): the
-    # scalar form's posexplode(shingles(text, n)) inlined the tokenize
+    # scalar form's posexplode(<shingles of text>) inlined the tokenize
     # INSIDE the transform lambda, and ExtractGenerator's rebuild plus
     # the interpreted lambda re-ran split(text) once per GRAM position
     # — O(len^2) re-tokenize per doc. The list path materializes
@@ -1884,8 +1892,6 @@ def duplicate_ngram_spans(
     if not ns or any(k < 1 for k in ns) or min_count < 2:
         raise ValueError(
             "n widths must be >= 1 (non-empty list), min_count >= 2")
-    from etl_router_spark.functions.text import tokens_sql
-
     empty = "CAST(array() AS ARRAY<STRUCT<s: BIGINT, e: BIGINT, gh: STRING>>)"
     arrs = [
         # sequence() with start > stop generates a DESCENDING range
@@ -1899,7 +1905,7 @@ def duplicate_ngram_spans(
     ]
     posting = (
         spread_small_scan(df)
-        .selectExpr(f"{id_col} AS id", f"{tokens_sql(text_col)} AS __toks")
+        .selectExpr(f"{sql_ident(id_col)} AS id", f"{tokens_sql(sql_ident(text_col))} AS __toks")
         .selectExpr("id", f"explode(flatten(array({', '.join(arrs)}))) AS p")
         .selectExpr("id", "p.s AS start", "p.e AS end", "p.gh AS gh")
     )
@@ -1954,7 +1960,8 @@ def duplicate_span_stats(
     spans = duplicate_ngram_spans(df, n, id_col, text_col, min_count)
     per_doc = spans.groupBy(id_col).agg(F.sum("span_tokens").alias("dup_tokens"))
     base = df.select(
-        F.col(id_col), F.size(tokens_col(text_col)).cast("bigint").alias("n_tokens")
+        F.col(id_col), F.expr(f"size({tokens_sql(sql_ident(text_col))})").cast("bigint")
+        .alias("n_tokens")
     )
     return (
         base.join(per_doc, id_col, "left")

@@ -27,14 +27,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_router_spark.functions.text import tokens_col
+from etl_router_spark.functions.sqltext import sql_double, sql_ident
+from etl_router_spark.functions.text import tokens_sql
 
 
 def _doc_terms(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, term) rows, one per token OCCURRENCE (not distinct)."""
     return df.select(
         F.col(id_col).alias("id"),
-        F.explode(tokens_col(text_col)).alias("term"),
+        F.explode(F.expr(tokens_sql(sql_ident(text_col)))).alias("term"),
     ).filter(F.col("term") != "")
 
 
@@ -228,9 +229,7 @@ def bm25_topk(
     # Column form cost ~900 py4j round trips (~0.5 s of pure driver
     # time) PER PLAN BUILD — the dedup-pipeline lesson applied here
     # (see _shingle_hashes). The parsed plans are identical.
-    from etl_router_spark.functions.text import tokens_sql
-
-    toks_sql = tokens_sql(text_col)
+    toks_sql = tokens_sql(sql_ident(text_col))
     nonempty_sql = f"size(array_remove({toks_sql}, ''))"
     # __dl and __toks MUST materialize in their own select BELOW the
     # explode-select: putting size(array_remove(split(...))) in the
@@ -244,7 +243,7 @@ def bm25_topk(
     # single-core scan it parallelizes, unlike the md5-heavy Bloom/
     # DSIR probes.)
     tokd = df.selectExpr(
-        f"{id_col} AS id",
+        f"{sql_ident(id_col)} AS id",
         f"{nonempty_sql} AS __dl",
         f"{toks_sql} AS __toks",
     )
@@ -262,9 +261,8 @@ def bm25_topk(
         )
     )
     qterms = queries.selectExpr(
-        f"{query_id_col} AS query_id",
-        f"explode(array_distinct(split(trim({query_text_col}), '\\\\s+')))"
-        " AS term",
+        f"{sql_ident(query_id_col)} AS query_id",
+        f"explode(array_distinct({tokens_sql(sql_ident(query_text_col))})) AS term",
     ).filter("term != ''")
     # The broadcast query-term filter lands map-side UNDER the tf
     # aggregation (r16): only query-term (id, term) token rows reach
@@ -298,7 +296,7 @@ def bm25_topk(
         F.expr("CAST(count(*) AS DOUBLE) AS dft")
     )
     qstats = dft_tbl.join(F.broadcast(qterms), "term")
-    # FP constants embedded via repr() so the parsed literals are
+    # FP constants embedded via sql_double so the parsed literals are
     # bit-identical to the former F.lit(python float) form
     scored = (
         tf.join(F.broadcast(qstats), "term")
@@ -306,8 +304,9 @@ def bm25_topk(
         .selectExpr(
             "query_id", "id",
             f"ln(1 + (__n - dft + 0.5D) / (dft + 0.5D))"
-            f" * tf * {k1 + 1!r}D"
-            f" / (tf + {k1!r}D * ({1 - b!r}D + {b!r}D * dl / __avgdl))"
+            f" * tf * {sql_double(k1 + 1)}"
+            f" / (tf + {sql_double(k1)} * ({sql_double(1 - b)} + {sql_double(b)}"
+            " * dl / __avgdl))"
             " AS __s",
         )
         .groupBy("query_id", "id")
@@ -367,13 +366,12 @@ def retrieval_eval(
     # trips per plan build; parsed plans identical — FP literals carry
     # the D suffix so nothing re-types to DECIMAL)
     qid, did = "query_id", "doc_id"
+    ids = f"{sql_ident(query_id_col)} AS {qid}", f"{sql_ident(doc_id_col)} AS {did}"
     runs_k = runs.selectExpr(
-        f"{query_id_col} AS {qid}", f"{doc_id_col} AS {did}",
-        f"CAST({rank_col} AS INT) AS rank",
+        *ids, f"CAST({sql_ident(rank_col)} AS INT) AS rank",
     ).filter(f"rank <= {k}")
     qr = qrels.selectExpr(
-        f"{query_id_col} AS {qid}", f"{doc_id_col} AS {did}",
-        f"CAST({rel_col} AS DOUBLE) AS rel",
+        *ids, f"CAST({sql_ident(rel_col)} AS DOUBLE) AS rel",
     ).filter("rel > 0")
 
     # ideal side: n_rel and IDCG@k from the judgments alone
@@ -411,11 +409,11 @@ def retrieval_eval(
 
     out = ideal.join(scored, qid, "left")
     return out.selectExpr(
-        f"{qid} AS {query_id_col}",
+        f"{qid} AS {sql_ident(query_id_col, alias=True)}",
         "CAST(coalesce(hits, 0) AS INT) AS hits",
         "CAST(n_rel AS INT) AS n_rel",
         "round(coalesce(hits / n_rel, 0.0D), 6) AS recall",
-        f"round(coalesce(hits / {float(k)!r}D, 0.0D), 6) AS precision",
+        f"round(coalesce(hits / {sql_double(k)}, 0.0D), 6) AS precision",
         "round(coalesce(1.0D / first_rel, 0.0D), 6) AS mrr",
         f"round(coalesce(ap_num, 0.0D) / least(n_rel, {k}), 6) AS ap",
         "round(coalesce(dcg / idcg, 0.0D), 6) AS ndcg",

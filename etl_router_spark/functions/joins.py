@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_router_spark.functions.sqltext import sql_ident
+
 
 def asof_join(
     left: DataFrame,
@@ -144,8 +146,9 @@ def asof_join(
         )
     return carried.select(
         *[F.col(k) for k in keys],
-        *[F.col(f"__l_{c}").alias(c) for c in l_payload],
-        *[F.col(f"__match.{c}").alias(f"{c}{suffix}") for c in r_payload],
+        *[F.col(sql_ident(f"__l_{c}", alias=True)).alias(c) for c in l_payload],
+        *[F.col(f"__match.{sql_ident(c, alias=True)}").alias(f"{c}{suffix}")
+          for c in r_payload],
     )
 
 
@@ -190,10 +193,10 @@ def range_join(
     r_b = right.withColumn("__bucket", F.floor(rt / bucket).cast("bigint")).alias("__rj_r")
 
     def lc(c: str) -> Column:
-        return F.col(f"__rj_l.{c}")
+        return F.col(f"__rj_l.{sql_ident(c, alias=True)}")
 
     def rc(c: str) -> Column:
-        return F.col(f"__rj_r.{c}")
+        return F.col(f"__rj_r.{sql_ident(c, alias=True)}")
 
     cond = [lc("__bucket") == rc("__bucket")]
     cond += [lc(k) == rc(k) for k in keys]

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_router_spark.functions.sqltext import sql_ident
+
 
 def _bucket(col: Column, cmin: Column, cmax: Column, bits: int) -> Column:
     """Normalized integer bucket in [0, 2^bits) by global min/max."""
@@ -81,7 +83,8 @@ def zorder_key(
     stats = df.agg(*aggs)
     buckets = [
         _bucket(
-            F.col(c), F.col(f"__min_{c}"), F.col(f"__max_{c}"), bits
+            F.col(c), F.col(sql_ident(f"__min_{c}", alias=True)),
+            F.col(sql_ident(f"__max_{c}", alias=True)), bits
         )
         for c in cols
     ]

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_router_spark.functions.sqltext import sql_ident
+
 try:  # opportunistic: Pillow is not in this container, but real
     from PIL import Image as _PILImage  # cluster images may carry it
 
@@ -312,7 +314,7 @@ def average_hash(
         narrowed = df.select(id_col, media_col)
         id_type = narrowed.schema[id_col].dataType.simpleString()
         return narrowed.mapInPandas(
-            process, schema=f"{id_col} {id_type}, ahash bigint")
+            process, schema=f"{sql_ident(id_col, alias=True)} {id_type}, ahash bigint")
     hexd = F.sha2(F.col(media_col), 256)
     pixels = [
         F.conv(F.substring(hexd, 2 * i + 1, 2), 16, 10).cast("int")

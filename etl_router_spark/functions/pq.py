@@ -43,6 +43,14 @@ import hashlib
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_router_spark.functions.similarity import (
+    TOPK_METHOD_ERROR,
+    TopkMethod,
+    batch_topk,
+    rank_topk,
+)
+from etl_router_spark.functions.sqltext import sql_double, sql_ident
+
 __all__ = [
     "deterministic_codebooks",
     "pq_train",
@@ -139,30 +147,25 @@ def pq_train(
         rows.unpersist()
 
 
+def vec_col_sql(vec_col: str) -> str:
+    """The vector column ``vec_col`` as a SQL ``ARRAY<DOUBLE>``."""
+    return f"CAST({sql_ident(vec_col)} AS ARRAY<DOUBLE>)"
+
+
 def _slice_sql(vec_sql: str, i: int, sub: int) -> str:
     return f"slice({vec_sql}, {i * sub + 1}, {sub})"
-
-
-def _sqdist_sql(vec_sql: str, centroid: list[float]) -> str:
-    """||slice − centroid||² as generated SQL text (string-built for the
-    same reason as ``_dot_sql``: thousands of py4j round trips vs one
-    parse), rounded to 1e-6 so argmin/rank decisions are identical
-    across engines despite fold-order FP drift."""
-    arr = "array(" + ",".join(f"{x!r}D" for x in centroid) + ")"
-    return (f"round(aggregate(zip_with({vec_sql}, {arr}, "
-            f"(a, b) -> (a - b) * (a - b)), 0D, (acc, x) -> acc + x), 6)")
 
 
 def _book_dists_sql(vec_sql: str, book: list[list[float]]) -> str:
     """Rounded ||vec − c||² for EVERY centroid of a book, as one
     ``transform`` over a nested literal array — k× fewer expression
-    nodes than k separate aggregates (per-element math and rounding
-    identical to :func:`_sqdist_sql`, so values cannot drift). The
-    node-count matters: a trained m=16/k=32 codebook expanded per
+    nodes than k separate aggregates; rounded to 1e-6 so argmin/rank
+    decisions are identical across engines despite fold-order FP
+    drift. The node-count matters: a trained m=16/k=32 codebook expanded per
     centroid used to compile to a multi-MiB plan and dominate query
     wall time at any corpus size (the r8 bench's 'fixed cost')."""
     arr = "array(" + ", ".join(
-        "array(" + ",".join(f"{x!r}D" for x in c) + ")" for c in book) + ")"
+        "array(" + ",".join(map(sql_double, c)) + ")" for c in book) + ")"
     return (f"transform({arr}, __c -> "
             f"round(aggregate(zip_with({vec_sql}, __c, "
             f"(a, b) -> (a - b) * (a - b)), 0D, (acc, x) -> acc + x), 6))")
@@ -223,9 +226,10 @@ def pq_encode(
     ×0.6 on the encode gate)."""
     from etl_router_spark.io import spread_small_scan
 
-    cols = [id_col, f"{pq_code_sql(f'CAST({vec_col} AS ARRAY<DOUBLE>)', codebooks)} AS {out_col}"]
+    cols = [sql_ident(id_col),
+            f"{pq_code_sql(vec_col_sql(vec_col), codebooks)} AS {sql_ident(out_col, alias=True)}"]
     if keep_vec:
-        cols.insert(1, vec_col)
+        cols.insert(1, sql_ident(vec_col))
     return spread_small_scan(df).selectExpr(*cols)
 
 
@@ -236,7 +240,7 @@ def pq_adc_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "sql",
+    method: TopkMethod = "sql",
 ) -> DataFrame:
     """Approximate top-k by asymmetric PQ distance:
     (query_id, neighbor_id, rank, adc_dist), rank by distance ASC,
@@ -254,14 +258,12 @@ def pq_adc_topk(
     and emits only batch-local top-k (global re-rank sees
     ~q·k·batches rows — the ``brute_force_topk`` shape).
     """
-    from pyspark.sql import Window
-
     m = len(codebooks)
     kc = len(codebooks[0])
     if method == "sql":
         q = queries.selectExpr(
-            f"{id_col} AS query_id",
-            f"{pq_lut_sql(f'CAST({vec_col} AS ARRAY<DOUBLE>)', codebooks)} AS lut",
+            f"{sql_ident(id_col)} AS query_id",
+            f"{pq_lut_sql(vec_col_sql(vec_col), codebooks)} AS lut",
         )
         c = pq_encode(corpus, codebooks, id_col=id_col, vec_col=vec_col,
                       out_col="code").withColumnRenamed(id_col, "neighbor_id")
@@ -272,18 +274,11 @@ def pq_adc_topk(
             .join(c, F.col("query_id") != F.col("neighbor_id"))
             .selectExpr("query_id", "neighbor_id", f"{score} AS adc_dist")
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("adc_dist").asc(), F.col("neighbor_id").asc())
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", "adc_dist")
-        )
+        return rank_topk(scored, k, "adc_dist", ascending=True)
     if method != "blas":
-        raise ValueError("method must be 'sql' or 'blas'")
+        raise ValueError(TOPK_METHOD_ERROR)
 
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     # the numpy fast path keeps ids in int64 arrays (fancy-indexed,
@@ -317,12 +312,6 @@ def pq_adc_topk(
     sc = corpus.sparkSession.sparkContext
     b_qids, b_lut, b_books = sc.broadcast(q_ids), sc.broadcast(lut), sc.broadcast(books)
 
-    schema = T.StructType([
-        T.StructField("query_id", T.LongType()),
-        T.StructField("neighbor_id", T.LongType()),
-        T.StructField("adc_dist", T.DoubleType()),
-    ])
-
     def topk_block(batches):
         qi, lt, bk = b_qids.value, b_lut.value, b_books.value
         mm, _, ss = bk.shape
@@ -338,30 +327,12 @@ def pq_adc_topk(
             scores = np.round(
                 lt[:, np.arange(mm)[None, :], codes].sum(axis=2), 6)
             scores[qi[:, None] == c_ids[None, :]] = np.inf  # self-exclude
-            out_q, out_n, out_s = [], [], []
-            for row_i in range(len(qi)):
-                row = scores[row_i]
-                order = np.lexsort((c_ids, row))[:k]
-                keep = order[np.isfinite(row[order])]
-                out_q.append(np.full(len(keep), qi[row_i]))
-                out_n.append(c_ids[keep])
-                out_s.append(row[keep])
-            yield pd.DataFrame({
-                "query_id": np.concatenate(out_q),
-                "neighbor_id": np.concatenate(out_n),
-                "adc_dist": np.concatenate(out_s),
-            })
+            yield batch_topk(qi, c_ids, scores, scores, k, "adc_dist")
 
     c_rows = corpus.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v"))
-    partial = c_rows.mapInPandas(topk_block, schema=schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc())
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adc_dist")
-    )
+    partial = c_rows.mapInPandas(topk_block, "query_id long, neighbor_id long, adc_dist double")
+    return rank_topk(partial, k, "adc_dist", ascending=True)
 
 
 def _centroid_dists_sql(vec_sql: str, cents: list[tuple[int, list[float]]]) -> str:
@@ -826,7 +797,7 @@ def with_cells(
             f"with_cells: cell_col {cell_col!r} is the vector column — "
             "assigning over it would destroy the input")
     if len(centroids) < _ARROW_ASSIGN_MIN_CELLS:
-        vec = f"CAST({vec_col} AS ARRAY<DOUBLE>)"
+        vec = vec_col_sql(vec_col)
         return df.withColumn(cell_col, F.expr(cell_assign_sql(vec, centroids)))
     import numpy as np
     from pyspark.sql.types import IntegerType, StructField, StructType
@@ -883,7 +854,7 @@ def pq_index(
     if len(centroids) >= _ARROW_ASSIGN_MIN_CELLS:
         return _pq_index_arrow(corpus, codebooks, centroids,
                                id_col, vec_col)
-    vec = f"CAST({vec_col} AS ARRAY<DOUBLE>)"
+    vec = vec_col_sql(vec_col)
     # guard on the id, raw argmin on cid: the index's cid becomes a
     # JOIN key downstream (ivfpq corpus_index probes), and a guarded
     # CASE there would survive as a join-inferred isnotnull filter
@@ -891,7 +862,7 @@ def pq_index(
     # docstring); the guard still fires for every corpus row because
     # the projection always materializes id
     return corpus.selectExpr(
-        f"{vector_guard_sql(vec, id_col)} AS id",
+        f"{vector_guard_sql(vec, sql_ident(id_col))} AS id",
         f"{cell_assign_raw_sql(vec, centroids)} AS cid",
         f"{pq_code_sql(vec, codebooks)} AS code",
     )
@@ -1093,7 +1064,7 @@ def ivfpq_topk(
             nprobe = 2
     m = len(codebooks)
     kc = len(codebooks[0])
-    vec = f"CAST({vec_col} AS ARRAY<DOUBLE>)"
+    vec = vec_col_sql(vec_col)
     if corpus_index is not None:
         guard = (
             f"CASE WHEN size(code) != {m} THEN "
@@ -1122,7 +1093,7 @@ def ivfpq_topk(
         from etl_router_spark.io import spread_small_scan
 
         c = spread_small_scan(corpus).selectExpr(
-            f"{vector_guard_sql(vec, id_col)} AS neighbor_id",
+            f"{vector_guard_sql(vec, sql_ident(id_col))} AS neighbor_id",
             f"{cell_assign_raw_sql(vec, centroids)} AS cid",
             f"{pq_code_sql(vec, codebooks)} AS code",
         )
@@ -1140,7 +1111,7 @@ def ivfpq_topk(
     # at NaN) and return k garbage rows for that query — fail fast on
     # the id column instead, which the projection always materializes
     q_guard = vector_guard_sql(
-        vec, id_col, what="ivfpq_topk", side="query frame",
+        vec, sql_ident(id_col), what="ivfpq_topk", side="query frame",
         action="searching",
         hint="a NULL/NaN query vector would otherwise probe arbitrary "
              "cells and rank candidates by NaN distances")
@@ -1151,8 +1122,6 @@ def ivfpq_topk(
     )
     score = (f"round(aggregate(sequence(0, {m - 1}), 0D, (acc, i) -> "
              f"acc + element_at(lut, i * {kc} + element_at(code, i + 1) + 1)), 6)")
-    from pyspark.sql import Window
-
     scored = (
         F.broadcast(q)
         .join(c, "cid")
@@ -1161,13 +1130,7 @@ def ivfpq_topk(
     )
     # a corpus vector lives in exactly ONE cell, so probes cannot
     # produce duplicate (query, neighbor) candidates — no distinct
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adc_dist")
-    )
+    return rank_topk(scored, k, "adc_dist", ascending=True)
 
 
 # (application id, corpus/index plan semantic hash, centroid
@@ -1380,8 +1343,7 @@ def ivfpq_rerank_topk(
                     corpus, None, centroids, id_col, vec_col,
                     with_code=False).groupBy("cid").count()
             else:
-                assign = cell_assign_sql(
-                    f"CAST({vec_col} AS ARRAY<DOUBLE>)", centroids)
+                assign = cell_assign_sql(vec_col_sql(vec_col), centroids)
                 cells = corpus.selectExpr(f"{assign} AS cid") \
                     .groupBy("cid").count()
             row = cells.agg(
@@ -1480,8 +1442,8 @@ def ivfpq_rerank_topk(
         id_col=id_col, vec_col=vec_col, corpus_index=corpus_index,
         corpus_n=corpus_n,
     ).select("query_id", "neighbor_id")
-    vec = f"CAST({vec_col} AS ARRAY<DOUBLE>)"
-    qv = queries.selectExpr(f"{id_col} AS query_id", f"{vec} AS qv")
+    vec = vec_col_sql(vec_col)
+    qv = queries.selectExpr(f"{sql_ident(id_col)} AS query_id", f"{vec} AS qv")
     # candidate fetch: cand is |Q| x shortlist rows — NOT bounded small
     # (guard-auto raises shortlist to p95 occupancy, so a mis-sized
     # index inflates it with the corpus: measured 2k queries x ~24k
@@ -1491,18 +1453,10 @@ def ivfpq_rerank_topk(
     # a shuffle join when guard-auto has blown the shortlist up — the
     # same hazard-removal as the r11 fuzzy-decontamination fix.
     fetched = corpus.selectExpr(
-        f"{id_col} AS neighbor_id", f"{vec} AS nv"
+        f"{sql_ident(id_col)} AS neighbor_id", f"{vec} AS nv"
     ).join(cand, "neighbor_id")
     exact = ("round(aggregate(zip_with(qv, nv, (a, b) -> (a - b) * (a - b)), "
              "0D, (acc, x) -> acc + x), 6)")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("exact_dist").asc(), F.col("neighbor_id").asc())
-    return (
-        fetched.join(F.broadcast(qv), "query_id")
-        .selectExpr("query_id", "neighbor_id", f"{exact} AS exact_dist")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "exact_dist")
-    )
+    scored = fetched.join(F.broadcast(qv), "query_id").selectExpr(
+        "query_id", "neighbor_id", f"{exact} AS exact_dist")
+    return rank_topk(scored, k, "exact_dist", ascending=True)

@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_router_spark.functions.sqltext import sql_ident, sql_str
+
 _NUMERIC = (
     T.ByteType, T.ShortType, T.IntegerType, T.LongType,
     T.FloatType, T.DoubleType, T.DecimalType,
@@ -67,12 +69,9 @@ def profile_table(
         F.struct(
             F.lit(c).alias("column"),
             F.col("__n").alias("n_rows"),
-            F.col(f"__nulls_{c}").alias("n_nulls"),
-            F.col(f"__dist_{c}").alias("n_distinct"),
-            F.col(f"__min_{c}").alias("min_value"),
-            F.col(f"__max_{c}").alias("max_value"),
-            F.col(f"__mean_{c}").alias("mean"),
-            F.col(f"__std_{c}").alias("stddev"),
+            *[F.col(sql_ident(f"__{stat}_{c}", alias=True)).alias(name) for stat, name in (
+                ("nulls", "n_nulls"), ("dist", "n_distinct"), ("min", "min_value"),
+                ("max", "max_value"), ("mean", "mean"), ("std", "stddev"))],
         )
         for c in cols
     ])
@@ -333,14 +332,13 @@ def sample_sketch(
     """
     from pyspark.sql import Window
 
-    from etl_router_spark.functions.text import h60
+    from etl_router_spark.functions.text import h60_sql
 
     if k <= 0:
         raise ValueError("sample_sketch: k must be positive")
     cols = [group_col, id_col] + list(payload_cols or [])
-    keyed = df.select(*cols).withColumn(
-        "rank_key",
-        h60(F.concat_ws("|", F.lit(salt), F.col(id_col).cast("string"))))
+    keyed = df.select(*cols).withColumn("rank_key", F.expr(h60_sql(
+        f"concat_ws('|', {sql_str(salt)}, CAST({sql_ident(id_col)} AS STRING))")))
     w = Window.partitionBy(group_col).orderBy(
         F.asc("rank_key"), F.asc(id_col))
     return (

@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_router_spark.functions.sqltext import sql_ident, sql_str
 from etl_router_spark.functions.text import h60_sql, shingles_sql, tokens_sql
 
 __all__ = [
@@ -56,7 +57,7 @@ def _grams_sql(text_col: str) -> str:
     position (interpreted lambdas, no CSE) and once more for the
     concat — one split per row now, values identical."""
     return (
-        f"transform(array({tokens_sql(text_col)}), "
+        f"transform(array({tokens_sql(sql_ident(text_col))}), "
         f"__tk -> concat(__tk, {shingles_sql('__tk', 2)}))[0]"
     )
 
@@ -245,11 +246,11 @@ def _dsir_scores_pinned(
 
     # same map-side-parallelism rationale as _bucket_counts: the per-gram
     # h60 hashing dominates this pass and runs before any exchange
+    ident = sql_ident(id_col)
     doc_buckets = (
         spread_small_scan(raw)
-        .selectExpr(id_col, f"explode({_grams_sql(text_col)}) AS gram")
-        .selectExpr(id_col,
-                    f"{_gram_bucket_sql(buckets, hash_family)} AS bucket")
+        .selectExpr(ident, f"explode({_grams_sql(text_col)}) AS gram")
+        .selectExpr(ident, f"{_gram_bucket_sql(buckets, hash_family)} AS bucket")
         .groupBy(id_col, "bucket")
         .agg(F.expr("count(*) AS __c"))
     )
@@ -268,12 +269,12 @@ def _dsir_scores_pinned(
     scores = (
         doc_buckets.join(lr, "bucket")  # doc buckets are raw buckets: inner is lossless
         .groupBy(id_col)
-        .agg(F.expr(f"sum(__c * lr_micro) AS {score_col}"))
+        .agg(F.expr("sum(__c * lr_micro)").alias(score_col))
     )
     out = (
         raw.join(scores, id_col, "left")
-        .withColumn(score_col,
-                    F.expr(f"coalesce({score_col}, CAST(0 AS BIGINT))"))
+        .withColumn(score_col, F.expr(
+            f"coalesce({sql_ident(score_col, alias=True)}, CAST(0 AS BIGINT))"))
     )
     return out, scores, pinned
 
@@ -282,11 +283,8 @@ def _u_micro_sql(id_col: str, salt: str) -> str:
     """u = (h60(salt|id) % 1e6 + 0.5)/1e6 in (0, 1) as SQL text —
     the shared uniform draw of the Gumbel and exponential-clock keys
     (D-suffixed literals parse to the same doubles the former
-    F.lit(python float) form produced). The salt is spliced into a
-    string literal with ``\\`` and ``'`` escaped, so any salt draws
-    exactly as the Column form ``h60(concat(lit(salt), '|', id))``."""
-    lit = str(salt).replace("\\", "\\\\").replace("'", "\\'")
-    h = h60_sql(f"concat('{lit}|', CAST({id_col} AS STRING))")
+    F.lit(python float) form produced). Any salt draws as itself."""
+    h = h60_sql(f"concat({sql_str(f'{salt}|')}, CAST({sql_ident(id_col)} AS STRING))")
     return f"(CAST(pmod({h}, 1000000) AS DOUBLE) + 0.5D) / 1000000.0D"
 
 
@@ -357,9 +355,9 @@ def dsir_sample(
     keyed = (
         raw.select(id_col).join(scores, id_col, "left")
         .selectExpr(
-            id_col,
+            sql_ident(id_col),
             f"{score0} AS dsir_score_micro",
-            f"{score0} + {_gumbel_micro_sql(id_col, salt)} AS {key_col}",
+            f"{score0} + {_gumbel_micro_sql(id_col, salt)} AS {sql_ident(key_col, alias=True)}",
         )
     )
     winners = keyed.orderBy(
@@ -399,7 +397,7 @@ def weighted_sample(
     """
     key = F.expr(
         f"CAST(round(-ln({_u_micro_sql(id_col, salt)})"
-        f" / CAST({weight_col} AS DOUBLE) * 1000000.0D) AS BIGINT)")
+        f" / CAST({sql_ident(weight_col)} AS DOUBLE) * 1000000.0D) AS BIGINT)")
     keyed = df.filter(F.col(weight_col).isNotNull() & (F.col(weight_col) > 0)) \
               .withColumn(key_col, key)
     if group_col is None:

@@ -18,11 +18,17 @@ state to ship, reproducible across engines.
 from __future__ import annotations
 
 import hashlib
+from typing import Literal, get_args
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from etl_router_spark.functions.dedup import cosine_cols
+from etl_router_spark.functions.sqltext import sql_double
+
+# the scoring paths of the top-k operators
+TopkMethod = Literal["blas", "sql"]
+TOPK_METHOD_ERROR = f"method must be {' or '.join(map(repr, get_args(TopkMethod)))}"
 
 cosine_expr = cosine_cols  # public alias
 
@@ -50,7 +56,7 @@ def _dot_sql(vec_sql: str, h: list[float]) -> str:
     expression through Python-lambda zip_with/aggregate costs thousands
     of py4j round trips (~2s of plan construction for 12 planes);
     the SQL text parses in milliseconds and executes identically."""
-    arr = "array(" + ",".join(f"{x!r}D" for x in h) + ")"
+    arr = "array(" + ",".join(map(sql_double, h)) + ")"
     return (f"aggregate(zip_with({vec_sql}, {arr}, (a, b) -> a * b), "
             f"0D, (acc, x) -> acc + x)")
 
@@ -67,9 +73,41 @@ def lsh_bucket_keys_sql(vec_sql: str, dim: int, planes: int, tables: int) -> str
     return "array(" + ", ".join(keys) + ")"
 
 
-def lsh_bucket_keys(vec_sql: str, dim: int, planes: int, tables: int) -> Column:
-    """Array of per-table bucket keys ('t:bucket') for candidate union."""
-    return F.expr(lsh_bucket_keys_sql(vec_sql, dim, planes, tables))
+def rank_topk(scored: DataFrame, k: int, score: str, ascending: bool = False) -> DataFrame:
+    """The ``k`` best neighbors per query of ``scored`` (query_id,
+    neighbor_id, ``score``): ``score`` descending (ascending for a
+    distance), neighbor id breaking ties."""
+    from pyspark.sql import Window
+
+    order = F.col(score).asc() if ascending else F.col(score).desc()
+    w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", score)
+    )
+
+
+def batch_topk(q_ids, c_ids, keys, values, k: int, score: str):
+    """One Arrow batch's top-``k`` per query under the global order —
+    ``keys`` ascending, neighbor id breaking ties; an infinite key (an
+    excluded pair) never ranks — as a pandas frame of (query_id,
+    neighbor_id, ``score`` from ``values``). The union of batch-local
+    winners is a superset of the global winners :func:`rank_topk`
+    picks."""
+    import numpy as np
+    import pandas as pd
+
+    out_q, out_n, out_s = [], [], []
+    for row_i in range(len(q_ids)):
+        order = np.lexsort((c_ids, keys[row_i]))[:k]
+        keep = order[np.isfinite(keys[row_i][order])]
+        out_q.append(np.full(len(keep), q_ids[row_i]))
+        out_n.append(c_ids[keep])
+        out_s.append(values[row_i][keep])
+    return pd.DataFrame({"query_id": np.concatenate(out_q),
+                         "neighbor_id": np.concatenate(out_n),
+                         score: np.concatenate(out_s)})
 
 
 def brute_force_topk(
@@ -78,7 +116,7 @@ def brute_force_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "blas",
+    method: TopkMethod = "blas",
 ) -> DataFrame:
     """Exact cosine top-k: (query_id, neighbor_id, rank, cosine).
 
@@ -97,8 +135,6 @@ def brute_force_topk(
     ``method="sql"``: pure Column-expression scoring (zip_with /
     aggregate), engine-portable cross-check path.
     """
-    from pyspark.sql import Window
-
     if method == "sql":
         q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv"))
         c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("cv"))
@@ -108,18 +144,11 @@ def brute_force_topk(
             .join(c, F.col("query_id") != F.col("neighbor_id"))
             .select("query_id", "neighbor_id", cos.alias("cosine"))
         )
-        w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", "cosine")
-        )
+        return rank_topk(scored, k, "cosine")
     if method != "blas":
-        raise ValueError("method must be 'blas' or 'sql'")
+        raise ValueError(TOPK_METHOD_ERROR)
 
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
 
     q_rows = queries.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
@@ -139,12 +168,6 @@ def brute_force_topk(
     b_qids = sc.broadcast(q_ids)
     b_qmat = sc.broadcast(q_mat)
 
-    partial_schema = T.StructType([
-        T.StructField("query_id", T.LongType()),
-        T.StructField("neighbor_id", T.LongType()),
-        T.StructField("cosine", T.DoubleType()),
-    ])
-
     def topk_block(batches):
         qi_ids, qm = b_qids.value, b_qmat.value
         for pdf in batches:
@@ -156,33 +179,13 @@ def brute_force_topk(
             c = c / np.where(cn == 0, 1.0, cn)
             sims = np.round(qm @ c.T, 6)
             sims[qi_ids[:, None] == c_ids[None, :]] = -np.inf  # self-exclude
-            out_q, out_n, out_s = [], [], []
-            for row_i in range(len(qi_ids)):
-                row = sims[row_i]
-                # batch-local top-k under the global order
-                # (cosine desc, neighbor asc); the union of batch-local
-                # winners is a superset of the global winners
-                order = np.lexsort((c_ids, -row))[:k]
-                keep = order[np.isfinite(row[order])]
-                out_q.append(np.full(len(keep), qi_ids[row_i]))
-                out_n.append(c_ids[keep])
-                out_s.append(row[keep])
-            yield pd.DataFrame({
-                "query_id": np.concatenate(out_q),
-                "neighbor_id": np.concatenate(out_n),
-                "cosine": np.concatenate(out_s),
-            })
+            yield batch_topk(qi_ids, c_ids, -sims, sims, k, "cosine")
 
     c_rows = corpus.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
     )
-    partial = c_rows.mapInPandas(topk_block, schema=partial_schema)
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    partial = c_rows.mapInPandas(topk_block, "query_id long, neighbor_id long, cosine double")
+    return rank_topk(partial, k, "cosine")
 
 
 def ivf_topk(
@@ -193,7 +196,7 @@ def ivf_topk(
     n_centroids: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "blas",
+    method: TopkMethod = "blas",
     centroids: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k.
@@ -218,13 +221,11 @@ def ivf_topk(
     and each partition emits only batch-local top-k. ``method="sql"``
     keeps the Column-expression path (oracle twin).
     """
-    from pyspark.sql import Window
-
     if method == "blas":
         return _ivf_topk_blas(queries, corpus, k, nprobe, n_centroids, id_col, vec_col,
                               centroids=centroids)
     if method != "sql":
-        raise ValueError("method must be 'blas' or 'sql'")
+        raise ValueError(TOPK_METHOD_ERROR)
 
     if centroids is not None:
         cents = [(int(cid), list(cv)) for cid, cv in centroids]
@@ -241,7 +242,7 @@ def ivf_topk(
         # ordering makes max/sort give (score DESC, cid DESC) ranking
         entries = []
         for cid, cv in cents:
-            arr = "array(" + ",".join(f"{x!r}D" for x in cv) + ")"
+            arr = "array(" + ",".join(map(sql_double, cv)) + ")"
             s = F.round(cosine_cols(F.expr(vec_sql), F.expr(arr)), 6)
             entries.append(F.struct(s.alias("s"), F.lit(cid).alias("cid")))
         return F.array(*entries)
@@ -268,12 +269,7 @@ def ivf_topk(
     )
     cos = F.round(cosine_cols(F.col("qv"), F.col("cv")), 6)
     scored = cand.select("query_id", "neighbor_id", cos.alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return rank_topk(scored, k, "cosine")
 
 
 def _hyperplane_matrix(dim: int, planes: int, tables: int):
@@ -294,7 +290,7 @@ def lsh_bucketed_topk(
     dim: int = 64,
     planes: int = 4,
     tables: int = 4,
-    method: str = "blas",
+    method: TopkMethod = "blas",
 ) -> DataFrame:
     """Approximate top-k: candidates share the query's LSH bucket in ANY
     of ``tables`` independent hash tables, then exact cosine re-rank.
@@ -318,21 +314,19 @@ def lsh_bucketed_topk(
     if method == "blas":
         return _lsh_topk_blas(queries, corpus, k, id_col, vec_col, dim, planes, tables)
     if method != "sql":
-        raise ValueError("method must be 'blas' or 'sql'")
+        raise ValueError(TOPK_METHOD_ERROR)
     return _lsh_topk_sql(queries, corpus, k, id_col, vec_col, dim, planes, tables)
 
 
 def _lsh_topk_sql(queries, corpus, k, id_col, vec_col, dim, planes, tables):
-    from pyspark.sql import Window
-
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("qv"),
-    ).withColumn("bucket", F.explode(lsh_bucket_keys("qv", dim, planes, tables)))
+    ).withColumn("bucket", F.explode(F.expr(lsh_bucket_keys_sql("qv", dim, planes, tables))))
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("cv"),
-    ).withColumn("bucket", F.explode(lsh_bucket_keys("cv", dim, planes, tables)))
+    ).withColumn("bucket", F.explode(F.expr(lsh_bucket_keys_sql("cv", dim, planes, tables))))
     cos = F.round(cosine_cols(F.col("qv"), F.col("cv")), 6)
     scored = (
         q.join(c, "bucket")
@@ -345,19 +339,11 @@ def _lsh_topk_sql(queries, corpus, k, id_col, vec_col, dim, planes, tables):
         .select("query_id", "neighbor_id", cos.alias("cosine"))
         .dropDuplicates(["query_id", "neighbor_id"])  # union across tables
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return rank_topk(scored, k, "cosine")
 
 
 def _lsh_topk_blas(queries, corpus, k, id_col, vec_col, dim, planes, tables):
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
-    from pyspark.sql import types as T
 
     H = _hyperplane_matrix(dim, planes, tables)  # dim x (planes*tables)
     pw = (2 ** np.arange(planes)).astype(np.int64)
@@ -389,12 +375,6 @@ def _lsh_topk_blas(queries, corpus, k, id_col, vec_col, dim, planes, tables):
     sc = corpus.sparkSession.sparkContext
     b = sc.broadcast((q_ids, q_matn, q_buckets))
 
-    schema = T.StructType([
-        T.StructField("query_id", T.LongType()),
-        T.StructField("neighbor_id", T.LongType()),
-        T.StructField("cosine", T.DoubleType()),
-    ])
-
     def probe_block(batches):
         qi, qm, qb = b.value
         for pdf in batches:
@@ -413,38 +393,18 @@ def _lsh_topk_blas(queries, corpus, k, id_col, vec_col, dim, planes, tables):
             cm = c / np.where(cn == 0, 1.0, cn)
             sims = np.round(qm @ cm.T, 6)
             sims[~match] = -np.inf
-            out_q, out_n, out_s = [], [], []
-            for row_i in range(len(qi)):
-                row = sims[row_i]
-                order = np.lexsort((c_ids, -row))[:k]
-                keep = order[np.isfinite(row[order])]
-                out_q.append(np.full(len(keep), qi[row_i]))
-                out_n.append(c_ids[keep])
-                out_s.append(row[keep])
-            yield pd.DataFrame({
-                "query_id": np.concatenate(out_q),
-                "neighbor_id": np.concatenate(out_n),
-                "cosine": np.concatenate(out_s),
-            })
+            yield batch_topk(qi, c_ids, -sims, sims, k, "cosine")
 
     c_rows = corpus.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
     )
-    partial = c_rows.mapInPandas(probe_block, schema=schema)
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    partial = c_rows.mapInPandas(probe_block, "query_id long, neighbor_id long, cosine double")
+    return rank_topk(partial, k, "cosine")
 
 
 def _ivf_topk_blas(queries, corpus, k, nprobe, n_centroids, id_col, vec_col,
                    centroids=None):
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
-    from pyspark.sql import types as T
 
     if centroids is not None:
         pairs = sorted((int(cid), list(cv)) for cid, cv in centroids)
@@ -496,12 +456,6 @@ def _ivf_topk_blas(queries, corpus, k, nprobe, n_centroids, id_col, vec_col,
     sc = corpus.sparkSession.sparkContext
     b = sc.broadcast((q_ids, q_matn, q_probes))
 
-    schema = T.StructType([
-        T.StructField("query_id", T.LongType()),
-        T.StructField("neighbor_id", T.LongType()),
-        T.StructField("cosine", T.DoubleType()),
-    ])
-
     def probe_block(batches):
         qi, qm, qp = b.value
         for pdf in batches:
@@ -518,30 +472,13 @@ def _ivf_topk_blas(queries, corpus, k, nprobe, n_centroids, id_col, vec_col,
             match &= qi[:, None] != c_ids[None, :]
             sims = np.round(qm @ cm.T, 6)
             sims[~match] = -np.inf
-            out_q, out_n, out_s = [], [], []
-            for row_i in range(len(qi)):
-                row = sims[row_i]
-                order = np.lexsort((c_ids, -row))[:k]
-                keep = order[np.isfinite(row[order])]
-                out_q.append(np.full(len(keep), qi[row_i]))
-                out_n.append(c_ids[keep])
-                out_s.append(row[keep])
-            yield pd.DataFrame({
-                "query_id": np.concatenate(out_q),
-                "neighbor_id": np.concatenate(out_n),
-                "cosine": np.concatenate(out_s),
-            })
+            yield batch_topk(qi, c_ids, -sims, sims, k, "cosine")
 
     c_rows = corpus.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
     )
-    partial = c_rows.mapInPandas(probe_block, schema=schema)
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    partial = c_rows.mapInPandas(probe_block, "query_id long, neighbor_id long, cosine double")
+    return rank_topk(partial, k, "cosine")
 
 
 def train_ivf_centroids(
@@ -592,7 +529,7 @@ def knn_classify(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "blas",
+    method: TopkMethod = "blas",
 ) -> DataFrame:
     """k-NN label assignment: each query takes the majority label of
     its k exact-cosine neighbors — the standard weak-supervision /

@@ -1,44 +1,53 @@
 """Text analysis operators for training-data pipelines.
 
-Everything here is built-in Column expressions (JVM-side, codegen'd) —
-no Python UDFs in the hot path. Each operator is deterministic and has
-an exact ANSI-SQL oracle (see ``__spark_entry__.oracle_sql``).
+Everything here is built-in expressions (JVM-side, codegen'd) — no
+Python UDFs in the hot path. Each operator is deterministic and has an
+exact ANSI-SQL oracle (see ``__spark_entry__.oracle_sql``).
+
+The operator library builds the ``h60`` hash, whitespace tokens and
+word shingles one way: SQL text from the ``*_sql`` builders below,
+parsed by ``F.expr``/``selectExpr``, with names and strings quoted by
+``functions.sqltext`` (``sql_ident``, ``sql_str``).
 """
 
 from __future__ import annotations
 
+from typing import Literal, get_args
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from etl_router_spark.functions.sqltext import sql_ident, sql_str
+
+# keep only the passing rows, or tag every row
+DropOrTag = Literal["drop", "tag"]
+
 
 # The 60-bit deterministic hash shared with the DuckDB oracle:
 # Spark: conv(substr(md5(s),1,15),16,10)::bigint
 # DuckDB: CAST('0x' || substr(md5(s),1,15) AS BIGINT)
-def h60(col: Column | str) -> Column:
-    """Deterministic 60-bit hash of a string column (engine-portable)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint")
-
-
 def h60_sql(expr: str) -> str:
-    """SQL-text twin of :func:`h60` (one parser round trip; identical plan)."""
+    """Deterministic 60-bit hash of the string expression ``expr``
+    (engine-portable)."""
     return f"CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
 
 
 def tokens_sql(text_expr: str) -> str:
-    """SQL-text twin of :func:`tokens_col`."""
+    """Whitespace tokens of the string expression ``text_expr``."""
     return f"split(trim({text_expr}), '\\\\s+')"
 
 
 def shingles_sql(toks_expr: str, n: int, sep: str = " ") -> str:
-    """SQL-text twin of :func:`shingles`, over an already-tokenized
-    array column. Building the hot dedup pipelines from parsed SQL text
+    """Word ``n``-gram shingles (joined by ``sep``) over an
+    already-tokenized array expression; empty when there are fewer than
+    ``n`` tokens. Building the hot dedup pipelines from parsed SQL text
     costs ONE py4j round trip instead of dozens of Column-composition
     calls (~0.3-0.5 s of driver time per plan build, measured at
-    sf0.1) — the parsed plan is identical."""
+    sf0.1)."""
     return (
         f"CASE WHEN size({toks_expr}) >= {n} THEN "
         f"transform(sequence(0, size({toks_expr}) - {n}), "
-        f"i -> concat_ws('{sep}', slice({toks_expr}, i + 1, {n}))) "
+        f"i -> concat_ws({sql_str(sep)}, slice({toks_expr}, i + 1, {n}))) "
         f"ELSE CAST(array() AS ARRAY<STRING>) END"
     )
 
@@ -48,10 +57,9 @@ def bound_shingles_sql(text_expr: str, n: int, sep: str = " ") -> str:
     lambda-BOUND (r15): composing ``shingles_sql(tokens_sql(text))``
     directly embeds the split expression inside the per-index lambda,
     and interpreted higher-order lambdas re-evaluate it once per GRAM
-    position — O(len^2) re-tokenize per row (the shingles()/Column
-    trap, SQL-text form). The single-element outer transform binds the
-    tokens once per row; `[0]` cannot be folded through the transform,
-    so the binding survives optimization."""
+    position — O(len^2) re-tokenize per row. The single-element outer
+    transform binds the tokens once per row; `[0]` cannot be folded
+    through the transform, so the binding survives optimization."""
     return (
         f"transform(array({tokens_sql(text_expr)}), "
         f"__tk -> {shingles_sql('__tk', n, sep)})[0]"
@@ -69,11 +77,6 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
     "es": ("el", "la", "de", "y", "es"),
     "fr": ("le", "la", "et", "est", "les"),
 }
-
-
-def tokens_col(text: Column | str) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    return F.split(F.trim(c), WORD_SPLIT_PATTERN)
 
 
 def _isin_pred(markers: tuple[str, ...]):
@@ -98,7 +101,7 @@ def tokenize(df: DataFrame, text_col: str = "text", out_col: str = "tokens") -> 
     ``n_bpe_tokens`` counts BPE-style pre-tokens via
     ``BPE_SPLIT_PATTERN`` (a real subword proxy: merges only shrink it);
     ``n_subwords_est`` keeps the ceil(chars/4) LLM rule of thumb."""
-    toks = tokens_col(text_col)
+    toks = F.expr(tokens_sql(sql_ident(text_col)))
     return (
         df.withColumn(out_col, toks)
         .withColumn("n_tokens", F.size(toks))
@@ -114,7 +117,7 @@ def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Quality-scoring features: lengths, word stats, punct/stopword/
     uniqueness ratios. One projection, no shuffle."""
     text = F.col(text_col)
-    toks = tokens_col(text_col)
+    toks = F.expr(tokens_sql(sql_ident(text_col)))
     n_words = F.size(toks)
     n_chars = F.length(text)
     n_punct = n_chars - F.length(F.regexp_replace(text, r"[^\w\s]", ""))
@@ -144,7 +147,7 @@ def quality_score(df: DataFrame, text_col: str = "text", out_col: str = "quality
 def language_id(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred") -> DataFrame:
     """Marker-word language heuristic: score = count of language marker
     tokens; argmax with deterministic alphabetical tie-break."""
-    toks = tokens_col(text_col)
+    toks = F.expr(tokens_sql(sql_ident(text_col)))
     scores = [
         F.size(F.filter(toks, _isin_pred(markers))).alias(f"score_{lang}")
         for lang, markers in sorted(LANG_MARKERS.items())
@@ -164,7 +167,8 @@ def fingerprint(df: DataFrame, text_col: str = "text", out_col: str = "fingerpri
     """Order-insensitive document fingerprint: md5 of the sorted distinct
     token set — canonical form for exact-dup detection robust to token
     order."""
-    canon = F.concat_ws(" ", F.array_sort(F.array_distinct(tokens_col(text_col))))
+    toks = F.expr(tokens_sql(sql_ident(text_col)))
+    canon = F.concat_ws(" ", F.array_sort(F.array_distinct(toks)))
     return df.withColumn(out_col, F.md5(canon))
 
 
@@ -182,8 +186,8 @@ def rolling_fingerprint(df: DataFrame, text_col: str = "text",
     modulus keeps every intermediate < 2^38 so ANSI-mode bigint
     arithmetic can't overflow."""
     expr = (
-        f"aggregate(transform(split(trim({text_col}), '\\\\s+'), "
-        f"t -> CAST(conv(substring(md5(t), 1, 15), 16, 10) AS BIGINT) % {ROLLING_FP_MOD}L), "
+        f"aggregate(transform({tokens_sql(sql_ident(text_col))}, "
+        f"t -> {h60_sql('t')} % {ROLLING_FP_MOD}L), "
         f"0L, (acc, x) -> (acc * {ROLLING_FP_BASE}L + x) % {ROLLING_FP_MOD}L)"
     )
     return df.withColumn(out_col, F.expr(expr))
@@ -203,7 +207,8 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     scan, bounded by document length, embarrassingly parallel at any
     corpus size.
     """
-    toks = tokens_col(text_col)
+    t = sql_ident(text_col)
+    toks = F.expr(tokens_sql(t))
 
     def dup_frac(arr: Column) -> Column:
         n = F.size(arr)
@@ -211,7 +216,7 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
             n > 0, F.round(1.0 - F.size(F.array_distinct(arr)) / n, 6)
         ).otherwise(F.lit(0.0))
 
-    # tokens bound once per row (r15, same trap as shingles): with the
+    # tokens bound once per row (r15, the bound_shingles_sql trap): with the
     # split EXPRESSION captured in the lambda, the interpreter re-ran
     # the tokenize once per DISTINCT TOKEN — measured ×4 on this
     # column at sf0.1 (values identical)
@@ -222,8 +227,8 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     # blank text splits to [''] (size 1) — treat as zero tokens
     n_toks = F.when(F.trim(F.col(text_col)) != "", F.size(toks)).otherwise(F.lit(0))
     return (
-        df.withColumn("dup_2gram_frac", dup_frac(shingles(F.col(text_col), 2)))
-        .withColumn("dup_3gram_frac", dup_frac(shingles(F.col(text_col), 3)))
+        df.withColumn("dup_2gram_frac", dup_frac(F.expr(bound_shingles_sql(t, 2))))
+        .withColumn("dup_3gram_frac", dup_frac(F.expr(bound_shingles_sql(t, 3))))
         .withColumn(
             "top_token_frac",
             F.when(n_toks > 0, F.round(top_cnt / n_toks, 6)).otherwise(F.lit(0.0)),
@@ -259,36 +264,6 @@ def pii_redact(df: DataFrame, text_col: str = "text", out_col: str = "clean_text
     return out.withColumn(out_col, clean)
 
 
-def shingles(text: Column | str, n: int = 3, sep: str = " ") -> Column:
-    """Word n-gram shingles as an array<string> (for Jaccard/MinHash).
-
-    The token array is BOUND ONCE per row via a single-element outer
-    ``transform`` before the per-index lambda runs (r15): higher-order
-    lambdas are interpreted, so a captured ``split(text)`` EXPRESSION
-    in the inner lambda body would re-tokenize once per gram position
-    — O(len^2) per doc, measured 4x on a corpus-wide tf aggregate.
-    As a bound lambda VARIABLE the tokens are computed once per row
-    regardless of where the caller embeds this column. (The optimizer
-    cannot fold the ``[0]`` through the transform, so the binding
-    survives; array(x)[0] alone would be folded away.)
-    """
-    toks = tokens_col(text) if isinstance(text, str) else F.split(F.trim(text), WORD_SPLIT_PATTERN)
-
-    def _build(t: Column) -> Column:
-        count = F.size(t) - F.lit(n - 1)
-        # guard: sequence(0, -k) would generate a DESCENDING range;
-        # size(NULL) = -1 keeps the null-text case on the empty branch
-        return F.when(
-            count > 0,
-            F.transform(
-                F.sequence(F.lit(0), count - 1),
-                lambda i: F.concat_ws(sep, F.slice(t, i + 1, n)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-
-    return F.transform(F.array(toks), _build)[0]
-
-
 def unigram_logprob(
     df: DataFrame,
     text_col: str = "text",
@@ -311,7 +286,8 @@ def unigram_logprob(
     driver-side vocab collection anywhere.
     """
     lm_src = lm_df if lm_df is not None else df
-    lm_toks = lm_src.selectExpr(f"explode({tokens_sql(text_col)}) AS tok")
+    toks = tokens_sql(sql_ident(text_col))
+    lm_toks = lm_src.selectExpr(f"explode({toks}) AS tok")
     freqs = lm_toks.groupBy("tok").agg(F.count("*").alias("c"))
     # total tokens = Σc over the count table (r15): derived from freqs
     # — not a second tokenize+explode pass over the corpus — and the
@@ -324,9 +300,7 @@ def unigram_logprob(
     lm = freqs.crossJoin(F.broadcast(total)).selectExpr(
         "tok", "ln(CAST(c AS DOUBLE) / CAST(__total AS DOUBLE)) AS logp"
     )
-    doc_toks = df.selectExpr(
-        f"{id_col}", f"explode({tokens_sql(text_col)}) AS tok"
-    )
+    doc_toks = df.selectExpr(sql_ident(id_col), f"explode({toks}) AS tok")
     scores = (
         doc_toks.join(lm, "tok", "left")
         .groupBy(id_col)
@@ -380,17 +354,18 @@ def bigram_logprob(
     one id-keyed groupBy with partial aggregation.
     """
     lm_src = lm_df if lm_df is not None else df
+    toks, id_sql = tokens_sql(sql_ident(text_col)), sql_ident(id_col)
     # token array lambda-bound (r15): the unbound form evaluated the
     # split expression ~5x per row (zip_with args + the size() refs)
     pair_sql = (
-        f"transform(array({tokens_sql(text_col)}), __tk -> "
+        f"transform(array({toks}), __tk -> "
         "CASE WHEN size(__tk) >= 2 THEN "
         "zip_with(slice(__tk, 1, size(__tk) - 1), "
         "slice(__tk, 2, size(__tk) - 1), "
         "(a, b) -> named_struct('prev', a, 'cur', b)) "
         "ELSE array() END)[0]"
     )
-    lm_toks = lm_src.selectExpr(f"explode({tokens_sql(text_col)}) AS tok")
+    lm_toks = lm_src.selectExpr(f"explode({toks}) AS tok")
     uni = lm_toks.groupBy("tok").agg(F.count("*").alias("c"))
     # T = Σc, V = |vocab| — read off the unigram count table (r15)
     # instead of a third tokenize+explode+count_distinct corpus pass;
@@ -406,8 +381,8 @@ def bigram_logprob(
         .groupBy("prev", "cur")
         .agg(F.count("*").alias("cb"))
     )
-    doc_pairs = df.selectExpr(f"{id_col}", f"explode({pair_sql}) AS p").selectExpr(
-        f"{id_col}", "p.prev AS prev", "p.cur AS cur"
+    doc_pairs = df.selectExpr(id_sql, f"explode({pair_sql}) AS p").selectExpr(
+        id_sql, "p.prev AS prev", "p.cur AS cur"
     )
     k, l = repr(float(add_k)), repr(float(lam))
     scored = (
@@ -416,7 +391,7 @@ def bigram_logprob(
         .join(uni.selectExpr("tok AS cur", "c AS c_cur"), "cur", "left")
         .crossJoin(F.broadcast(stats))
         .selectExpr(
-            id_col,
+            id_sql,
             # ln(lam * p_bigram + (1-lam) * p_addk_unigram); FP
             # constants via repr so the DuckDB oracle evaluates
             # bit-identical literals
@@ -454,7 +429,7 @@ def ngram_counts(
 
     sh = (
         spread_small_scan(df)
-        .selectExpr(f"{tokens_sql(text_col)} AS __toks")
+        .selectExpr(f"{tokens_sql(sql_ident(text_col))} AS __toks")
         .selectExpr(f"explode({shingles_sql('__toks', n)}) AS ngram")
     )
     return (
@@ -487,14 +462,15 @@ def char_entropy(
     costs more than re-splitting; the Bloom-probe hoist won because an
     md5 is expensive and its result is 32 bytes, the opposite shape.
     """
-    chars = f"filter(split({text_col}, ''), c -> c <> '')"
+    t = sql_ident(text_col)
+    chars = f"filter(split({t}, ''), c -> c <> '')"
     expr = (
-        f"CASE WHEN length({text_col}) = 0 THEN 0.0D ELSE "
+        f"CASE WHEN length({t}) = 0 THEN 0.0D ELSE "
         f"-aggregate(transform(array_distinct({chars}), "
-        f"c -> (size(filter({chars}, x -> x = c)) / CAST(length({text_col}) AS DOUBLE))), "
+        f"c -> (size(filter({chars}, x -> x = c)) / CAST(length({t}) AS DOUBLE))), "
         f"0.0D, (acc, p) -> acc + p * log2(p)) END"
     )
-    return df.selectExpr("*", f"round({expr}, 6) AS {out_col}")
+    return df.selectExpr("*", f"round({expr}, 6) AS {sql_ident(out_col, alias=True)}")
 
 
 def normalize_text(
@@ -540,7 +516,7 @@ def gopher_rules(
     max_ellipsis_line_frac: float = 0.3,
     min_alpha_word_ratio: float = 0.8,
     min_stopword_hits: int = 2,
-    mode: str = "tag",
+    mode: DropOrTag = "tag",
 ) -> DataFrame:
     """The published Gopher document-quality rules (Rae et al. 2021,
     "Scaling Language Models", Appendix A) as one shuffle-free
@@ -561,7 +537,7 @@ def gopher_rules(
     runs at scan speed next to any other map work.
     """
     text = F.col(text_col)
-    toks = tokens_col(text_col)
+    toks = F.expr(tokens_sql(sql_ident(text_col)))
     n_words = F.size(toks)
     word_chars = F.aggregate(
         F.transform(toks, lambda w: F.length(w)), F.lit(0), lambda acc, x: acc + x
@@ -607,7 +583,7 @@ def gopher_rules(
     if mode == "drop":
         return out.filter("keep").drop("keep", *rules)
     if mode != "tag":
-        raise ValueError(f"mode must be tag|drop, got {mode!r}")
+        raise ValueError(f"mode must be {'|'.join(get_args(DropOrTag))}, got {mode!r}")
     return out
 
 
@@ -619,7 +595,7 @@ def c4_rules(
     min_sentences: int = 3,
     banned_page_substrings: tuple = ("{", "lorem ipsum"),
     banned_line_words: tuple = ("javascript",),
-    mode: str = "tag",
+    mode: DropOrTag = "tag",
     out_col: str = "text_clean",
 ) -> DataFrame:
     """The published C4 cleaning heuristics (Raffel et al. 2020 §2.2)
@@ -673,7 +649,7 @@ def c4_rules(
             .drop(out_col, "n_lines", "n_lines_kept", "n_sentences", "keep")
         )
     if mode != "tag":
-        raise ValueError(f"mode must be tag|drop, got {mode!r}")
+        raise ValueError(f"mode must be {'|'.join(get_args(DropOrTag))}, got {mode!r}")
     return out
 
 
@@ -841,9 +817,10 @@ def bpe_tokenize(
             pdf[f"{out_col}_n"] = toks.map(len).astype("int64")
             yield pdf
 
-    fields = ", ".join(f"{f.name} {f.dataType.simpleString()}"
+    fields = ", ".join(f"{sql_ident(f.name, alias=True)} {f.dataType.simpleString()}"
                        for f in df.schema.fields)
-    schema = f"{fields}, {out_col} array<string>, {out_col}_n bigint"
+    schema = (f"{fields}, {sql_ident(out_col, alias=True)} array<string>, "
+              f"{sql_ident(f'{out_col}_n', alias=True)} bigint")
     return df.mapInPandas(process, schema)
 
 
@@ -874,8 +851,7 @@ def bpe_train(
     if num_merges < 1:
         raise ValueError("num_merges must be >= 1")
     rows = (
-        df.select(F.explode(
-            F.split(F.trim(F.col(text_col)), r"\s+")).alias("w"))
+        df.select(F.explode(F.expr(tokens_sql(sql_ident(text_col)))).alias("w"))
         .filter(F.col("w") != "")
         .groupBy("w").agg(F.count("*").alias("c"))
         .orderBy(F.desc("c"), F.asc("w"))
@@ -940,7 +916,7 @@ def strip_repeated_lines(
     drop-rate signal a curation report tracks next to
     ``repetition_stats``).
     """
-    tc = f"`{text_col}`"
+    tc = sql_ident(text_col)
     lines = f"split({tc}, '\\n')"
     kept = (f"filter({lines}, (x, i) -> i = 0 OR "
             f"array_position(slice({lines}, 1, i), x) = 0)")

@@ -13,8 +13,10 @@ and the graph checks of ``conveyor-etl-routing/src/dag.rs:234-375``:
   whose operator parameter has no default must be present. The error
   names the stage, the key and the allowed keys;
 - transform selector values: a key that picks an operator or a build
-  branch (``method``, ``emit``, ...) must hold one of the values its spec
-  declares, and the required keys of the ``PARTS`` specs the config
+  branch (``method``, ``emit``, ``mode``, ...) must hold one of the
+  values its spec or the operator's ``Literal[...]`` declares, no key may
+  sit on a branch that ignores it (``method`` next to ``pq_topk``'s
+  ``nprobe``), and the required keys of the ``PARTS`` specs the config
   picks must be present (``dim`` for ``dedup_embedding`` ``method: lsh``);
 - ``spec.limits`` keys and values;
 - pipeline starts at source/fan_in, ends at sink/fan_out;
@@ -130,9 +132,13 @@ def _check_keys(s: Stage, spec: Spec) -> list[str]:
               for k in s.config if k not in allowed]
     bad = [f"stage {s.id!r}: transform {s.transform_type!r} key {k!r} has value "
            f"{s.config[k]!r} (allowed: {list(values)})"
-           for k, values in spec.choices.items()
+           for k, values in spec.selectors().items()
            if s.config.get(k) is not None and s.config[k] not in values]
     errors += bad
+    errors += [f"stage {s.id!r}: transform {s.transform_type!r} key {k!r} is not read "
+               f"on the branch that key {other!r} selects"
+               for k, others in spec.unread.items() if k in s.config
+               for other in others if other in s.config]
     # the PARTS a valid selector picks add their own required keys
     parts = () if bad else spec.parts(s.config)
     for owner in (spec, *(PARTS[name] for name in parts)):

@@ -45,16 +45,16 @@ from etl_router_spark.queries import query
 # ---------------------------------------------------------------------------
 # shared oracle SQL fragments
 # ---------------------------------------------------------------------------
-# DuckDB twin of functions.text.h60
+# DuckDB twin of functions.text.h60_sql
 def _h60_sql(expr: str) -> str:
     return f"CAST('0x' || substr(md5({expr}), 1, 15) AS BIGINT)"
 
 
-# DuckDB twin of functions.text.tokens_col (regex whitespace split on
+# DuckDB twin of functions.text.tokens_sql (regex whitespace split on
 # trimmed text)
 _WORDS = "string_split_regex(trim(text), '\\s+')"
 
-# DuckDB twin of functions.text.shingles(n=3): 1-based inclusive slices
+# DuckDB twin of functions.text.shingles_sql(n=3): 1-based inclusive slices
 def _shingles_sql(n: int = 3) -> str:
     return (
         f"CASE WHEN len({_WORDS}) >= {n} THEN "
@@ -816,10 +816,10 @@ def corpus_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-phase prefix sum (range partition -> local cumsum -> broadcast
     partition offsets), never a single-partition global window."""
     from etl_router_spark.functions.corpus import pack_sequences
-    from etl_router_spark.functions.text import tokens_col
+    from etl_router_spark.functions.text import tokens_sql
 
     docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.size(tokens_col("text")).cast("bigint").alias("n_tokens")
+        "doc_id", F.size(F.expr(tokens_sql("text"))).cast("bigint").alias("n_tokens")
     )
     out = pack_sequences(docs, max_tokens=2048, id_col="doc_id",
                          token_count_col="n_tokens")
@@ -2861,11 +2861,11 @@ _BM25_CORE_SQL = f"""
 
 def _bm25_queries(spark: SparkSession, sf_dir: str):
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
-    from etl_router_spark.functions.text import tokens_col
+    from etl_router_spark.functions.text import tokens_sql
 
     queries = (docs.filter(F.col("doc_id").isin(10, 20, 30))
                .select(F.col("doc_id").alias("query_id"),
-                       F.concat_ws(" ", F.slice(tokens_col("text"), 1, 5))
+                       F.concat_ws(" ", F.slice(F.expr(tokens_sql("text")), 1, 5))
                         .alias("query_text")))
     return docs, queries
 
@@ -3600,10 +3600,10 @@ def corpus_pack_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode + one seq_index-keyed groupBy; the oracle rebuilds the
     same layout with window prefix sums and generate_series."""
     from etl_router_spark.functions.corpus import pack_with_boundaries
-    from etl_router_spark.functions.text import tokens_col
+    from etl_router_spark.functions.text import tokens_sql
 
     docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.size(tokens_col("text")).cast("bigint").alias("n_tokens")
+        "doc_id", F.size(F.expr(tokens_sql("text"))).cast("bigint").alias("n_tokens")
     )
     out = pack_with_boundaries(docs, max_tokens=2048)
     return out.select(
@@ -4217,10 +4217,10 @@ def corpus_filter_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     observability report that makes a filter configuration tunable
     without R separate filter jobs over 100 TB."""
     from etl_router_spark.functions.corpus import filter_attribution
-    from etl_router_spark.functions.text import tokens_col
+    from etl_router_spark.functions.text import tokens_sql
 
     docs = load_table(spark, sf_dir, "documents")
-    n_words = F.size(tokens_col("text"))
+    n_words = F.size(F.expr(tokens_sql("text")))
     return filter_attribution(docs, {
         "min_words": n_words >= 20,
         "max_words": n_words <= 90,

@@ -1435,7 +1435,7 @@ def stream_filter_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from etl_router_spark.functions.corpus import filter_attribution
-    from etl_router_spark.functions.text import tokens_col
+    from etl_router_spark.functions.text import tokens_sql
 
     wd = tempfile.mkdtemp(prefix="etl_stream_attr_")
     docs = load_table(spark, sf_dir, "documents")
@@ -1452,7 +1452,7 @@ def stream_filter_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     log_dir = os.path.join(wd, "attr_log")
 
     def attribute_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        n_words = F.size(tokens_col("text"))
+        n_words = F.size(F.expr(tokens_sql("text")))
         (filter_attribution(batch_df, {
             "min_words": n_words >= 20,
             "max_words": n_words <= 90,

@@ -181,11 +181,11 @@ def _filter_attr_full(s, sf):
     from pyspark.sql import functions as F
 
     from etl_router_spark.functions.corpus import filter_attribution
-    from etl_router_spark.functions.text import tokens_col
+    from etl_router_spark.functions.text import tokens_sql
     from etl_router_spark.io import load_table
 
     docs = load_table(s, sf, "documents")
-    n_words = F.size(tokens_col("text"))
+    n_words = F.size(F.expr(tokens_sql("text")))
     return filter_attribution(docs, {
         "min_words": n_words >= 20,
         "max_words": n_words <= 90,

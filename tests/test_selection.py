@@ -180,22 +180,21 @@ def test_weighted_sample_global_and_nonpositive(spark):
 HOSTILE_SALTS = ["it's", "back\\slash", "\\'", "end\\", "ünïcødé—😀"]
 
 
-def test_hostile_salts_draw_as_the_column_form(spark):
+def test_hostile_salts_draw_as_the_python_reference(spark):
     """The SQL-text draw splices the salt into a string literal: a
-    quote, a backslash or unicode must give exactly the draw of the
-    h60 Column form on concat(salt, '|', id), never a parse error or a
-    silently different literal."""
+    quote, a backslash or unicode must give exactly the draw of a
+    pure-Python h60 of salt|id, never a parse error or a silently
+    different literal."""
+    import hashlib
+
     from etl_router_spark.functions.selection import _u_micro_sql
-    from etl_router_spark.functions.text import h60
 
     df = spark.range(40).withColumnRenamed("id", "doc_id")
     for salt in HOSTILE_SALTS:
-        col_form = h60(F.concat(F.lit(salt), F.lit("|"),
-                                F.col("doc_id").cast("string")))
-        want = (F.pmod(col_form, F.lit(1000000)).cast("double") + 0.5) / 1e6
-        rows = df.select(F.expr(_u_micro_sql("doc_id", salt)).alias("u"),
-                         want.alias("w")).collect()
-        assert all(r.u == r.w for r in rows), salt
+        rows = df.select("doc_id", F.expr(_u_micro_sql("doc_id", salt)).alias("u")).collect()
+        for r in rows:
+            h = int(hashlib.md5(f"{salt}|{r.doc_id}".encode()).hexdigest()[:15], 16)
+            assert r.u == (h % 1000000 + 0.5) / 1e6, salt
 
 
 def test_weighted_sample_hostile_salts_match_python_reference(spark):

@@ -12,6 +12,7 @@ from __future__ import annotations
 import glob
 import os
 from datetime import datetime
+from functools import partial
 
 import pytest
 import yaml
@@ -253,6 +254,14 @@ def _smoke(case: str, **config) -> object:
     ("filter", {"condition": None}, "requires key 'condition'"),
     ("epoch_upsample", {"token_budget": None}, "requires key 'token_budget'"),
     ("service", {"transform": None}, "requires key 'transform'"),
+    # a misspelled value of an operator's Literal[...] parameter: it used
+    # to fail only at compile
+    ("domain_cap", {"method": "exactt"}, "key 'method' has value 'exactt'"),
+    ("decontaminate", {"mode": "flg"}, "key 'mode' has value 'flg'"),
+    ("decontaminate_fuzzy", {"mode": "dorp"}, "key 'mode' has value 'dorp'"),
+    ("bloom_decontaminate", {"mode": "tagg"}, "key 'mode' has value 'tagg'"),
+    ("gopher_filter", {"mode": "keep"}, "key 'mode' has value 'keep'"),
+    ("c4_filter", {"mode": "Tag"}, "key 'mode' has value 'Tag'"),
 ])
 def test_typos_fail_validation(case, config, needle):
     from etl_router_spark.model.validation import ValidationError, validate_pipeline
@@ -289,6 +298,20 @@ def test_selectors_fail_validation(case, config, needle):
         assert "allowed: [" in str(err.value)
 
 
+@pytest.mark.parametrize("case, config, branch", [
+    ("pq_topk:ivf", {"method": "sql"}, "nprobe"),
+    ("pq_topk", {"method": "blas", "index_path": "/i", "dim": None}, "index_path"),
+])
+def test_key_unread_on_the_picked_branch_fails_validation(case, config, branch):
+    """pq_topk's IVF-PQ branch (picked by nprobe or index_path) has one
+    scorer: a method key there used to validate and be dropped."""
+    from etl_router_spark.model.validation import ValidationError, validate_pipeline
+
+    with pytest.raises(ValidationError, match=f"stage 't': transform 'pq_topk' key "
+                       f"'method' is not read on the branch that key '{branch}' selects"):
+        validate_pipeline(_smoke(case, **config))
+
+
 @pytest.mark.parametrize("case, config", [
     ("dedup_embedding", {"method": None}),  # unset: the cosine path
     ("dedup_embedding", {"method": "cosine"}),
@@ -296,6 +319,9 @@ def test_selectors_fail_validation(case, config, needle):
     ("pq_encode", {"dim": None, "train": True}),
     ("pq_encode", {"dim": None, "codebooks": [[[0.0, 0.0]]]}),
     ("pq_topk", {"dim": None, "index_path": "/i"}),
+    ("pq_topk", {"method": "sql"}),  # the flat ADC scorer reads it
+    ("domain_cap", {"method": "hybrid"}),
+    ("gopher_filter", {"mode": "tag"}),
 ])
 def test_selector_defaults_and_alternatives_validate(case, config):
     from etl_router_spark.model.validation import validate_pipeline
@@ -389,3 +415,66 @@ def test_table_entry_compiles_from_a_minimal_manifest(spark, smoke_env, case):
     out.schema  # analyzes the plan
     if case == "validate":
         assert set(compiled.dlq_frames) == {"t"}
+
+
+# hostile column names, as (the column's name, the manifest's reference
+# to it): a space and a dash; a keyword and an embedded backtick,
+# referenced the way F.col takes it
+HOSTILE = {
+    "spaced": {"text": ("body text", "body text"), "doc_id": ("doc-id", "doc-id")},
+    "quoted": {"text": ("we`ird", "`we``ird`"), "doc_id": ("select", "select")},
+}
+NAMED_FIELDS = {"text_field": "text", "id_field": "doc_id"}
+# (case, variant) pairs that fail loudly instead: PySpark's own
+# mapInPandas resolves every input column with F.col, which rejects a
+# name holding a backtick
+LOUD = {("bpe_tokenize", "quoted")}
+
+
+def _reads_named_fields(case: str) -> bool:
+    from etl_router_spark.compile.table import TRANSFORMS
+
+    return bool(set(NAMED_FIELDS) & TRANSFORMS[case.split(":")[0]].allowed())
+
+
+def _smoke_rows(spark, case, docs, paths, names):
+    """The sorted output rows of ``case`` over ``docs`` whose text and
+    id columns are referenced as ``names``."""
+    from etl_router_spark.compile.pipeline import compile_pipeline
+    from etl_router_spark.compile.table import TRANSFORMS
+    from etl_router_spark.model.parser import parse_manifest_dict
+
+    doc = smoke_pipeline(case, paths)
+    cfg = doc["spec"]["stages"][1]["config"]
+    allowed = TRANSFORMS[case.split(":")[0]].allowed()
+    cfg.update({k: names[col] for k, col in NAMED_FIELDS.items() if k in allowed})
+    for key, value in cfg.items():  # e.g. snapshot_diff's compare_fields
+        if isinstance(value, list):
+            cfg[key] = [names.get(v, v) if isinstance(v, str) else v for v in value]
+    compiled = compile_pipeline(spark, parse_manifest_dict(doc), source_overrides={"src": docs})
+    return sorted(repr(tuple(r)) for r in compiled.sink_frames["out"].collect())
+
+
+@pytest.mark.parametrize("case", [c for c in sorted(SMOKE) if _reads_named_fields(c)])
+def test_hostile_column_names_give_the_plain_values(spark, smoke_env, tmp_path, case):
+    """A text or id column named with a space, a dash, a keyword or a
+    backtick is quoted wherever an operator splices it into SQL text:
+    the values equal the plain-name run."""
+    from pyspark.errors import AnalysisException
+
+    frames, paths = smoke_env
+    want = _smoke_rows(spark, case, frames[None], paths,
+                       {col: col for col in NAMED_FIELDS.values()})
+    for variant, renames in HOSTILE.items():
+        docs = frames[None]
+        for col, (name, _) in renames.items():
+            docs = docs.withColumnRenamed(col, name)
+        side = str(tmp_path / variant)
+        docs.write.parquet(side)
+        run = partial(_smoke_rows, spark, case, docs, {**paths, "side": side},
+                      {col: ref for col, (_, ref) in renames.items()})
+        if (case, variant) in LOUD:
+            with pytest.raises(AnalysisException, match="INVALID_ATTRIBUTE_NAME_SYNTAX"):
+                run()
+        else:
+            assert run() == want, variant
