@@ -73,19 +73,6 @@ def _linear_chain(pipeline: Pipeline) -> list[str] | None:
 
 
 @dataclass
-class SharedStage:
-    """One node of the merged DAG (optimizer.rs OptimizedDag stages)."""
-
-    key: str  # config fingerprint
-    label: str
-    pipelines: list[str] = field(default_factory=list)
-
-    @property
-    def is_shared(self) -> bool:
-        return len(self.pipelines) > 1
-
-
-@dataclass
 class OptimizedGroup:
     """Pipelines sharing one source: scan + longest stateless prefix."""
 

@@ -31,7 +31,7 @@ from typing import Literal, get_args
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_router_spark.functions.sqltext import sql_ident, sql_str
+from etl_router_spark.functions.sqltext import sql_double, sql_ident, sql_str
 from etl_router_spark.functions.text import DropOrTag, bound_shingles_sql, h60_sql, tokens_sql
 
 # domain_cap's ranking: exact per-host windows, a precomputed
@@ -1687,7 +1687,7 @@ def filter_yield_curve(
         ).alias(f"__u{i}"))
     wide = df.groupBy(group_col).agg(*aggs) if group_col else df.agg(*aggs)
     stacked = ", ".join(
-        f"CAST({repr(float(t))} AS DOUBLE), __d{i}, __u{i}"
+        f"{sql_double(t)}, __d{i}, __u{i}"
         for i, t in enumerate(thresholds))
     cols = ([sql_ident(group_col)] if group_col else []) + [
         f"stack({len(thresholds)}, {stacked}) AS "

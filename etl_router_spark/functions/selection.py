@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_router_spark.functions.sqltext import sql_ident, sql_str
+from etl_router_spark.functions.sqltext import sql_double, sql_ident, sql_str
 from etl_router_spark.functions.text import h60_sql, shingles_sql, tokens_sql
 
 __all__ = [
@@ -150,7 +150,7 @@ def _lr_table(ct: DataFrame, cr: DataFrame,
     keeps the zero-gram-corpus total at 0, so null/whitespace-text
     documents still contribute zero grams to either total — the r10
     null-text identity between the two entry points)."""
-    s, b = repr(float(smooth)), buckets
+    s, b = sql_double(smooth), buckets
     return (
         ct.join(cr, "bucket", "full_outer")
         .selectExpr(

@@ -16,8 +16,10 @@ from typing import Literal, get_args
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
 
-from etl_router_spark.functions.sqltext import sql_ident, sql_str
+from etl_router_spark.functions.python_map import map_in_pandas
+from etl_router_spark.functions.sqltext import sql_double, sql_ident, sql_str
 
 # keep only the passing rows, or tag every row
 DropOrTag = Literal["drop", "tag"]
@@ -384,7 +386,7 @@ def bigram_logprob(
     doc_pairs = df.selectExpr(id_sql, f"explode({pair_sql}) AS p").selectExpr(
         id_sql, "p.prev AS prev", "p.cur AS cur"
     )
-    k, l = repr(float(add_k)), repr(float(lam))
+    k, l = sql_double(add_k), sql_double(lam)
     scored = (
         doc_pairs.join(bi, ["prev", "cur"], "left")
         .join(uni.selectExpr("tok AS prev", "c AS c_prev"), "prev", "left")
@@ -392,9 +394,7 @@ def bigram_logprob(
         .crossJoin(F.broadcast(stats))
         .selectExpr(
             id_sql,
-            # ln(lam * p_bigram + (1-lam) * p_addk_unigram); FP
-            # constants via repr so the DuckDB oracle evaluates
-            # bit-identical literals
+            # ln(lam * p_bigram + (1-lam) * p_addk_unigram)
             f"ln({l} * (CAST(coalesce(cb, 0) AS DOUBLE) /"
             " CAST(coalesce(c_prev, 1) AS DOUBLE))"
             f" + (1.0 - {l}) * ((CAST(coalesce(c_cur, 0) AS DOUBLE) + {k}) /"
@@ -775,6 +775,9 @@ def bpe_tokenize(
     import pandas as pd
 
     ranks = {pair: i for i, pair in enumerate(merges)}
+    # pandas knows the column by its name, not by its F.col reference
+    # (`we``ird` names we`ird)
+    text_name = df.select(text_col).columns[0]
 
     def encode_word(word: str, cache: dict) -> list[str]:
         hit = cache.get(word)
@@ -811,17 +814,17 @@ def bpe_tokenize(
                     out.extend(encode_word(w + end_of_word, cache))
                 return out
 
-            toks = pdf[text_col].map(enc)
+            toks = pdf[text_name].map(enc)
             pdf = pdf.copy()
             pdf[out_col] = toks
             pdf[f"{out_col}_n"] = toks.map(len).astype("int64")
             yield pdf
 
-    fields = ", ".join(f"{sql_ident(f.name, alias=True)} {f.dataType.simpleString()}"
-                       for f in df.schema.fields)
-    schema = (f"{fields}, {sql_ident(out_col, alias=True)} array<string>, "
-              f"{sql_ident(f'{out_col}_n', alias=True)} bigint")
-    return df.mapInPandas(process, schema)
+    schema = StructType(
+        [StructField(f.name, f.dataType) for f in df.schema.fields]
+        + [StructField(out_col, ArrayType(StringType())),
+           StructField(f"{out_col}_n", LongType())])
+    return map_in_pandas(df, process, schema)
 
 
 def bpe_train(

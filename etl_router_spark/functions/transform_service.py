@@ -25,7 +25,14 @@ service would be called from inside the batch function with its own
 batching).
 
 At 100 TB: the stage is embarrassingly parallel (no shuffle, no state);
-cost is the Arrow copy + user code, both proportional to partition size.
+cost is the Arrow copy + user code, both proportional to partition size,
+plus a fixed cost per task at the Python worker boundary: PySpark's
+worker sets up each task (files, broadcasts, unpickling the function)
+before the first batch. On CPython 3.11 that setup re-reads every zip
+on the worker's path (16 reads) unless the worker comes
+from the engine's daemon (``etl_router_spark.pyworker``, configured by
+``get_spark``), which re-reads a zip only when it changed. The streaming
+plugin pays this cost every epoch, once per task.
 The error side re-filters the mapInPandas result, and each write is its
 own action, so a pipeline writing both sides runs the user code once per
 side (nothing persists the raw frame).

@@ -3948,6 +3948,11 @@ _TOUCHED_BOOST: tuple[str, ...] = (
     # per member (verified locally against the oracle at sf0.01).
     "fanout_mapped",
     "pipeline_shared_prefix_dlq",
+    # (d) Gates whose plan moved with the DOUBLE literals and the
+    # positional-name mapInPandas (bigram_logprob and the DSIR gates are
+    # listed above); green locally at sf0.01 and sf0.001.
+    "corpus_yield_curve",
+    "text_bpe_tokenize",
 )
 
 # Gates REGISTERED this round: rank them after every already-known

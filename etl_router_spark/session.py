@@ -5,6 +5,24 @@ ship to a 1000-executor cluster (AQE on, adaptive coalescing, skew-join
 handling, Arrow for the Pandas-UDF slow path). Shuffle partitions default
 low for local mode; on a real cluster AQE coalescing makes the initial
 number mostly irrelevant as long as it is high enough.
+
+Python workers start from the engine's own daemon,
+``etl_router_spark.pyworker`` (``spark.python.daemon.module``). PySpark's
+worker calls ``importlib.invalidate_caches()`` before every task, and on
+CPython 3.11 that re-reads the central directory of every zip on the
+worker's path: 16 reads (``pyspark.zip``, the spark-core jar, py4j).
+The daemon makes a zip re-read only when the file changed. On a
+4-partition ``mapInPandas`` over 3000 rows (4 vCPUs,
+``scripts/python_task_overhead.py``, three runs each) that took the
+per-task median of Spark's "time to initialize Python workers" from
+450-770 ms to 150-350 ms and the job from 0.54-0.96 s to 0.20-0.29 s.
+It is a fixed cost of every Python task: the ``service`` plugin, each
+pandas UDF / ``mapInPandas`` operator, the Python data sources. Workers
+find the daemon, and this package, through
+``spark.executorEnv.PYTHONPATH``, which ``SparkContext`` passes to every
+Python function's environment, so it holds on a JVM launched by someone
+else, from any cwd. A session reused through ``getOrCreate`` keeps the
+daemon it started with.
 """
 
 from __future__ import annotations
@@ -52,16 +70,11 @@ def get_spark(
     promotion, skew splitting) and coalesces post-shuffle partitions at
     runtime; these matter far more at 100 TB than any static setting.
     """
-    # Python workers (pandas UDFs / mapInPandas) import this package by
-    # module name; make sure they inherit its location even when the
-    # driver script runs from elsewhere. On a real cluster this is the
-    # job of --py-files / the image; locally PYTHONPATH covers it.
+    # Python workers (pandas UDFs / mapInPandas) and their daemon import
+    # this package by module name. The JVM merges this into each
+    # worker's PYTHONPATH whatever environment it was launched with; on
+    # a real cluster this is the job of --py-files / the image
     pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    existing = os.environ.get("PYTHONPATH", "")
-    if pkg_root not in existing.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            pkg_root + (os.pathsep + existing if existing else "")
-        )
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
     master = master or f"local[{cpus}]"
@@ -77,6 +90,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
+        .config("spark.executorEnv.PYTHONPATH", pkg_root)
+        .config("spark.python.daemon.module", "etl_router_spark.pyworker")
     )
     confs = {**_RUNTIME_CONFS, **(extra_conf or {})}
     for k, v in confs.items():

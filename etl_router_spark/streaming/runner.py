@@ -11,11 +11,14 @@ Maps the reference's streaming control plane onto Structured Streaming:
 - fan-out shared scan (``optimizer.rs:57-237``,
   ``engine.rs:324-352``) -> ONE ``foreachBatch`` per fan-out stage that
   replays the sub-DAG below it on the per-epoch batch and writes every
-  sink — the source is read once per epoch, exactly like the
-  reference's shared-source optimization;
+  sink — for the fan-out's sinks the source is read once per epoch,
+  like the reference's shared-source optimization;
 - DLQ side-outputs (``dlq/src/record.rs:96-180``) -> separate streams
   of the DLQ frames the compiler already enriched with ``_dlq_*``
-  columns;
+  columns. A DLQ frame above a fan-out is its own query: it re-reads
+  each batch of the source and re-runs the stages above it (a
+  ``service`` plugin runs twice per row), so the source is read twice
+  per epoch there;
 - backpressure credits (``buffer/src/backpressure.rs``) -> source-side
   pacing (maxFilesPerTrigger / maxOffsetsPerTrigger), configured on the
   source, not here — Spark's pull model needs no credit protocol.

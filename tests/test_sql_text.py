@@ -20,15 +20,16 @@ HOSTILE_STRINGS = ["it's", "[RED\\ACTED]", "a\\nb", "a\nb", "\\", "''", "\\%_", 
 
 def test_one_quoting_idiom():
     """Spark-free tripwire: no hand-written string escape or double
-    literal outside the helper module, and no Column-composed twin of
-    the SQL-text builders."""
+    literal (``repr(float(x))`` with no ``D`` parses as a DECIMAL)
+    outside the helper module, and no Column-composed twin of the
+    SQL-text builders."""
     found = []
     for name in sorted(os.listdir(FUNCTIONS)):
         if not name.endswith(".py") or name == "sqltext.py":
             continue
         with open(os.path.join(FUNCTIONS, name)) as fh:
             text = fh.read()
-        found += [f"{name}: {needle}" for needle in (".replace(\"'\"", "!r}D")
+        found += [f"{name}: {needle}" for needle in (".replace(\"'\"", "!r}D", "repr(float(")
                   if needle in text]
         found += [f"{name}: def {node.name}" for node in ast.walk(ast.parse(text))
                   if isinstance(node, ast.FunctionDef)
