@@ -10,6 +10,8 @@ find the longest shared prefix by config equality, build the merged DAG
 — and, beyond the reference, actually *execute* it shared:
 ``compile_group`` materializes the prefix once (``persist``) and every
 pipeline tail reuses it (one scan + one prefix compute for N sinks).
+``OptimizedGroup.compile_members`` builds that plan for ``compile_group``
+and, per epoch, for the streaming group writer.
 
 At 100 TB this is the difference between N full-table scans and one:
 the persisted prefix lives in executor storage memory/disk and each
@@ -29,8 +31,10 @@ from etl_router_spark.compile.pipeline import (
     _compile_stage_sides,
     _dlq_frame,
     _SharedPrefix,
+    compile_pipeline,
     compile_stages,
 )
+from etl_router_spark.compile.table import stateful_stage
 from etl_router_spark.model.conditions import Condition
 from etl_router_spark.model.manifest import Pipeline, StageType
 
@@ -103,6 +107,36 @@ class OptimizedGroup:
             sid = p_prefix[rep_prefix.index(rid)]
             out[sid] = _dlq_frame(side, p.stages[sid], p.name)
         return out
+
+    def compile_members(self, spark: SparkSession, outputs: dict[str, DataFrame],
+                        persist: bool, source_overrides: dict[str, DataFrame] | None = None):
+        """The group as a batch plan: the source and shared prefix once,
+        with the first member's stage ids, into ``outputs`` (a source
+        seeded there is kept), persisted when ``persist``; then each
+        member's tail from that frame. Returns the shared frame and per
+        member ``(pipeline, sink frames, DLQ frames, tail stage frames)``,
+        the DLQ frames led by the prefix's (``member_dlq``)."""
+        shared_ids = self.chains[self.pipelines[0].id][: 1 + self.prefix_len]
+        _, shared_sides = _compile_stage_sides(
+            spark, self.pipelines[0], shared_ids, outputs, False, source_overrides)
+        shared = outputs[shared_ids[-1]]
+        if persist:
+            shared.persist()
+        members = []
+        try:
+            for p in self.pipelines:
+                chain = self.chains[p.id]
+                stage_frames = {chain[self.prefix_len]: shared}
+                sink_frames, dlq_frames = compile_stages(
+                    spark, p, chain[1 + self.prefix_len:], stage_frames,
+                    source_overrides=source_overrides)
+                members.append((p, sink_frames, {**self.member_dlq(p, shared_sides),
+                                                 **dlq_frames}, stage_frames))
+        except BaseException:
+            if persist:
+                shared.unpersist()
+            raise
+        return shared, members
 
 
 @dataclass
@@ -180,45 +214,23 @@ def compile_group(
     explicit ``release_shared`` on every member for callers that only
     read the frames).
 
-    Batch only for the persist (streaming groups fall back to
-    independent queries — cross-query sharing in streaming means one
-    foreachBatch, which changes sink lifecycle; see streaming module).
+    Batch only for the persist: with ``streaming=True`` every pipeline
+    compiles on its own (``run_streaming_group`` fuses a streaming group
+    into one ``foreachBatch`` query instead).
     """
     dag = optimize(pipelines)
     out: dict[str, CompiledPipeline] = {}
     for g in dag.groups:
-        shareable = len(g.pipelines) > 1 and not streaming
-        if not shareable:
+        if len(g.pipelines) < 2 or streaming:
             for p in g.pipelines:
-                from etl_router_spark.compile.pipeline import compile_pipeline
-
                 out[p.id] = compile_pipeline(spark, p, streaming, source_overrides)
             continue
-        # build source + shared prefix ONCE using the first pipeline's
-        # stage ids (configs are identical across the group by construction)
-        rep = g.pipelines[0]
-        rep_chain = g.chains[rep.id]
-        shared_ids = rep_chain[: 1 + g.prefix_len]
-        shared_outputs: dict[str, DataFrame] = {}
-        _, shared_sides = _compile_stage_sides(
-            spark, rep, shared_ids, shared_outputs, streaming,
-            source_overrides)
-        shared_df = shared_outputs[shared_ids[-1]].persist()
-        handle = _SharedPrefix([shared_df], len(g.pipelines))
-
-        for p in g.pipelines:
-            chain = g.chains[p.id]
-            seed_id = chain[g.prefix_len]  # this pipeline's last shared stage id
-            outputs = {seed_id: shared_df}
-            tail_ids = chain[1 + g.prefix_len :]
-            sink_frames, dlq_frames = compile_stages(
-                spark, p, tail_ids, outputs, streaming, source_overrides
-            )
-            dlq_frames = {**g.member_dlq(p, shared_sides), **dlq_frames}
+        shared, members = g.compile_members(spark, {}, True, source_overrides)
+        handle = _SharedPrefix([shared], len(g.pipelines))
+        for p, sink_frames, dlq_frames, outputs in members:
             out[p.id] = CompiledPipeline(
                 p, sink_frames, dlq_frames, stage_frames=outputs,
-                spark=spark, streaming=streaming, shared_prefix=handle,
-            )
+                spark=spark, shared_prefix=handle)
     return out
 
 
@@ -285,13 +297,11 @@ def render_dot(pipelines: list[Pipeline]) -> str:
 def render_ascii(pipelines: list[Pipeline]) -> str:
     """Compact text rendering (one line per pipeline, shared prefix
     marked). Members a ``run --all --streaming`` would EXCLUDE from
-    shared-prefix fusion are annotated with the stateful tail stage
-    that forces the exclusion (r13 verdict ask #6 — the decision was
-    previously visible only as run_streaming_group's runtime warning;
-    the reference surfaces group membership on the graph view,
-    cli/src/commands/graph.rs:30-35)."""
-    from etl_router_spark.streaming.runner import _stateful_stage
-
+    shared-prefix fusion are annotated with the tail stage that forces
+    the exclusion: the first whose type the transform table declares
+    ``stateful`` (``table.stateful_stage``, the rule
+    ``run_streaming_group`` applies). The reference surfaces group
+    membership on the graph view (cli/src/commands/graph.rs:30-35)."""
     dag = optimize(pipelines)
     out: list[str] = []
     for g in dag.groups:
@@ -313,7 +323,7 @@ def render_ascii(pipelines: list[Pipeline]) -> str:
                 parts.append(f"{sid}{mark}")
             line = f"{p.id}: " + " -> ".join(parts)
             if shared and g.prefix_len:
-                sid = _stateful_stage(p, chain[1 + g.prefix_len:])
+                sid = stateful_stage(p, chain[1 + g.prefix_len:])
                 if sid is not None:
                     line += (
                         f"  [streaming: runs individually — tail "

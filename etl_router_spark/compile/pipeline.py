@@ -22,9 +22,8 @@ The same compiler serves batch and streaming: ``streaming=True`` reads
 sources with ``readStream`` and applies declared watermarks
 (``routing/src/watermark.rs:43-156`` semantics via ``withWatermark``);
 ``etl_router_spark.streaming.run_streaming`` turns the compiled sinks
-into StreamingQueries. ``compile_stages`` is exposed so the streaming
-fan-out runner can replay the sub-DAG below a fan-out stage inside one
-``foreachBatch`` (the shared-scan optimization).
+into StreamingQueries. ``compile_stages`` is exposed for the streaming
+runner's per-epoch replay of a sub-DAG (``streaming.runner.epoch_replay``).
 """
 
 from __future__ import annotations
@@ -155,6 +154,17 @@ def delay_pacing_overrides(pipeline: Pipeline) -> dict[str, dict[str, Any]]:
     return overrides
 
 
+def compile_source(spark: SparkSession, pipeline: Pipeline, sid: str, streaming: bool = False,
+                   source_overrides: dict[str, DataFrame] | None = None) -> DataFrame:
+    """Source stage ``sid`` as a frame, with its declared watermark; a
+    streaming read takes a delay-mode ratelimit's per-trigger cap."""
+    cfg = pipeline.stages[sid].config
+    pacing = delay_pacing_overrides(pipeline).get(sid) if streaming else None
+    df = ((source_overrides or {}).get(sid)
+          or read_source(spark, {**cfg, **pacing} if pacing else cfg, streaming))
+    return _with_watermark(df, cfg.get("watermark"))
+
+
 def _dlq_frame(side: DataFrame, stage: Stage, pipeline_name: str) -> DataFrame:
     """A route-mode stage's failing rows as its DLQ frame: code
     TRANSFORM and the per-row ``__error`` message for a service stage,
@@ -206,7 +216,6 @@ def _compile_stage_sides(spark: SparkSession, pipeline: Pipeline,
     # split stage id -> {target stage id: routed frame}
     split_routes: dict[str, dict[str, DataFrame]] = {}
     overrides = source_overrides or {}
-    pacing = delay_pacing_overrides(pipeline) if streaming else {}
 
     for sid in order:
         if sid in outputs:  # pre-seeded root
@@ -225,9 +234,7 @@ def _compile_stage_sides(spark: SparkSession, pipeline: Pipeline,
             inputs.append(up)
 
         if stage.stage_type == StageType.SOURCE:
-            src_cfg = {**stage.config, **pacing[sid]} if sid in pacing else stage.config
-            df = overrides.get(sid) or read_source(spark, src_cfg, streaming)
-            df = _with_watermark(df, stage.config.get("watermark"))
+            df = compile_source(spark, pipeline, sid, streaming, overrides)
         elif stage.stage_type == StageType.FAN_IN:
             per_input = stage.config.get("inputs") or [{}] * len(inputs)
             lateness = stage.config.get("allowed_lateness")

@@ -20,7 +20,8 @@ key fails validation instead of silently leaving a default in place.
 Types that read a side input or a persisted artifact first, or pick
 among several operators, add a ``build`` function. ``PARTS`` holds the
 specs such builds apply to a piece of the config (a pair generator, a
-trainer); their keys count as the owning type's keys.
+trainer); their keys count as the owning type's keys. ``stateful`` marks
+the types a streaming writer may not replay per epoch.
 """
 
 from __future__ import annotations
@@ -37,7 +38,7 @@ from typing import Any, Callable, Literal, Mapping, get_args, get_origin, get_ty
 from pyspark.sql import functions as F
 from pyspark.sql import types as sqltypes
 
-from etl_router_spark.model.manifest import FieldMapping
+from etl_router_spark.model.manifest import FieldMapping, Pipeline, StageType
 
 _SCALARS = {"bool": bool, "int": int, "float": float, "str": str}
 _COL_RULE = re.compile(r"_field(s?)$")
@@ -89,6 +90,9 @@ class Spec:
     them from the annotation); ``parts(cfg)`` names the ``PARTS`` specs the
     build applies for ``cfg``, whose required keys the stage then needs;
     ``unread`` maps a key to the keys picking a branch that ignores it.
+    ``stateful``: the type's stream keeps state across epochs (aggregate,
+    dedup, stream-stream join, group map with state) or is refused (window,
+    sort, limit, a stream-static join keeping the static side's rows).
     """
 
     op: str | None = None
@@ -102,6 +106,7 @@ class Spec:
     choices: Mapping[str, tuple[str, ...]] = field(default_factory=dict)
     parts: Callable[[Mapping[str, Any]], tuple[str, ...]] = lambda cfg: ()
     unread: Mapping[str, tuple[str, ...]] = field(default_factory=dict)
+    stateful: bool = False
 
     def __post_init__(self):
         for name in ("keys", "sources", "extra"):
@@ -477,18 +482,19 @@ TRANSFORMS: dict[str, Spec] = {
     "split": Spec("compile.transforms:apply_split", "outputs default_output first_match"),
     "join": Spec("compile.transforms:apply_join", "conditions join_type left_prefix "
                  "right_prefix include exclude broadcast strategy", extra="right",
-                 renames={"join_type": "how", "broadcast": "broadcast_right"}),
+                 renames={"join_type": "how", "broadcast": "broadcast_right"}, stateful=True),
     "dedupe": Spec("compile.transforms:apply_dedupe", "key_fields keep order_field "
-                   "tiebreak_fields within_watermark window"),
+                   "tiebreak_fields within_watermark window", stateful=True),
     "ratelimit": Spec("compile.transforms:apply_ratelimit", "key_fields max_rate window "
                       "ts_field on_exceed tiebreak_fields",
-                      renames={"window": "window_duration"}, build=_ratelimit),
+                      renames={"window": "window_duration"}, build=_ratelimit, stateful=True),
     # emit/emit_interval pick the streaming output mode and trigger
     "aggregate": Spec("compile.transforms:apply_aggregate",
                       "group_by aggregations window ts_field", extra="emit emit_interval",
-                      renames={"window": "window_config"}, defaults={"group_by": []}),
+                      renames={"window": "window_config"}, defaults={"group_by": []},
+                      stateful=True),
     "sessionize": Spec("compile.transforms:apply_sessionize", "key_fields gap aggregations "
-                       "ts_field max_duration emit", extra="emit_interval"),
+                       "ts_field max_duration emit", extra="emit_interval", stateful=True),
     # user-code extension point (proto/transform.proto ProcessBatch)
     "service": Spec("functions.transform_service:apply_transform_service",
                     "transform output_schema transform_config on_error",
@@ -496,14 +502,14 @@ TRANSFORMS: dict[str, Spec] = {
                     aliases={"transform_id": "transform"}),
 
     # large-scale data-pipeline operators (SURVEY §7.3 M6)
-    "dedup_exact": _text("functions.dedup:exact_dedup", "id_field normalize"),
+    "dedup_exact": _text("functions.dedup:exact_dedup", "id_field normalize", stateful=True),
     # a persistable LSH index of the input corpus: point a file sink at
     # it (see functions/dedup.py:minhash_index)
     "dedup_index_build": _text("functions.dedup:minhash_index",
-                               "id_field num_hashes bands shingle_n hash_family"),
+                               "id_field num_hashes bands shingle_n hash_family", stateful=True),
     "dedup_index_probe": _text("functions.dedup:dedup_against_minhash_index",
                                "id_field num_hashes bands shingle_n threshold hash_family",
-                               extra="index_path", build=_index_probe),
+                               extra="index_path", build=_index_probe, stateful=True),
     # max_candidates: an optional pre-flight candidate budget on the
     # pair-generation types — fail fast with CandidateBudgetExceeded
     # instead of launching a quadratic pair shuffle
@@ -546,15 +552,17 @@ TRANSFORMS: dict[str, Spec] = {
                                "media_field id_field decoder feature_dim"),
     # benchmark sides are declared like lookup's dim: a source config
     "decontaminate": _text("functions.corpus:decontaminate", "benchmark id_field ngram mode",
-                           renames={"ngram": "n"}, sources="benchmark"),
+                           renames={"ngram": "n"}, sources="benchmark", stateful=True),
     # 'ngram' mirrors the sibling decontaminate/bloom stages; 'n' is kept
     # as a back-compat alias
     "redact_spans": _text("functions.corpus:redact_contaminated_spans",
                           "benchmark id_field ngram sentinel out_field",
-                          renames={"ngram": "n"}, sources="benchmark", aliases={"n": "ngram"}),
+                          renames={"ngram": "n"}, sources="benchmark", aliases={"n": "ngram"},
+                          stateful=True),
     "decontaminate_fuzzy": _text("functions.corpus:decontaminate_fuzzy", "id_field num_hashes "
                                  "bands shingle_n threshold mode hash_family",
-                                 extra="benchmark benchmark_index", build=_decontaminate_fuzzy),
+                                 extra="benchmark benchmark_index", build=_decontaminate_fuzzy,
+                                 stateful=True),
     # the artifact-build half of build-once decontamination: the input
     # (a benchmark corpus) folds into a ONE-ROW persistable filter frame;
     # a parquet sink's output dir IS the probe stage's `filter:`. Manifests
@@ -562,23 +570,26 @@ TRANSFORMS: dict[str, Spec] = {
     # oracle-exact h60
     "bloom_build": _text("functions.corpus:bloom_filter_frame", "ngram m_bits hashes hash_family",
                          renames={"ngram": "n", "hashes": "k"},
-                         defaults={"m_bits": 1 << 22, "hash_family": "xxhash64"}),
+                         defaults={"m_bits": 1 << 22, "hash_family": "xxhash64"}, stateful=True),
     "bloom_decontaminate": _text("functions.corpus:bloom_decontaminate", "id_field ngram m_bits "
                                  "hashes mode hash_family broadcast",
                                  renames={"ngram": "n", "hashes": "k"},
                                  defaults={"m_bits": 1 << 22, "hash_family": "xxhash64"},
                                  extra="filter benchmark", build=_bloom_decontaminate),
     "retrieval_eval": Spec("functions.indexing:retrieval_eval", "qrels k query_id_field "
-                           "doc_id_field rank_field rel_field", sources="qrels"),
+                           "doc_id_field rank_field rel_field", sources="qrels", stateful=True),
     "hard_negatives": Spec("functions.indexing:mine_hard_negatives", "qrels n_negatives "
-                           "query_id_field doc_id_field rank_field rel_field", sources="qrels"),
+                           "query_id_field doc_id_field rank_field rel_field", sources="qrels",
+                           stateful=True),
     "epoch_upsample": Spec("functions.corpus:epoch_upsample", "weights token_budget "
-                           "domain_field key_field size_field max_epochs salt epoch_field"),
+                           "domain_field key_field size_field max_epochs salt epoch_field",
+                           stateful=True),
     # the prior snapshot is a source config, diffed against the input
     "snapshot_diff": Spec("functions.corpus:snapshot_diff",
                           "baseline id_field compare_fields status_field",
                           renames={"baseline": "old"}, sources="baseline",
-                          build=lambda op, df, cfg, kw: op(kw.pop("old"), df, **kw)),
+                          build=lambda op, df, cfg, kw: op(kw.pop("old"), df, **kw),
+                          stateful=True),
     "hash_sample": Spec("functions.corpus:hash_sample",
                         "rate key_field salt strata_field strata_rates",
                         defaults={"rate": 1.0, "key_field": "doc_id"}),
@@ -589,16 +600,18 @@ TRANSFORMS: dict[str, Spec] = {
                            "max_bullet_line_frac max_ellipsis_line_frac "
                            "min_alpha_word_ratio min_stopword_hits"),
     # n: one width, or a list of widths counted in one scan
-    "duplicate_spans": _text("functions.dedup:duplicate_ngram_spans", "n id_field min_count"),
+    "duplicate_spans": _text("functions.dedup:duplicate_ngram_spans", "n id_field min_count",
+                             stateful=True),
     "mix_sample": Spec("functions.corpus:mix_sample", "weights domain_field key_field salt "
-                       "size_field rate_field temperature"),
+                       "size_field rate_field temperature", stateful=True),
     # DSIR selects raw docs resembling the target corpus (a source config)
     "dsir_sample": _text("functions.selection:dsir_sample",
                          "target k id_field buckets smooth salt hash_family",
                          defaults={"k": 1000, "hash_family": "xxhash64"},
                          sources="target", build=_dsir_sample),
     "weighted_sample": Spec("functions.selection:weighted_sample",
-                            "k weight_field id_field group_field salt", defaults={"k": 1000}),
+                            "k weight_field id_field group_field salt", defaults={"k": 1000},
+                            stateful=True),
     "pack_sequences": Spec("functions.corpus:pack_sequences",
                            "max_tokens id_field token_count_field",
                            defaults={"max_tokens": 2048}),
@@ -619,7 +632,7 @@ TRANSFORMS: dict[str, Spec] = {
     "chunk": _text("functions.corpus:chunk_documents", "window stride id_field",
                    defaults={"window": 2048, "stride": 2048}),
     "line_dedup": _text("functions.corpus:line_dedup",
-                        "id_field delimiter tokens_per_line join_sep out_field"),
+                        "id_field delimiter tokens_per_line join_sep out_field", stateful=True),
     "strip_repeated_lines": _text("functions.text:strip_repeated_lines", "out_field"),
     "text_normalize": _text("functions.text:normalize_text",
                             "out_field lowercase strip_non_alnum collapse_whitespace"),
@@ -628,15 +641,15 @@ TRANSFORMS: dict[str, Spec] = {
     "embedding_quantize": Spec("functions.embedding:quantize_int8",
                                "vec_field out_field scale_field"),
     "embedding_mean_pool": Spec("functions.embedding:mean_pool", "group_field vec_field",
-                                defaults={"group_field": "doc_id"}),
+                                defaults={"group_field": "doc_id"}, stateful=True),
     "embedding_pca_project": Spec("functions.embedding:pca_project", "vec_field out_field",
                                   extra="components mean", build=_pca_project),
-    "tfidf": _text("functions.indexing:tfidf_topk", "id_field k"),
-    "heavy_hitters": _text("functions.indexing:heavy_hitters", "id_field k"),
+    "tfidf": _text("functions.indexing:tfidf_topk", "id_field k", stateful=True),
+    "heavy_hitters": _text("functions.indexing:heavy_hitters", "id_field k", stateful=True),
     "inverted_index": _text("functions.indexing:inverted_index",
-                            "id_field min_df max_df max_postings"),
+                            "id_field min_df max_df max_postings", stateful=True),
     "group_topk": Spec("functions.corpus:group_topk",
-                       "group_field order_field k ascending tie_field"),
+                       "group_field order_field k ascending tie_field", stateful=True),
     "global_shuffle": Spec("functions.corpus:global_shuffle", "seed id_field"),
     # near-dup pairs -> connected components -> ONE split per cluster:
     # the leakage guard split_assign alone lacks
@@ -645,41 +658,55 @@ TRANSFORMS: dict[str, Spec] = {
                            renames={"cc_algorithm": "algorithm"}, extra=("method", *_PAIR_KEYS),
                            build=lambda op, df, cfg, kw: op(df, _near_dup_pairs(df, cfg), **kw),
                            choices={"method": _methods("pairs")}, parts=_pairs_parts),
-    "cdc_apply": Spec("functions.cdc:cdc_apply", "key_fields order_fields op_field delete_values"),
+    "cdc_apply": Spec("functions.cdc:cdc_apply", "key_fields order_fields op_field delete_values",
+                      stateful=True),
     "split_assign": Spec("functions.corpus:assign_splits", "key_field fractions salt out_field",
                          defaults={"key_field": "doc_id"}),
-    "ngram_counts": _text("functions.text:ngram_counts", "n k"),
+    "ngram_counts": _text("functions.text:ngram_counts", "n k", stateful=True),
     "char_entropy": _text("functions.text:char_entropy", "id_field output_field",
                           renames={"output_field": "out_col"}),
-    "unigram_logprob": _text("functions.text:unigram_logprob", "id_field"),
-    "bigram_logprob": _text("functions.text:bigram_logprob", "id_field lam add_k"),
+    "unigram_logprob": _text("functions.text:unigram_logprob", "id_field", stateful=True),
+    "bigram_logprob": _text("functions.text:bigram_logprob", "id_field lam add_k", stateful=True),
     "url_normalize": Spec("functions.text:normalize_url", extra="url_field out_field",
                           build=lambda op, df, cfg, kw: df.withColumn(
                               cfg.get("out_field", "url_norm"),
                               op(F.col(cfg.get("url_field", "url"))))),
     "domain_cap": Spec("functions.corpus:domain_cap", "url_field cap id_field method "
-                       "host_field domain_counts seed", sources="domain_counts"),
+                       "host_field domain_counts seed", sources="domain_counts", stateful=True),
     # rules: {name: SQL boolean expression (True = keep)}
     "filter_attribution": Spec("functions.corpus:filter_attribution", "rules",
                                build=lambda op, df, cfg, kw: op(df, {
-                                   n: F.expr(sql) for n, sql in kw["rules"].items()})),
+                                   n: F.expr(sql) for n, sql in kw["rules"].items()}),
+                               stateful=True),
     "yield_curve": Spec("functions.corpus:filter_yield_curve",
-                        "score_field thresholds size_field group_field"),
+                        "score_field thresholds size_field group_field", stateful=True),
     "quality_filter": Spec("functions.corpus:adaptive_quality_filter",
-                           "score_field group_field quantile threshold_round"),
+                           "score_field group_field quantile threshold_round", stateful=True),
     "quality_buckets": Spec("functions.corpus:quality_buckets",
                             "score_field group_field quantiles labels threshold_round",
-                            defaults={"labels": ("tail", "middle", "head")}),
-    "chunk_sentences": _text("functions.corpus:chunk_by_sentences", "max_chars id_field"),
+                            defaults={"labels": ("tail", "middle", "head")}, stateful=True),
+    "chunk_sentences": _text("functions.corpus:chunk_by_sentences", "max_chars id_field",
+                             stateful=True),
     # the query side is a source config, like lookup's dim
-    "bm25": _text("functions.indexing:bm25_topk", "queries id_field k1 b k", sources="queries"),
-    "edit_distance_pairs": _text("functions.dedup:edit_distance_pairs", "max_distance id_field"),
+    "bm25": _text("functions.indexing:bm25_topk", "queries id_field k1 b k", sources="queries",
+                  stateful=True),
+    "edit_distance_pairs": _text("functions.dedup:edit_distance_pairs", "max_distance id_field",
+                                 stateful=True),
     "pagerank": Spec("functions.graph:pagerank", "src_field dst_field iterations damping "
                      "broadcast_nodes assume_simple", **_GRAPH),
     "degree_stats": Spec("functions.graph:degree_stats", "src_field dst_field assume_simple",
-                         **_GRAPH),
+                         **_GRAPH, stateful=True),
     # lazy in manifest pipelines: compile/explain must not execute the
     # triangle job at plan-construction time
     "triangle_count": Spec("functions.graph:triangle_count", "src_field dst_field assume_simple",
                            **_GRAPH, build=lambda op, df, cfg, kw: op(df, eager=False, **kw)),
 }
+
+
+def stateful_stage(pipeline: Pipeline, stage_ids: list[str]) -> str | None:
+    """The first of ``stage_ids`` whose type is ``stateful``, or None: a
+    per-epoch batch replay (``streaming.runner.epoch_replay``) may hold none."""
+    return next((sid for sid in stage_ids
+                 if pipeline.stages[sid].stage_type == StageType.TRANSFORM
+                 and getattr(TRANSFORMS.get(pipeline.stages[sid].transform_type),
+                             "stateful", False)), None)

@@ -449,10 +449,10 @@ def apply_ratelimit(
 
     Streaming: custom stateful operator over ``applyInPandasWithState``
     (per-(key, window) admitted-count state) — see
-    ``etl_router_spark.streaming.stateful.streaming_ratelimit``.
+    ``etl_router_spark.functions.stateful.streaming_ratelimit``.
     """
     if df.isStreaming:
-        from etl_router_spark.streaming.stateful import streaming_ratelimit
+        from etl_router_spark.functions.stateful import streaming_ratelimit
 
         return streaming_ratelimit(df, key_fields, max_rate, window_duration,
                                    ts_field, on_exceed, tiebreak_fields)
@@ -719,13 +719,13 @@ def apply_sessionize(
     multiple sessions.
 
     Streaming with ``emit=on_event|both`` or ``max_duration`` uses the
-    custom stateful operator (``streaming.stateful.streaming_sessionize``,
+    custom stateful operator (``functions.stateful.streaming_sessionize``,
     per-event emission the native operator can't express).
     """
     from etl_router_spark.model.parser import duration_to_interval, parse_duration
 
     if df.isStreaming and (emit in ("on_event", "both") or max_duration is not None):
-        from etl_router_spark.streaming.stateful import streaming_sessionize
+        from etl_router_spark.functions.stateful import streaming_sessionize
 
         return streaming_sessionize(df, key_fields, gap, ts_field, max_duration, emit)
 

@@ -301,7 +301,7 @@ def stream_ratelimit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Single-epoch availableNow makes the admitted set deterministic —
     the first 3 rows per (user, hour) in (ts, event_id) order — so the
     batch window oracle value-checks the streaming state machine."""
-    from etl_router_spark.streaming.stateful import streaming_ratelimit
+    from etl_router_spark.functions.stateful import streaming_ratelimit
 
     wd = tempfile.mkdtemp(prefix="etl_stream_rl_")
     src = f"{wd}/in"
@@ -511,7 +511,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     The emission log compacts downstream with the batch cdc_apply —
     result must equal applying the whole changelog in batch."""
     from etl_router_spark.functions.cdc import cdc_apply
-    from etl_router_spark.streaming.stateful import streaming_cdc_apply
+    from etl_router_spark.functions.stateful import streaming_cdc_apply
 
     wd = tempfile.mkdtemp(prefix="etl_stream_q8_")
     src = f"{wd}/in"
@@ -553,7 +553,7 @@ def stream_group_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal the batch window top-k."""
     from pyspark.sql import Window
 
-    from etl_router_spark.streaming.stateful import streaming_group_topk
+    from etl_router_spark.functions.stateful import streaming_group_topk
 
     wd = tempfile.mkdtemp(prefix="etl_stream_q9_")
     src = f"{wd}/in"
@@ -835,7 +835,7 @@ def stream_sessionize_on_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     order inside a batch is sorted by the operator, and cross-batch
     order is exactly what the signature-store/state machinery already
     handles (covered by test_streaming.py multi-batch cases)."""
-    from etl_router_spark.streaming.stateful import streaming_sessionize
+    from etl_router_spark.functions.stateful import streaming_sessionize
 
     wd = tempfile.mkdtemp(prefix="etl_stream_onevent_")
     src = f"{wd}/in"

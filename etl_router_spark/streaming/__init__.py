@@ -12,7 +12,7 @@ from etl_router_spark.streaming.runner import (
     infer_output_mode,
     run_streaming,
 )
-from etl_router_spark.streaming.stateful import streaming_ratelimit
+from etl_router_spark.functions.stateful import streaming_ratelimit
 from etl_router_spark.streaming.watermark import (
     SourceWatermarkTracker,
     track_source_watermarks,

@@ -11,8 +11,10 @@ Maps the reference's streaming control plane onto Structured Streaming:
 - fan-out shared scan (``optimizer.rs:57-237``,
   ``engine.rs:324-352``) -> ONE ``foreachBatch`` per fan-out stage that
   replays the sub-DAG below it on the per-epoch batch and writes every
-  sink — for the fan-out's sinks the source is read once per epoch,
-  like the reference's shared-source optimization;
+  sink, so its sinks read the source once per epoch. ``epoch_replay`` is
+  that body, and the late-policy fan-in's and the fused group's
+  (``run_streaming_group``). The transform table declares the types a
+  replay may not hold (``compile.table.stateful_stage``);
 - DLQ side-outputs (``dlq/src/record.rs:96-180``) -> separate streams
   of the DLQ frames the compiler already enriched with ``_dlq_*``
   columns. A DLQ frame above a fan-out is its own query: it re-reads
@@ -34,28 +36,36 @@ at-least-once: when a write fails the query fails and the epoch is
 replayed. With ``exactly_once=True`` it is exactly-once per epoch: the
 epoch commits a marker under ``markers_<root stage>`` after its writes,
 and a replayed epoch that finds its marker is skipped. A shared writer's
-epoch writes all its sinks and DLQ frames through ``write_outputs``:
-concurrently across targets, in order per target; when one write fails
-the others still finish and the epoch is not marked. A shared writer
-replays its stages as a batch plan per epoch, so none of them may keep
-state across epochs.
+epoch is one ``epoch_replay``: its stages compile as a batch plan, so
+none may be ``stateful`` in the transform table, and all its sinks and
+DLQ frames are written by ``write_outputs``' rule: concurrently across
+targets, in order per target; when one write fails the others still
+finish and the epoch is not marked.
 """
 
 from __future__ import annotations
 
-from typing import Any
+from typing import Any, Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from etl_router_spark.compile.fan import apply_fan_in
+from etl_router_spark.compile.optimizer import OptimizedGroup
 from etl_router_spark.compile.pipeline import (
     CompiledPipeline,
+    _write_concurrently,
     compile_stages,
     write_outputs,
 )
-from etl_router_spark.model.manifest import Pipeline, StageType
+from etl_router_spark.compile.table import stateful_stage
+from etl_router_spark.model.manifest import FieldMapping, Pipeline, StageType
+from etl_router_spark.model.parser import duration_to_interval, parse_duration
+from etl_router_spark.sinks.dlq import to_dlq
 from etl_router_spark.sinks.registry import start_sink
 from etl_router_spark.streaming.exactly_once import start_per_epoch
+from etl_router_spark.streaming.watermark import SourceWatermarkTracker
 
 DEFAULT_TRIGGER: dict[str, Any] = {"availableNow": True}
 
@@ -118,23 +128,32 @@ class StreamingExecution:
         return any(q.isActive for q in self.queries.values())
 
 
-# Transform types whose STREAMING compile keeps state across epochs
-# (watermark state, dropDuplicates, running max_by, ratelimit counters):
-# a per-epoch BATCH replay would silently reset it every epoch.
-_STATEFUL_TYPES = frozenset(
-    {"aggregate", "sessionize", "dedupe", "ratelimit", "cdc_apply"}
-)
+def epoch_replay(spark: SparkSession, dlq_sink: dict[str, Any] | None, root: str,
+                 pipeline: Pipeline | None = None, order: list[str] | None = None,
+                 group: OptimizedGroup | None = None, step: Callable | None = None):
+    """The one per-epoch replay, the ``foreachBatch`` body of the fan-in,
+    fan-out and fused-group writers: seed stage ``root`` with the
+    epoch's batch (first rewritten by ``step``, which may add DLQ frames:
+    a late-policy fan-in's tracker), compile ``order`` of ``pipeline`` as
+    a batch plan, or ``group``'s members with the shared prefix persisted
+    for the epoch, and write every sink and DLQ frame in one concurrent
+    step."""
+    persist = group is not None and group.prefix_len > 0
 
+    def write(batch: DataFrame) -> None:
+        batch, extra = step(batch) if step else (batch, {})
+        if group is None:
+            sinks, dlqs = compile_stages(spark, pipeline, order, {root: batch})
+            shared, members = None, [(pipeline, sinks, {**dlqs, **extra}, None)]
+        else:
+            shared, members = group.compile_members(spark, {root: batch}, persist)
+        try:
+            _write_concurrently([(p, s, d, dlq_sink) for p, s, d, _ in members])
+        finally:
+            if persist:
+                shared.unpersist()
 
-def _stateful_stage(pipeline: Pipeline, stage_ids: list[str]) -> str | None:
-    """First of ``stage_ids`` whose streaming compile keeps state across
-    epochs, or None: such stages cannot be replayed per epoch."""
-    for sid in stage_ids:
-        stage = pipeline.stages[sid]
-        if (stage.stage_type == StageType.TRANSFORM
-                and stage.transform_type in _STATEFUL_TYPES):
-            return sid
-    return None
+    return write
 
 
 def _descendant_order(pipeline: Pipeline, root: str) -> list[str]:
@@ -155,8 +174,6 @@ def _derive_trigger(pipeline: Pipeline) -> dict[str, Any] | None:
     processing-time trigger — each tick re-emits updated groups in
     update mode. The period is the stage's ``emit_interval`` (engine
     knob; the reference enum carries no interval)."""
-    from etl_router_spark.model.parser import duration_to_interval
-
     for stage in pipeline.stages.values():
         if (
             stage.stage_type == StageType.TRANSFORM
@@ -171,6 +188,47 @@ def _derive_trigger(pipeline: Pipeline) -> dict[str, Any] | None:
     return None
 
 
+def _late_step(compiled: CompiledPipeline, fid: str, policy: str):
+    """A late-policy fan-in's input (its inputs unioned, each row tagged
+    with its ``__source_id``) and its writer's tracker step: each epoch
+    updates a SourceWatermarkTracker from per-source max event times (+
+    idle promotion), then routes rows older than combined -
+    allowed_lateness to the DLQ, drops them, or tags them ``late``."""
+    pipeline = compiled.pipeline
+    cfg = pipeline.stages[fid].config
+    source_ids = [e.from_stage for e in pipeline.incoming(fid)]
+    per_input = cfg.get("inputs") or [{}] * len(source_ids)
+    marks = [i.get("watermark") or {} for i in per_input]
+    maps = [[FieldMapping.from_dict(m) for m in (i.get("mappings") or [])] or None
+            for i in per_input]
+    tagged = apply_fan_in([compiled.stage_frames[s] for s in source_ids], maps,
+                          tags=source_ids)
+    ts_field = next((w["event_time_field"] for w in marks if w.get("event_time_field")),
+                    "event_time")
+    tracker = SourceWatermarkTracker(
+        source_ids, allowed_lateness=parse_duration(cfg.get("allowed_lateness") or "0s"))
+    for sid, w in zip(source_ids, marks):
+        if w.get("idle_timeout"):
+            tracker.set_idle_timeout(sid, parse_duration(w["idle_timeout"]))
+
+    def step(batch: DataFrame) -> tuple[DataFrame, dict[str, DataFrame]]:
+        tracker.observe_batch(batch, "__source_id", ts_field)
+        on_time, late = tracker.split_late(batch, ts_field)
+        if policy == "tag":
+            combined = tracker.combined_watermark()
+            on_time = batch.withColumn(
+                "late",
+                F.lit(False) if combined == float("-inf")
+                else F.col(ts_field).cast("double")
+                < F.lit(combined - tracker.allowed_lateness),
+            )
+        dlqs = {fid: to_dlq(late.drop("__source_id"), failed_stage=fid,
+                            pipeline=pipeline.name)} if policy == "route" else {}
+        return on_time.drop("__source_id"), dlqs
+
+    return tagged, step
+
+
 def run_streaming(
     compiled: CompiledPipeline,
     checkpoint_root: str,
@@ -181,9 +239,10 @@ def run_streaming(
     """Start every sink of a streaming-compiled pipeline.
 
     Sinks below a fan-out stage share ONE query and one upstream scan
-    per epoch (foreachBatch replays the sub-DAG on the persisted batch),
-    unless that sub-DAG holds a stateful stage (``_stateful_stage``):
-    then each of its sinks starts as its own query, which keeps the
+    per epoch (``epoch_replay`` replays the sub-DAG on the persisted
+    batch), unless that sub-DAG holds a ``stateful`` stage
+    (``compile.table.stateful_stage``): then each of its sinks starts as
+    its own query, as it would without the fan-out, which keeps the
     stage's state across epochs. Each query checkpoints independently
     under ``checkpoint_root``.
 
@@ -233,88 +292,25 @@ def run_streaming(
         return f"{checkpoint_root}/markers_{root}" if exactly_once else None
 
     # fan-in stages with a declared late_policy get the reference's
-    # per-source watermark semantics (watermark.rs:84-147): each epoch
-    # updates a SourceWatermarkTracker from per-source max event times
-    # (+ idle promotion), then routes rows older than
-    # combined - allowed_lateness per the policy (route -> DLQ,
-    # drop -> discard, tag -> boolean column). The writer replays the
-    # stages below the fan-in per epoch, so none of them may be stateful.
+    # per-source watermark semantics (watermark.rs:84-147), applied by
+    # the tracker step of their writer (``_late_step``)
     late_fanins = {
         fid: stage.config.get("late_policy")
         for fid, stage in pipeline.stages.items()
         if stage.stage_type == StageType.FAN_IN
         and stage.config.get("late_policy") in ("route", "drop", "tag")
     }
-    for fid in late_fanins:
-        bad = _stateful_stage(pipeline, _descendant_order(pipeline, fid))
-        if bad is not None:
+    orders = {fid: _descendant_order(pipeline, fid) for fid in late_fanins}
+    for fid, order in orders.items():
+        if (bad := stateful_stage(pipeline, order)) is not None:
             raise ValueError(
                 f"late-policy fan_in {fid!r} replays the stages below it per "
                 f"epoch, but {bad!r} ({pipeline.stages[bad].transform_type}) "
                 "keeps state across epochs")
-    for fid, policy in late_fanins.items():
-        stage = pipeline.stages[fid]
-        from etl_router_spark.compile.fan import apply_fan_in
-        from etl_router_spark.model.manifest import FieldMapping
-        from etl_router_spark.model.parser import parse_duration
-        from etl_router_spark.streaming.watermark import SourceWatermarkTracker
-
-        in_edges = pipeline.incoming(fid)
-        per_input = stage.config.get("inputs") or [{}] * len(in_edges)
-        source_ids = [e.from_stage for e in in_edges]
-        maps = [
-            [FieldMapping.from_dict(m) for m in (i.get("mappings") or [])] or None
-            for i in per_input
-        ]
-        tagged = apply_fan_in(
-            [compiled.stage_frames[s] for s in source_ids], maps, tags=source_ids
-        )
-        ts_field = next(
-            (
-                (i.get("watermark") or {}).get("event_time_field")
-                for i in per_input
-                if (i.get("watermark") or {}).get("event_time_field")
-            ),
-            "event_time",
-        )
-        lateness = parse_duration(stage.config.get("allowed_lateness") or "0s")
-        tracker = SourceWatermarkTracker(source_ids, allowed_lateness=lateness)
-        for sid_, icfg in zip(source_ids, per_input):
-            idle = (icfg.get("watermark") or {}).get("idle_timeout")
-            if idle:
-                tracker.set_idle_timeout(sid_, parse_duration(idle))
-
-        order = _descendant_order(pipeline, fid)
-
-        def make_fanin_writer(fid, order, tracker, ts_field, policy):
-            def write(batch_df: DataFrame) -> None:
-                tracker.observe_batch(batch_df, "__source_id", ts_field)
-                on_time, late = tracker.split_late(batch_df, ts_field)
-                if policy == "tag":
-                    import pyspark.sql.functions as F
-
-                    combined = tracker.combined_watermark()
-                    on_time = batch_df.withColumn(
-                        "late",
-                        F.lit(False) if combined == float("-inf")
-                        else F.col(ts_field).cast("double")
-                        < F.lit(combined - tracker.allowed_lateness),
-                    )
-                sinks, dlqs = compile_stages(
-                    compiled.spark, pipeline, order,
-                    {fid: on_time.drop("__source_id")}, streaming=False
-                )
-                if policy == "route":
-                    from etl_router_spark.sinks.dlq import to_dlq
-
-                    dlqs[fid] = to_dlq(late.drop("__source_id"),
-                                       failed_stage=fid, pipeline=pipeline.name)
-                write_outputs(pipeline, sinks, dlqs, dlq_sink)
-
-            return write
-
+    for fid, order in orders.items():
+        tagged, step = _late_step(compiled, fid, late_fanins[fid])
         queries[f"fanin:{fid}"] = start_per_epoch(
-            tagged, make_fanin_writer(fid, order, tracker, ts_field, policy),
+            tagged, epoch_replay(spark, dlq_sink, fid, pipeline, order, step=step),
             f"{checkpoint_root}/fanin_{fid}", trig,
             f"{pipeline.name}.fanin.{fid}", markers(fid))
         handled.update(order)
@@ -327,13 +323,10 @@ def run_streaming(
         order = _descendant_order(pipeline, fid)
         if (sum(pipeline.stages[s].stage_type == StageType.SINK
                 for s in order) < 2
-                or _stateful_stage(pipeline, order) is not None):
+                or stateful_stage(pipeline, order) is not None):
             continue
         queries[f"fanout:{fid}"] = start_per_epoch(
-            compiled.stage_frames[fid],
-            lambda b, fid=fid, order=order: write_outputs(
-                pipeline, *compile_stages(spark, pipeline, order, {fid: b}),
-                dlq_sink),
+            compiled.stage_frames[fid], epoch_replay(spark, dlq_sink, fid, pipeline, order),
             f"{checkpoint_root}/fanout_{fid}", trig,
             f"{pipeline.name}.fanout.{fid}", markers(fid))
         handled.update(order)

@@ -416,3 +416,37 @@ def test_one_per_epoch_starter():
         "foreachBatch": {("streaming/exactly_once.py", "start_per_epoch")},
         "mark_epoch": {("streaming/exactly_once.py", "per_epoch")},
     }
+
+
+def test_one_replay_body():
+    """The per-epoch replay has one body and one rule: no module under
+    ``compile/`` or ``model/`` imports ``etl_router_spark.streaming``
+    (the rule of which stages a replay may hold lives in the transform
+    table), and under ``streaming/`` only ``runner.epoch_replay`` calls
+    ``compile_stages``. Parses the source; starts no Spark."""
+    import ast
+    import pathlib
+
+    import etl_router_spark
+
+    root = pathlib.Path(etl_router_spark.__file__).parent
+    imports, calls = set(), set()
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        tree = ast.parse(path.read_text(), rel)
+        if rel.startswith(("compile/", "model/")):
+            for node in ast.walk(tree):
+                names = ([a.name for a in node.names] if isinstance(node, ast.Import)
+                         else [node.module or ""] if isinstance(node, ast.ImportFrom)
+                         else [])
+                imports.update((rel, n) for n in names
+                               if n.startswith("etl_router_spark.streaming"))
+        if rel.startswith("streaming/"):
+            for top in tree.body:
+                calls.update(
+                    (rel, getattr(top, "name", "<module>")) for node in ast.walk(top)
+                    if isinstance(node, ast.Call)
+                    and getattr(node.func, "attr", getattr(node.func, "id", None))
+                    == "compile_stages")
+    assert imports == set()
+    assert calls == {("streaming/runner.py", "epoch_replay")}

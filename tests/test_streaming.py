@@ -8,6 +8,8 @@ batch compilation of the identical pipeline/operator — the engine's
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pytest
 
 from etl_router_spark.compile.pipeline import compile_pipeline
@@ -752,9 +754,10 @@ def test_stream_bloom_probe_via_manifest_filter_key(spark, tmp_path):
     assert got == expect == [2, 3]
 
 
-def _fanout_dedupe(src, out_a, out_b, fan_in=False):
-    """source -> fan_out -> {dedupe keep-first on user_id -> a, b}; with
-    ``fan_in`` a late-policy fan-in takes the fan-out's place."""
+def _fanout_dedupe(src, out_a, out_b, fan_in=False, stage=None):
+    """source -> fan_out -> {``stage`` (default: dedupe keep-first on
+    user_id) -> a, b}; with ``fan_in`` a late-policy fan-in takes the
+    fan-out's place."""
     src_cfg = {"source_type": "file", "path": src, "format": "parquet",
                "max_files_per_trigger": 1}
     stages = [
@@ -762,8 +765,8 @@ def _fanout_dedupe(src, out_a, out_b, fan_in=False):
         {"id": "fan", "type": "fan_in" if fan_in else "fan_out",
          "config": {"late_policy": "drop"} if fan_in else {}},
         {"id": "first", "type": "transform",
-         "config": {"transform_type": "dedupe", "key_fields": ["user_id"],
-                    "keep": "first"}},
+         "config": stage or {"transform_type": "dedupe", "key_fields": ["user_id"],
+                             "keep": "first"}},
         {"id": "a", "type": "sink",
          "config": {"sink_type": "file", "format": "parquet", "path": out_a}},
         {"id": "b", "type": "sink",
@@ -780,31 +783,151 @@ def _fanout_dedupe(src, out_a, out_b, fan_in=False):
         "spec": {"stages": stages, "edges": edges}})
 
 
+_T0 = dt.datetime(2024, 1, 1)
+_DOCS = "doc_id bigint, text string"
+# the stage below the fan-out, the rows of the two source files (one
+# epoch each), and the columns of its branch compared against the batch
+# run over both files (None: Spark refuses the stage on this stream)
+_FANOUT_STATE = {
+    "dedupe": (
+        None, "event_id bigint, user_id bigint, event_time timestamp",
+        [[(10 * i + j, j % 5, _T0 + dt.timedelta(seconds=10 * i + j))
+          for j in range(10)] for i in range(2)], ["user_id"]),
+    # a stream-stream self-join: the near-duplicate in the second file
+    # pairs with its twin in the first
+    "edit_distance_pairs": (
+        {"transform_type": "edit_distance_pairs", "max_distance": 2}, _DOCS,
+        [[(1, "hello world"), (2, "completely different")],
+         [(3, "hello wurld"), (4, "nothing alike here")]],
+        ["id_a", "id_b", "distance"]),
+    "dedup_exact": (
+        {"transform_type": "dedup_exact"}, _DOCS,
+        [[(1, "same text"), (2, "other text")]] * 2, None),
+}
+
+
 def test_stream_fanout_keeps_dedupe_state_across_epochs(spark, tmp_path):
     """A fan-out whose sub-DAG holds a stateful stage gets no shared
     per-epoch writer: its sinks start as their own queries, so a
     keep-first dedupe over two epochs (two files of the same 5 users)
     keeps one row per user, as it does without the fan-out."""
-    import datetime as dt
+    _check_fanout_state(spark, tmp_path, "dedupe")
+
+
+@pytest.mark.parametrize("case", sorted(set(_FANOUT_STATE) - {"dedupe"}))
+def test_stream_fanout_keeps_stateful_stage_across_epochs(spark, tmp_path, case):
+    """The same holds for every stage the transform table declares
+    stateful: a near-duplicate pair across the two files is found, and
+    exact dedup, which Spark refuses on an append stream, fails as loudly
+    as in a straight pipeline."""
+    _check_fanout_state(spark, tmp_path, case)
+
+
+def _check_fanout_state(spark, tmp_path, case):
+    """Run ``case`` of ``_FANOUT_STATE`` below a fan-out over two epochs
+    and compare its branch with the batch run over both files."""
+    stage, schema, parts, cols = _FANOUT_STATE[case]
+    src = str(tmp_path / "in")
+    for rows in parts:
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src)
+    out_a, out_b = str(tmp_path / "a"), str(tmp_path / "b")
+    pipeline = _fanout_dedupe(src, out_a, out_b, stage=stage)
+    if cols is None:
+        straight = parse_manifest_dict({
+            "apiVersion": "etl.dev/v1", "kind": "Pipeline",
+            "metadata": {"name": "straight"},
+            "spec": {"stages": [
+                {"id": "src", "type": "source",
+                 "config": {"source_type": "file", "path": src, "format": "parquet"}},
+                {"id": "first", "type": "transform", "config": stage},
+                {"id": "a", "type": "sink",
+                 "config": {"sink_type": "file", "format": "parquet", "path": out_a}}]}})
+        try:
+            for i, p in enumerate((straight, pipeline)):
+                with pytest.raises(Exception,
+                                   match="STREAMING_OUTPUT_MODE.UNSUPPORTED_OPERATION"):
+                    run_streaming(compile_pipeline(spark, p, streaming=True),
+                                  str(tmp_path / f"ck{i}"))
+        finally:
+            for q in spark.streams.active:
+                q.stop()
+        return
+    execu = run_streaming(compile_pipeline(spark, pipeline, streaming=True),
+                          str(tmp_path / "ck"))
+    execu.await_termination()
+    got = sorted(map(tuple, spark.read.parquet(out_a).select(cols).collect()))
+    batch = compile_pipeline(spark, pipeline)
+    want = sorted(map(tuple, batch.sink_frames["a"].select(cols).collect()))
+    batch.release_shared()
+    assert got == want != []
+    assert spark.read.parquet(out_b).count() == sum(map(len, parts))
+    assert sorted(execu.queries) == ["a", "b"]
+
+
+def test_replay_writers_keep_query_keys_names_and_checkpoints(spark, tmp_path):
+    """The fan-out, late-policy fan-in and fused-group writers keep their
+    query keys, query names, checkpoint and marker directories, so a
+    checkpoint written by an earlier build resumes: a fan-out below a
+    route validate (``fanout:<id>`` plus its ``dlq:<id>`` query), a
+    route fan-in (``fanin:<id>``) and a two-member group
+    (``group:<n>:<label>``), all with ``exactly_once=True``."""
+    import os
+
+    from etl_router_spark.streaming.group import run_streaming_group
 
     src = str(tmp_path / "in")
-    t0 = dt.datetime(2024, 1, 1)
-    for i in range(2):
-        spark.createDataFrame(
-            [(10 * i + j, j % 5, t0 + dt.timedelta(seconds=10 * i + j))
-             for j in range(10)],
-            "event_id bigint, user_id bigint, event_time timestamp") \
-            .coalesce(1).write.mode("append").parquet(src)
-    out_a, out_b = str(tmp_path / "a"), str(tmp_path / "b")
-    compiled = compile_pipeline(
-        spark, _fanout_dedupe(src, out_a, out_b), streaming=True)
-    execu = run_streaming(compiled, str(tmp_path / "ck"))
-    execu.await_termination()
-    got_a = spark.read.parquet(out_a)
-    assert got_a.count() == 5
-    assert {r.user_id for r in got_a.collect()} == set(range(5))
-    assert spark.read.parquet(out_b).count() == 20
-    assert sorted(execu.queries) == ["a", "b"]
+    spark.createDataFrame(
+        [(1, 10, _T0), (2, None, _T0 + dt.timedelta(seconds=5))],
+        "event_id bigint, user_id bigint, event_time timestamp").write.parquet(src)
+
+    def stage(sid, kind, **config):
+        return {"id": sid, "type": kind, "config": config}
+
+    def source(sid="src"):
+        return stage(sid, "source", source_type="file", path=src, format="parquet")
+
+    def sink(sid):
+        return stage(sid, "sink", sink_type="file", format="parquet",
+                     path=str(tmp_path / "out" / sid))
+
+    def pipe(name, stages, edges=None):
+        dlq = {"sink_type": "file", "format": "parquet", "path": str(tmp_path / name / "dlq")}
+        return parse_manifest_dict({
+            "apiVersion": "etl.dev/v1", "kind": "Pipeline", "metadata": {"name": name},
+            "spec": {"dlq": dlq, "stages": stages, "edges": [
+                {"from": f, "to": t} for f, t in edges or []]}})
+
+    def layout(execu, ck):
+        execu.await_termination()
+        return ({k: q.name for k, q in execu.queries.items()}, sorted(os.listdir(ck)))
+
+    fanout = pipe("ck-fanout", [
+        source(), stage("chk", "transform", transform_type="validate",
+                        on_invalid="route", rules=[{"field": "user_id", "required": True}]),
+        stage("fan", "fan_out"), sink("x"), sink("y")],
+        [("src", "chk"), ("chk", "fan"), ("fan", "x"), ("fan", "y")])
+    ck = str(tmp_path / "ck_fanout")
+    assert layout(run_streaming(compile_pipeline(spark, fanout, streaming=True), ck,
+                                exactly_once=True), ck) == (
+        {"fanout:fan": "ck-fanout.fanout.fan", "dlq:chk": "ck_fanout_dlq_chk"},
+        ["dlq_chk", "fanout_fan", "markers_fan"])
+
+    watermark = {"watermark": {"event_time_field": "event_time"}}
+    fanin = pipe("ck-fanin", [
+        source("a"), source("b"),
+        stage("both", "fan_in", late_policy="route", inputs=[watermark, watermark]),
+        sink("z")], [("a", "both"), ("b", "both"), ("both", "z")])
+    ck = str(tmp_path / "ck_fanin")
+    assert layout(run_streaming(compile_pipeline(spark, fanin, streaming=True), ck,
+                                exactly_once=True), ck) == (
+        {"fanin:both": "ck-fanin.fanin.both"}, ["fanin_both", "markers_both"])
+
+    keep = stage("keep", "transform", transform_type="filter",
+                 condition={"type": "expression", "expression": "event_id > 0"})
+    members = [pipe(f"ck-g{i}", [source(), keep, sink(f"g{i}")]) for i in range(2)]
+    ck = str(tmp_path / "ck_group")
+    assert layout(run_streaming_group(spark, members, ck, exactly_once=True), ck) == (
+        {"group:0:src": "group.src"}, ["group_0", "group_0_markers"])
 
 
 def test_stream_late_fanin_rejects_stateful_stage_below(spark, tmp_path):

@@ -467,3 +467,70 @@ def test_hostile_column_names_give_the_plain_values(spark, smoke_env, tmp_path, 
         got = _smoke_rows(spark, case, docs, {**paths, "side": side},
                           {col: ref for col, (_, ref) in renames.items()})
         assert got == want, variant
+
+
+def _keeps_state_on_a_stream(plan) -> bool:
+    """Whether an analyzed streaming plan holds a node that keeps state
+    across epochs or that Spark refuses on a stream: an Aggregate, a
+    Deduplicate*, a FlatMapGroups*WithState, a Window, Sort or limit, a
+    join of two streams, or a stream-static join that keeps the static
+    side's rows (full outer; left outer, semi or anti with a static left
+    side; right outer with a static right side)."""
+    nodes = [plan]
+    while nodes:
+        node = nodes.pop()
+        name = node.nodeName()
+        if (name in ("Aggregate", "Window", "Sort", "GlobalLimit", "LocalLimit")
+                or name.startswith("Deduplicate")
+                or name.startswith("FlatMapGroups") and name.endswith("WithState")):
+            return True
+        if name == "Join":
+            streams = (node.left().isStreaming(), node.right().isStreaming())
+            how = node.joinType().toString()
+            kept = (how in ("FullOuter", "LeftOuter", "LeftSemi", "LeftAnti"),
+                    how in ("FullOuter", "RightOuter"))
+            if any(streams) and (all(streams) or any(
+                    k and not s for k, s in zip(kept, streams))):
+                return True
+        children = node.children().iterator()
+        while children.hasNext():
+            nodes.append(children.next())
+    return False
+
+
+def test_stateful_declaration_matches_the_streaming_plan(spark, smoke_env, tmp_path):
+    """``Spec.stateful`` is declared exactly for the types whose ``SMOKE``
+    manifest, compiled on a file stream, holds such a node, so a new
+    transform type cannot drift from the declaration the streaming
+    writers read. The cases whose streaming compile raises are skipped:
+    they fail before any writer starts."""
+    from etl_router_spark.compile.pipeline import compile_pipeline
+    from etl_router_spark.compile.table import TRANSFORMS
+    from etl_router_spark.model.parser import parse_manifest_dict
+
+    frames, paths = smoke_env
+    streams = {}
+    for tt, df in frames.items():
+        path = str(tmp_path / f"stream_{tt}")
+        df.write.parquet(path)
+        streams[tt] = spark.readStream.schema(df.schema).parquet(path)
+    drift, raised = {}, []
+    for case in sorted(SMOKE):
+        tt = case.split(":")[0]
+        try:
+            compiled = compile_pipeline(
+                spark, parse_manifest_dict(smoke_pipeline(case, paths)), streaming=True,
+                source_overrides={"src": streams.get(tt, streams[None])})
+        except Exception:
+            raised.append(case)
+            continue
+        plan = compiled.sink_frames["out"]._jdf.queryExecution().analyzed()
+        if _keeps_state_on_a_stream(plan) != TRANSFORMS[tt].stateful:
+            drift[case] = TRANSFORMS[tt].stateful
+    assert drift == {}
+    assert raised == [
+        "dedup_cluster", "dedup_cluster:minhash", "dedup_embedding:lsh",
+        "dedup_embedding:semantic", "dedup_minhash", "dedup_ngram", "dedup_simhash",
+        "dsir_sample", "global_shuffle", "leakage_splits", "pack_boundaries",
+        "pack_sequences", "pagerank", "pq_topk", "pq_topk:ivf", "pq_topk:rerank",
+        "similarity_topk", "triangle_count"]
